@@ -1,11 +1,11 @@
-"""Benchmark harness: runs the declared query suite (and an XML-ingest
-microbench) at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS]; prints ONE
-JSON line.
+"""Benchmark harness: runs the declared query suite at $SPARK_GRAFT_SF_DIR
+on local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
 
 Each query is forced through a noop sink (full materialization — a bare
 count() would let Catalyst prune the computed columns and flatter the
-numbers). The XML-ingest bench generates a synthetic releases dump once,
-then measures parse→shred→materialize rows/sec, the figure comparable to the
+numbers). XML ingest is measured by ``perfbench/run.py --workload
+xml_ingest``, which drives ``pipeline.load_dumps`` and checks the landed
+lake; its traced ``pipeline.records_per_s`` is the figure comparable to the
 reference's ~16.6k releases/s single-thread baseline (BASELINE.md).
 """
 
@@ -20,8 +20,6 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
-
-XML_BENCH_RELEASES = int(os.environ.get("SPARK_GRAFT_XML_ROWS", "240000"))
 
 # --- sf1 scaling tier (VERDICT r04 item 5 / r05 item 3) ---------------------
 # The driver ships sf<=0.1; the 100 TB story needs at least one measured
@@ -716,68 +714,6 @@ def _warm_image_path(spark, warm) -> None:
     )
 
 
-XML_BENCH_SHARDS = int(os.environ.get("SPARK_GRAFT_XML_SHARDS", "32"))
-
-
-def _gen_releases_xml(shard_dir: Path, n: int, shards: int) -> None:
-    """Synthetic releases dump, reference-shaped (~0.5 KB/record), written
-    as N shards — the layout a real 10 GB dump should use so parse tasks
-    parallelize (one gzip file = one task; see ARCHITECTURE.md)."""
-    genres = ["Electronic", "House", "Rock", "Jazz", "Ambient"]
-    shard_dir.mkdir(parents=True, exist_ok=True)
-    per = n // shards
-    for s in range(shards):
-        with open(shard_dir / f"part-{s}.xml", "w") as f:
-            f.write('<?xml version="1.0" encoding="UTF-8"?>\n<releases>\n')
-            for i in range(s * per + 1, (s + 1) * per + 1):
-                g = genres[i % 5]
-                f.write(
-                    f'<release id="{i}" status="Accepted"><title>Title {i} &amp; co</title>'
-                    f"<country>US</country><released>19{90 + i % 10}-01-0{1 + i % 9}</released>"
-                    f"<notes>Synthetic record {i} for ingest benchmarking.</notes>"
-                    f"<master_id>{i // 3}</master_id><data_quality>Correct</data_quality>"
-                    f"<genres><genre>{g}</genre></genres><styles><style>Deep</style></styles>"
-                    f'<labels><label name="Label {i % 997}" catno="C-{i}" id="{i % 997}"/></labels>'
-                    f'<videos><video src="https://example.test/v/{i}" duration="{60 + i % 300}">'
-                    f"<title>Video {i}</title></video></videos></release>\n"
-                )
-            f.write("</releases>\n")
-
-
-def bench_xml_ingest(spark) -> dict:
-    from discogs_load_spark.operators.shred import shred
-    from discogs_load_spark.sources.xml_source import read_dump
-
-    shard_dir = Path("/tmp") / f"bench_releases_{XML_BENCH_RELEASES}_{XML_BENCH_SHARDS}"
-    if not shard_dir.exists():
-        _gen_releases_xml(shard_dir, XML_BENCH_RELEASES, XML_BENCH_SHARDS)
-
-    def one_pass() -> float:
-        t0 = time.monotonic()
-        raw = read_dump(spark, str(shard_dir), "releases").persist()
-        tables = shred(raw, "releases")
-        for df in tables.values():
-            _materialize(df)
-        raw.unpersist()
-        return time.monotonic() - t0
-
-    cold = one_pass()  # includes parser-path JIT + page-cache fill
-    # steady-state throughput, the comparable figure; min of three passes —
-    # a single warm pass occasionally lands on a GC cycle and reads 2-3x
-    # slow (observed 7.0 s vs 2.4 s for the same work; min-of-two still
-    # varied ~2x across bench invocations)
-    warm = min(one_pass(), one_pass(), one_pass())
-    n = XML_BENCH_RELEASES // XML_BENCH_SHARDS * XML_BENCH_SHARDS
-    return {
-        "seconds": round(warm, 3),
-        "cold_seconds": round(cold, 3),
-        "rows": n,
-        "rows_per_sec": round(n / warm, 1),
-        "cold_rows_per_sec": round(n / cold, 1),
-        "shards": XML_BENCH_SHARDS,
-    }
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
@@ -812,11 +748,6 @@ def main() -> None:
     # otherwise absorbs ~20 s of one-time per-worker imports into ITS
     # timing (observed on q181 in r07)
     _warm_image_path(spark, warm)
-
-    # ingest microbench first: measured on a young JVM for run-to-run
-    # comparability (after ~60 queries the session carries listener/GC
-    # baggage that penalized whichever bench ran last)
-    ingest = bench_xml_ingest(spark)
 
     # CDC chunk index: an ingest product the five CDC queries read (the
     # persisted-lake-table shape), force-rebuilt and timed HERE so the
@@ -1032,7 +963,6 @@ def main() -> None:
             "suite_total_s": total,
             "n_queries": len(timings),
             "per_query": timings,
-            "xml_ingest": ingest,
             "cdc_index_build": cdc_index,
             "sig_index_build": sig_index,
             "emb_index_build": emb_index,
@@ -1060,7 +990,6 @@ def main() -> None:
         "queries_note": f"top {TOP_N} slowest; full map on previous line",
         "sf": sf,
         "n_queries": len(timings),
-        "xml_ingest": ingest,
         "cdc_index_build": cdc_index,
         "sig_index_build": sig_index,
         "emb_index_build": emb_index,

@@ -3,7 +3,9 @@
 The Spark duals of the reference's hand-written FSM extractors
 (release.rs:153-371, artist.rs:102-267, label.rs:97-249, master.rs:135-285):
 parent rows are projection + cast + default-fill; child tables are
-``explode``; duplicate ids resolve first-wins (A11) with an explicit order.
+``explode``. Two steps: :func:`first_wins_records` resolves duplicate ids
+first-wins (A11) with an explicit order, then :func:`shred` flattens the
+surviving records into the kind's tables.
 
 Default-fill semantics (reference structs init to 0/''/[] —
 release.rs:74-88): absent scalar → ''/0, absent array → []. This is the
@@ -30,15 +32,35 @@ def _arr(col: str) -> Column:  # default-fill array<string>
     return F.coalesce(F.col(col), F.array().cast("array<string>"))
 
 
-def _order_col(df: DataFrame) -> DataFrame:
-    """Stable per-row ingest order for first-wins dedup: file order within a
-    partition, partition id across files — the deterministic analogue of the
-    reference's arrival order."""
-    return df.withColumn("__ord", F.monotonically_increasing_id())
+# the record id of each dump kind: an attribute on releases/masters, a
+# child element on artists/labels
+_ID = {"releases": "_id", "masters": "_id", "artists": "id", "labels": "id"}
 
 
-def shred_releases(raw: DataFrame, persist: bool = True) -> dict[str, DataFrame]:
-    """releases dump → release, release_label, release_video.
+def first_wins_records(raw: DataFrame, kind: str) -> DataFrame:
+    """Record-grain first-wins dedup (A11): one record per id, the first in
+    ingest order; records without an id are dropped.
+
+    Ingest order is file order within a partition, partition id across files
+    — the deterministic analogue of the reference's arrival order. Dedup runs
+    before any table is derived, so child tables carry only the WINNING
+    occurrence's children: a losing duplicate's labels/videos must not leak
+    into the child tables its parent was dropped from (they'd dangle or
+    double). Catalyst keeps only the id, the order column and the consumed
+    fields through the window, so the XML scan still prunes columns.
+    """
+    key = _ID[kind]
+    return first_wins_dedup(
+        raw.withColumn("__ord", F.monotonically_increasing_id()).filter(
+            F.col(key).isNotNull()
+        ),
+        [key],
+        [F.col("__ord")],
+    ).drop("__ord")
+
+
+def shred_releases(records: DataFrame) -> dict[str, DataFrame]:
+    """releases records → release, release_label, release_video.
 
     Parity notes (reference release.rs):
     - attribute access by NAME, not position (deviation from
@@ -47,28 +69,8 @@ def shred_releases(raw: DataFrame, persist: bool = True) -> dict[str, DataFrame]
       — release.rs:362, quirks.py Q2); fill '' only when absent;
     - every label link is kept (reference's per-batch HashMap keyed by
       label_id drops repeats — release.rs:330, quirks.py Q3).
-
-    Duplicate-id records dedup at the RECORD grain before any table is
-    derived, so child tables carry only the WINNING occurrence's children
-    — a losing duplicate's labels/videos must not leak into the child
-    tables its parent was dropped from (they'd dangle or double).
-    The deduped frame is persisted by default: all three outputs derive
-    from it, and without the persist each materialization re-runs the
-    dedup window. ``persist=False`` opts out for a caller consuming ONE
-    output table once — the cache would pin the FULL record schema and
-    block the XML scan's column pruning (the window itself prunes fine:
-    Catalyst keeps only the dedup keys + consumed fields).
     """
-    from pyspark.storagelevel import StorageLevel
-
-    raw = first_wins_dedup(
-        _order_col(raw).filter(F.col("_id").isNotNull()),
-        ["_id"],
-        [F.col("__ord")],
-    ).drop("__ord")
-    if persist:
-        raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
-    release = raw.select(
+    release = records.select(
         F.col("_id").cast("int").alias("id"),
         _s("_status").alias("status"),
         _s("title").alias("title"),
@@ -81,7 +83,7 @@ def shred_releases(raw: DataFrame, persist: bool = True) -> dict[str, DataFrame]
         _s("data_quality").alias("data_quality"),
     )
 
-    labels_exploded = raw.select(
+    labels_exploded = records.select(
         F.col("_id").cast("int").alias("release_id"),
         F.explode("labels.label").alias("l"),
     )
@@ -92,7 +94,7 @@ def shred_releases(raw: DataFrame, persist: bool = True) -> dict[str, DataFrame]
         F.coalesce(F.col("l._id").cast("int"), F.lit(0)).alias("label_id"),
     )
 
-    videos_exploded = raw.select(
+    videos_exploded = records.select(
         F.col("_id").cast("int").alias("release_id"),
         F.explode("videos.video").alias("v"),
     )
@@ -109,67 +111,44 @@ def shred_releases(raw: DataFrame, persist: bool = True) -> dict[str, DataFrame]
     }
 
 
-def shred_artists(raw: DataFrame) -> dict[str, DataFrame]:
-    """artists dump → artist. name_variations IS populated and aliases stay
-    out of members (reference bugs artist.rs:233-263 — quirks.py Q4)."""
-    raw = _order_col(raw)
-    artist = first_wins_dedup(
-        raw.select(
-            F.col("id").cast("int").alias("id"),
-            _s("name").alias("name"),
-            _s("realname").alias("real_name"),
-            _s("profile").alias("profile"),
-            _s("data_quality").alias("data_quality"),
-            _arr("namevariations.name").alias("name_variations"),
-            _arr("urls.url").alias("urls"),
-            _arr("aliases.name").alias("aliases"),
-            _arr("members.name").alias("members"),
-            F.col("__ord"),
-        ).filter(F.col("id").isNotNull()),
-        ["id"],
-        [F.col("__ord")],
-    ).drop("__ord")
+def shred_artists(records: DataFrame) -> dict[str, DataFrame]:
+    """artists records → artist. name_variations IS populated and aliases
+    stay out of members (reference bugs artist.rs:233-263 — quirks.py Q4)."""
+    artist = records.select(
+        F.col("id").cast("int").alias("id"),
+        _s("name").alias("name"),
+        _s("realname").alias("real_name"),
+        _s("profile").alias("profile"),
+        _s("data_quality").alias("data_quality"),
+        _arr("namevariations.name").alias("name_variations"),
+        _arr("urls.url").alias("urls"),
+        _arr("aliases.name").alias("aliases"),
+        _arr("members.name").alias("members"),
+    )
     return {"artist": artist}
 
 
-def shred_labels(raw: DataFrame) -> dict[str, DataFrame]:
-    """labels dump → label (label.rs:97-249)."""
-    raw = _order_col(raw)
-    label = first_wins_dedup(
-        raw.select(
-            F.col("id").cast("int").alias("id"),
-            _s("name").alias("name"),
-            _s("contactinfo").alias("contactinfo"),
-            _s("profile").alias("profile"),
-            _s("parent_label").alias("parent_label"),
-            _arr("sublabels.label").alias("sublabels"),
-            _arr("urls.url").alias("urls"),
-            _s("data_quality").alias("data_quality"),
-            F.col("__ord"),
-        ).filter(F.col("id").isNotNull()),
-        ["id"],
-        [F.col("__ord")],
-    ).drop("__ord")
+def shred_labels(records: DataFrame) -> dict[str, DataFrame]:
+    """labels records → label (label.rs:97-249)."""
+    label = records.select(
+        F.col("id").cast("int").alias("id"),
+        _s("name").alias("name"),
+        _s("contactinfo").alias("contactinfo"),
+        _s("profile").alias("profile"),
+        _s("parent_label").alias("parent_label"),
+        _arr("sublabels.label").alias("sublabels"),
+        _arr("urls.url").alias("urls"),
+        _s("data_quality").alias("data_quality"),
+    )
     return {"label": label}
 
 
-def shred_masters(raw: DataFrame, persist: bool = True) -> dict[str, DataFrame]:
-    """masters dump → master, master_artist.
+def shred_masters(records: DataFrame) -> dict[str, DataFrame]:
+    """masters records → master, master_artist.
 
     year/notes/genres/styles ARE parsed (the reference never fills them —
-    master.rs:81-94, quirks.py Q1). Record-grain first-wins dedup before
-    deriving either table, so master_artist carries only the winning
-    occurrence's artist links (see shred_releases)."""
-    from pyspark.storagelevel import StorageLevel
-
-    raw = first_wins_dedup(
-        _order_col(raw).filter(F.col("_id").isNotNull()),
-        ["_id"],
-        [F.col("__ord")],
-    ).drop("__ord")
-    if persist:
-        raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
-    master = raw.select(
+    master.rs:81-94, quirks.py Q1)."""
+    master = records.select(
         F.col("_id").cast("int").alias("id"),
         _s("title").alias("title"),
         _i("main_release").alias("release_id"),
@@ -181,7 +160,7 @@ def shred_masters(raw: DataFrame, persist: bool = True) -> dict[str, DataFrame]:
     )
 
     master_artist = (
-        raw.select(
+        records.select(
             F.col("_id").cast("int").alias("master_id"),
             F.explode("artists.artist").alias("a"),
         )
@@ -204,11 +183,7 @@ SHREDDERS = {
 }
 
 
-def shred(
-    raw: DataFrame, kind: str, persist: bool = True
-) -> dict[str, DataFrame]:
-    """Dispatch: nested dump DataFrame → {table_name: DataFrame}."""
-    fn = SHREDDERS[kind]
-    if fn in (shred_releases, shred_masters):
-        return fn(raw, persist=persist)
-    return fn(raw)
+def shred(records: DataFrame, kind: str) -> dict[str, DataFrame]:
+    """Dispatch: :func:`first_wins_records` of one dump kind →
+    {table_name: DataFrame}."""
+    return SHREDDERS[kind](records)

@@ -18,13 +18,14 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
-from .operators.shred import shred
+from .operators.shred import first_wins_records, shred
 from .session import get_spark
 from .sinks.files import write_parquet
 from .sinks.postgres import write_jdbc
 from .sources.gzip_shard import preshard_gzip_dump
-from .sources.xml_source import read_dump, read_dump_python, sniff_root_tag
+from .sources.xml_source import read_dump, sniff_root_tag
 
 # A single gzip this large is one parse task (gzip is unsplittable); above
 # it, the one-pass record-aligned pre-split pays for itself immediately.
@@ -32,7 +33,7 @@ AUTO_SHARD_MIN_BYTES = 256 << 20
 
 # Introspection for callers/tests that need to assert the pre-shard path
 # actually ran (e.g. q170's lineage guard): {kind: shard paths} from the
-# most recent load_dumps call that auto-sharded anything.
+# most recent load_dumps call that pre-sharded anything.
 LAST_PRESHARD: dict[str, list[str]] = {}
 
 
@@ -41,22 +42,28 @@ def load_dumps(
     files: list[str],
     parquet_dir: str | None = None,
     jdbc: dict | None = None,
-    use_python_reader: bool = False,
-    auto_shard: bool = True,
     shard_target_bytes: int = 64 << 20,
     shard_min_bytes: int = AUTO_SHARD_MIN_BYTES,
-    persist_raw: bool = True,
 ) -> dict[str, DataFrame]:
-    """Parse + shred every dump file; optionally persist each table.
+    """Parse + shred every dump file; write each table to the given sinks.
 
-    Returns {table_name: DataFrame}. Multiple files of the same kind union
-    (e.g. a dump split into shards — the scale path for unsplittable gzip).
-    A MONOLITHIC local gzip dump above ``shard_min_bytes`` (compressed) is
-    auto-pre-split into record-aligned gzip shards first
-    (sources/gzip_shard.py), so a 10 GB single-file dump parses with N
-    tasks instead of one; the shard scratch dir is removed at interpreter
-    exit (callers that need the returned lazy DataFrames longer than the
-    process should pass ``auto_shard=False`` or persist the tables)."""
+    Returns {table_name: DataFrame}, lazy over the dumps. Multiple files of
+    the same kind are one scan (e.g. a dump split into shards — the scale
+    path for unsplittable gzip). A MONOLITHIC local gzip dump of at least
+    ``shard_min_bytes`` (compressed) is pre-split into record-aligned gzip
+    shards first (sources/gzip_shard.py), so a 10 GB single-file dump
+    parses with N tasks instead of one; a ``shard_min_bytes`` above the
+    file's size reads it whole. The shard scratch dir is removed at
+    interpreter exit, so frames returned over shards live only as long as
+    the process.
+
+    While a kind that fans out into several tables (releases, masters) is
+    written, its first-wins record frame is persisted, so the XML is parsed
+    once, not once per table (the reference's single pass). The frame is
+    released before returning: the session's cache holds nothing
+    afterwards, and a dump rewritten in place is read afresh by the next
+    call. With no sink nothing is persisted, so a caller consuming one
+    table keeps the XML scan's column pruning."""
     import tempfile
 
     by_kind: dict[str, list[str]] = {}
@@ -64,52 +71,44 @@ def load_dumps(
         by_kind.setdefault(sniff_root_tag(path), []).append(path)
 
     LAST_PRESHARD.clear()
-    if auto_shard:
-        for kind, paths in by_kind.items():
-            # local files only: the pre-sharder streams through gzip.open /
-            # os.path.getsize, which don't speak object-store URIs (remote
-            # dumps should be sharded where they live, once, at landing)
-            if (
-                len(paths) == 1
-                and paths[0].endswith(".gz")
-                and os.path.isfile(paths[0])
-                and os.path.getsize(paths[0]) >= shard_min_bytes
-            ):
-                shard_dir = tempfile.mkdtemp(prefix=f"preshard_{kind}_")
-                # shards are scratch (~dump-sized): without cleanup every
-                # load_dumps call would leak a re-compressed copy of the
-                # dump in TMPDIR for the life of the machine
-                atexit.register(shutil.rmtree, shard_dir, True)
-                by_kind[kind] = LAST_PRESHARD[kind] = preshard_gzip_dump(
-                    paths[0], shard_dir, shard_target_bytes, kind
-                )
+    for kind, paths in by_kind.items():
+        # local files only: the pre-sharder streams through gzip.open /
+        # os.path.getsize, which don't speak object-store URIs (remote
+        # dumps should be sharded where they live, once, at landing)
+        if (
+            len(paths) == 1
+            and paths[0].endswith(".gz")
+            and os.path.isfile(paths[0])
+            and os.path.getsize(paths[0]) >= shard_min_bytes
+        ):
+            shard_dir = tempfile.mkdtemp(prefix=f"preshard_{kind}_")
+            # shards are scratch (~dump-sized): without cleanup every
+            # load_dumps call would leak a re-compressed copy of the
+            # dump in TMPDIR for the life of the machine
+            atexit.register(shutil.rmtree, shard_dir, True)
+            by_kind[kind] = LAST_PRESHARD[kind] = preshard_gzip_dump(
+                paths[0], shard_dir, shard_target_bytes, kind
+            )
 
     tables: dict[str, DataFrame] = {}
     for kind, paths in by_kind.items():
-        if use_python_reader:
-            raw = read_dump_python(spark, paths, kind)
-        else:
-            raw = read_dump(spark, paths, kind)
-        shredded = shred(raw, kind, persist=persist_raw)
-        if persist_raw and len(shredded) > 1:
-            # releases/masters fan out into 2-3 tables: persist the parsed
-            # records so the XML is parsed once, not once per output table
-            # (the reference's single pass, kept — at lake scale prefer
-            # landing the raw parse as parquet and shredding from there).
-            # persist_raw=False opts out for a caller consuming ONE output
-            # table: the cache would pin the FULL record schema and defeat
-            # the XML scan's column pruning
-            raw.persist()
-        for name, df in shredded.items():
-            tables[name] = (
-                df if name not in tables else tables[name].unionByName(df)
-            )
-
-    for name, df in tables.items():
-        if parquet_dir:
-            write_parquet(df, f"{parquet_dir}/{name}")
-        if jdbc:
-            write_jdbc(df, name, **jdbc)
+        records = first_wins_records(read_dump(spark, paths, kind), kind)
+        shredded = shred(records, kind)
+        # the cache is matched when each write is planned, so persisting
+        # after the tables are derived still serves every one of them
+        cache = bool(parquet_dir or jdbc) and len(shredded) > 1
+        if cache:
+            records.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            for name, df in shredded.items():
+                if parquet_dir:
+                    write_parquet(df, f"{parquet_dir}/{name}")
+                if jdbc:
+                    write_jdbc(df, name, **jdbc)
+        finally:
+            if cache:
+                records.unpersist()
+        tables.update(shredded)
     return tables
 
 
@@ -120,7 +119,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--jdbc-url", default=None)
     ap.add_argument("--jdbc-user", default="dev")
     ap.add_argument("--jdbc-password", default="")
-    ap.add_argument("--python-reader", action="store_true")
     args = ap.parse_args(argv)
 
     spark = get_spark(app_name="discogs_load")
@@ -129,14 +127,11 @@ def main(argv: list[str] | None = None) -> None:
         if args.jdbc_url
         else None
     )
-    tables = load_dumps(
-        spark,
-        args.files,
-        parquet_dir=args.parquet_dir,
-        jdbc=jdbc,
-        use_python_reader=args.python_reader,
-    )
+    tables = load_dumps(spark, args.files, parquet_dir=args.parquet_dir, jdbc=jdbc)
     for name, df in tables.items():
+        # count the landed table: the returned frame would re-parse the dump
+        if args.parquet_dir:
+            df = spark.read.parquet(f"{args.parquet_dir}/{name}")
         print(f"{name}: {df.count()} rows")
 
 

@@ -428,8 +428,8 @@ def _q170_dump_path(docs: DataFrame, sf_dir: str) -> str:
 def q170_preshard_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monolithic-gzip ingest THROUGH the record-aligned pre-sharder
     (sources/gzip_shard.py): documents → one monolithic releases .xml.gz →
-    ``load_dumps(auto_shard=True, shard_min_bytes=0)`` forces the
-    depth-tracked shard split → native XML parse over N shards → per-lang
+    ``load_dumps(shard_min_bytes=0)`` forces the depth-tracked shard
+    split → native XML parse over N shards → per-lang
     rollup the oracle recomputes straight from the parquet. Any shard
     boundary that cuts a record (or miscounts nesting / self-closing /
     quoted-'>' forms) either breaks the XML parse or shifts the counts and
@@ -449,10 +449,8 @@ def q170_preshard_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rel = load_dumps(
         spark,
         [gz],
-        auto_shard=True,
         shard_min_bytes=0,  # always exercise the pre-shard path
         shard_target_bytes=target,
-        persist_raw=False,  # one consumed table: keep XML column pruning
     )["release"]
     if len(LAST_PRESHARD.get("releases", [])) < 2:
         raise RuntimeError("pre-shard did not split the monolithic dump")

@@ -6,8 +6,8 @@ Two readers with identical output:
   whole-stage-codegen'd parsing, splittable for uncompressed/bz2 inputs.
 - :func:`read_dump_python` — ``mapInPandas`` over a DataFrame of file paths,
   each task streaming one file through ``xml.etree.iterparse``. This is the
-  UDTF shape of the reference FSM (SURVEY §2 A3) and the fallback when the
-  native source is unavailable; it parallelizes across files.
+  UDTF shape of the reference FSM (SURVEY §2 A3) and the referee the tests
+  check the native source against; it parallelizes across files.
 
 Format dispatch (A2, main.rs:51-87): the reference reads each file twice —
 pass 1 to sniff the root element, pass 2 to parse. :func:`sniff_root_tag`
@@ -40,22 +40,25 @@ def _open_maybe_gzip(path: str):
     silently scans past the 512-byte tar header to the first ``<``
     (main.rs:96-102 has no format check); a strict XML parser rejects the
     NUL bytes, so here the member is extracted explicitly.
-    """
-    f = open(path, "rb")
-    head = f.read(2)
-    f.seek(0)
-    if head == b"\x1f\x8b":
-        g = gzip.open(f, "rb")
-        peek = g.peek(262)
-        if len(peek) >= 262 and peek[257:262] == b"ustar":
-            import tarfile
 
-            f.seek(0)
-            t = tarfile.open(fileobj=f, mode="r:gz")
-            member = next(m for m in t if m.isfile())
-            return t.extractfile(member)
-        return g
-    return f
+    Closing the returned stream closes every file it opened.
+    """
+    with open(path, "rb") as f:
+        head = f.read(2)
+    if head != b"\x1f\x8b":
+        return open(path, "rb")
+    with gzip.open(path, "rb") as g:
+        is_tar = g.peek(262)[257:262] == b"ustar"
+    if not is_tar:
+        return gzip.open(path, "rb")  # opened by path: it owns the file
+    import tarfile
+
+    t = tarfile.open(path, mode="r:gz")
+    member = t.extractfile(next(m for m in t if m.isfile()))
+    # the member stream does not own its archive: close both together
+    close_member = member.close
+    member.close = lambda: (close_member(), t.close())
+    return member
 
 
 def sniff_root_tag(path: str) -> str:
@@ -101,7 +104,7 @@ def read_dump(
 
 
 # ---------------------------------------------------------------------------
-# Python fallback reader: mapInPandas UDTF over file paths
+# Python referee reader: mapInPandas UDTF over file paths
 # ---------------------------------------------------------------------------
 
 def _iter_records(path: str, row_tag: str):
@@ -255,7 +258,7 @@ _RECORD_FN = {
 def read_dump_python(
     spark: SparkSession, paths: list[str] | str, kind: str | None = None
 ) -> DataFrame:
-    """Fallback/parity reader: one streaming-XML task per input file.
+    """Referee reader: one streaming-XML task per input file.
 
     Same output schema as :func:`read_dump`. Scales across files (a dump
     split into N shards parses with N-way parallelism); within one file it is

@@ -10,7 +10,7 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from discogs_load_spark.pipeline import load_dumps
+from discogs_load_spark.pipeline import LAST_PRESHARD, load_dumps
 from discogs_load_spark.sources.gzip_shard import preshard_gzip_dump
 from discogs_load_spark.sources.xml_source import read_dump
 
@@ -95,11 +95,12 @@ def test_preshard_nested_same_tag_records(spark, tmp_path):
 def test_load_dumps_auto_shards_monolithic_gz(spark, tmp_path):
     src = tmp_path / "releases.xml.gz"
     _gen_releases_gz(src, 300)
-    base = load_dumps(spark, [str(src)], auto_shard=False)
+    # a threshold above the file's size reads it whole
+    base = load_dumps(spark, [str(src)], shard_min_bytes=src.stat().st_size + 1)
+    assert not LAST_PRESHARD
     auto = load_dumps(
         spark,
         [str(src)],
-        auto_shard=True,
         shard_min_bytes=0,  # force the path regardless of file size
         shard_target_bytes=16_000,
     )

@@ -70,3 +70,48 @@ def test_load_dumps_mixed_kinds_sharded_gzip(spark, tmp_path):
     rel = spark.read.parquet(str(out / "release"))
     joined = rel.join(rl, rel.id == rl.release_id)
     assert joined.count() > 0
+
+
+def test_load_dumps_releases_its_cache(spark, tmp_path):
+    """The parse-once cache lives only while load_dumps writes."""
+    spark.catalog.clearCache()
+    files = [str(FIXTURES / f"{k}.xml") for k in ("releases", "masters")]
+    load_dumps(spark, files, parquet_dir=str(tmp_path / "lake"))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_dump_rewritten_in_place_lands_new_records(spark, tmp_path):
+    """A second load of the same path in the same session re-reads the
+    file: no cached parse of the old contents may be served."""
+    dump = tmp_path / "releases.xml"
+    shutil.copyfile(FIXTURES / "releases.xml", dump)
+    load_dumps(spark, [str(dump)], parquet_dir=str(tmp_path / "lakeA"))
+    assert spark.read.parquet(str(tmp_path / "lakeA" / "release")).count() == 3
+
+    dump.write_text(
+        '<?xml version="1.0" encoding="UTF-8"?>\n<releases>\n'
+        '  <release id="7" status="Accepted"><title>Only</title></release>\n'
+        "</releases>\n"
+    )
+    load_dumps(spark, [str(dump)], parquet_dir=str(tmp_path / "lakeB"))
+    landed = spark.read.parquet(str(tmp_path / "lakeB" / "release"))
+    assert [(r.id, r.title) for r in landed.collect()] == [(7, "Only")]
+
+
+def test_cli_prints_landed_counts(spark, tmp_path, capsys):
+    from discogs_load_spark.pipeline import main
+
+    kinds = ("releases", "artists", "labels", "masters")
+    main([str(FIXTURES / f"{k}.xml") for k in kinds] + ["--parquet-dir", str(tmp_path)])
+    printed = dict(
+        line.split(": ") for line in capsys.readouterr().out.splitlines()
+    )
+    assert printed == {
+        "release": "3 rows",
+        "release_label": "3 rows",
+        "release_video": "2 rows",
+        "artist": "3 rows",
+        "label": "3 rows",
+        "master": "2 rows",
+        "master_artist": "2 rows",
+    }

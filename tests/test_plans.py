@@ -93,12 +93,13 @@ def test_no_python_udfs_in_relational_core(spark):
 def test_shred_pipeline_single_scan_per_table(spark):
     """Each shredded child table derives from one scan + explode (no joins
     back to the parent)."""
-    from discogs_load_spark.operators.shred import shred
+    from discogs_load_spark.operators.shred import first_wins_records, shred
     from discogs_load_spark.sources.xml_source import read_dump
     from pathlib import Path
 
     fixtures = Path(__file__).parent / "fixtures"
-    tables = shred(read_dump(spark, str(fixtures / "releases.xml"), "releases"), "releases")
+    raw = read_dump(spark, str(fixtures / "releases.xml"), "releases")
+    tables = shred(first_wins_records(raw, "releases"), "releases")
     plan = formatted_plan(tables["release_label"])
     assert "Join" not in plan
     assert "Generate" in plan  # the explode

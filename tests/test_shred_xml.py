@@ -15,7 +15,7 @@ from pathlib import Path
 
 import pytest
 
-from discogs_load_spark.operators.shred import shred
+from discogs_load_spark.operators.shred import first_wins_records, shred
 from discogs_load_spark.schemas import OUTPUT_SCHEMAS
 from discogs_load_spark.sources.xml_source import (
     read_dump,
@@ -35,6 +35,11 @@ def reader(request):
 
     _read.kind = request.param
     return _read
+
+
+def _shred(raw, kind):
+    """The two shred steps: record-grain first-wins, then the flatten."""
+    return shred(first_wins_records(raw, kind), kind)
 
 
 def _rows(df, *order_cols):
@@ -57,7 +62,7 @@ def test_sniff_root_tag(tmp_path):
 
 
 def test_shred_releases(spark, reader):
-    tables = shred(reader(spark, FIXTURES / "releases.xml"), "releases")
+    tables = _shred(reader(spark, FIXTURES / "releases.xml"), "releases")
     release = _rows(tables["release"], "id")
 
     # 4 records, one duplicate id → 3 rows, first occurrence wins
@@ -95,7 +100,7 @@ def test_shred_releases(spark, reader):
 
 
 def test_shred_artists(spark, reader):
-    tables = shred(reader(spark, FIXTURES / "artists.xml"), "artists")
+    tables = _shred(reader(spark, FIXTURES / "artists.xml"), "artists")
     artists = _rows(tables["artist"], "id")
     assert [a["id"] for a in artists] == [201, 202, 203]
     a201 = artists[0]
@@ -112,7 +117,7 @@ def test_shred_artists(spark, reader):
 
 
 def test_shred_labels(spark, reader):
-    tables = shred(reader(spark, FIXTURES / "labels.xml"), "labels")
+    tables = _shred(reader(spark, FIXTURES / "labels.xml"), "labels")
     labels = _rows(tables["label"], "id")
     assert [l["id"] for l in labels] == [501, 502, 503]
     l501 = labels[0]
@@ -124,7 +129,7 @@ def test_shred_labels(spark, reader):
 
 
 def test_shred_masters(spark, reader):
-    tables = shred(reader(spark, FIXTURES / "masters.xml"), "masters")
+    tables = _shred(reader(spark, FIXTURES / "masters.xml"), "masters")
     masters = _rows(tables["master"], "id")
     assert [m["id"] for m in masters] == [9001, 9002]
     m1 = masters[0]
@@ -150,7 +155,7 @@ def test_output_schemas_match(spark, reader):
         ("labels", "labels.xml"),
         ("masters", "masters.xml"),
     ]:
-        tables = shred(reader(spark, FIXTURES / fixture), kind)
+        tables = _shred(reader(spark, FIXTURES / fixture), kind)
         for name, df in tables.items():
             want = OUTPUT_SCHEMAS[name]
             got = df.schema
@@ -165,8 +170,8 @@ def test_gzip_roundtrip(spark, tmp_path, reader):
     gz = tmp_path / "releases.xml.gz"
     with open(FIXTURES / "releases.xml", "rb") as f_in, gzip.open(gz, "wb") as f_out:
         shutil.copyfileobj(f_in, f_out)
-    plain = shred(reader(spark, FIXTURES / "releases.xml"), "releases")["release"]
-    zipped = shred(reader(spark, gz, "releases"), "releases")["release"]
+    plain = _shred(reader(spark, FIXTURES / "releases.xml"), "releases")["release"]
+    zipped = _shred(reader(spark, gz, "releases"), "releases")["release"]
     assert _rows(plain, "id") == _rows(zipped, "id")
 
 
@@ -226,7 +231,30 @@ def test_readers_agree_on_reference_dumps(spark, kind):
 def test_shred_reference_releases_counts(spark):
     """SURVEY §5 fixture cardinalities: 3 releases, 4 label links, 26
     videos — the same rows the reference's CI smoke loads into Postgres."""
-    tables = shred(read_dump(spark, str(REFERENCE_DATA / "releases.xml")), "releases")
+    tables = _shred(read_dump(spark, str(REFERENCE_DATA / "releases.xml")), "releases")
     assert tables["release"].count() == 3
     assert tables["release_label"].count() == 4
     assert tables["release_video"].count() == 26
+
+
+@pytest.mark.parametrize("packing", ["gzip", "tar"])
+def test_sniff_gz_closes_its_files(tmp_path, packing):
+    """Closing the opened stream closes the file under it, on the plain
+    gzip path and on the gzipped-tar path alike."""
+    import gc
+    import tarfile
+    import warnings
+
+    gz = tmp_path / "releases.xml.gz"
+    if packing == "gzip":
+        with open(FIXTURES / "releases.xml", "rb") as f_in, gzip.open(gz, "wb") as f_out:
+            shutil.copyfileobj(f_in, f_out)
+    else:
+        with tarfile.open(gz, "w:gz") as t:
+            t.add(FIXTURES / "releases.xml", arcname="releases.xml")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert sniff_root_tag(str(gz)) == "releases"
+        gc.collect()
+    leaks = [w for w in caught if issubclass(w.category, ResourceWarning)]
+    assert not leaks, [str(w.message) for w in leaks]
