@@ -153,15 +153,15 @@ SF1_QUERIES = [
     # r14: the centroid-refresh delta read (the in-plan argmax-pair form
     # probed 111x sf1->sf10 — O(N x k), k data-sized — and was REPLACED
     # with the materialized reassignment_delta read; retrain + delta
-    # builds are centroid_refresh_build/readmerge_build, out of window)
+    # builds are artifact_build_s entries, out of window)
     # and the two new read-merges (the q227 shape: pruned artifact
     # scans + union + bounded rollup)
     "q228_centroid_refresh",
     "q229_cdc_delta_merge_read",
     "q230_emb_delta_merge_read",
     # r14: the refresh-apply consumer (one pruned artifact scan +
-    # broadcast delta join + two k-row rollups; both artifacts built in
-    # readmerge_build, out of window)
+    # broadcast delta join + two k-row rollups; both artifacts built
+    # out of window)
     "q231_reassign_delta_apply",
     # r14: the drift monitor (one corpus scan + broadcast assigned-
     # centroid cosine + k-row rollup — linear by construction)
@@ -494,89 +494,22 @@ def bench_sf1(suite_spark, REGISTRY, sf_dir: str) -> dict:
     # before being published, the mirror of the base-side gate below
     prior_sf1 = _prior_sf1_timings()
 
-    # CDC chunk index: an INGEST product (the queries read a persisted
-    # lake table), so build it OUTSIDE the per-query timed windows at
-    # both tiers — but time the builds themselves so the round's record
-    # still carries the chunk-stage cost and its scaling
-    from discogs_load_spark.queries.dedup import (
-        cdc_chunk_index,
-        cdc_delta_landing,
-    )
-    from discogs_load_spark.queries.emb_index import (
-        base_assignments,
-        emb_delta_landing,
-        emb_enriched,
-        frozen_centroids,
-        full_assignments,
-        reassignment_delta,
-        refresh_centroids,
-    )
-    from discogs_load_spark.queries.sig_index import (
-        doc_prefix_rank_index,
-        doc_signature_index,
-        sig_delta_landing,
-    )
+    # the ingest artifacts (queries/artifacts.py) are INGEST products the
+    # queries read as landed parquet, so build them OUTSIDE the per-query
+    # timed windows at both tiers — but time each build so the round's
+    # record still carries every artifact's cost and its scaling
+    from discogs_load_spark.queries.artifacts import prebuild
 
-    cdc_build: dict[str, float] = {}
-    sig_build: dict[str, float] = {}
-    emb_build: dict[str, float] = {}
-    rank_build: dict[str, float] = {}
-    cent_build: dict[str, float] = {}
-    delta_build: dict[str, float] = {}
-    refresh_build: dict[str, float] = {}
-    readmerge_build: dict[str, float] = {}
-    for label, d in (("base_s", sf_dir), ("sf1_s", SF1_DIR)):
-        t0 = _t.monotonic()
-        _materialize(cdc_chunk_index(spark, d, rebuild=True))
-        cdc_build[label] = round(_t.monotonic() - t0, 2)
-        t0 = _t.monotonic()
-        _materialize(doc_signature_index(spark, d, rebuild=True))
-        sig_build[label] = round(_t.monotonic() - t0, 2)
-        t0 = _t.monotonic()
-        _materialize(emb_enriched(spark, d, rebuild=True))
-        emb_build[label] = round(_t.monotonic() - t0, 2)
-        t0 = _t.monotonic()
-        _materialize(doc_prefix_rank_index(spark, d, rebuild=True))
-        rank_build[label] = round(_t.monotonic() - t0, 2)
-        # r13: the frozen delta-training centroids are an ingest artifact
-        # too (emb_index.frozen_centroids) — build outside the timed
-        # windows so whichever delta-assignment query touches a tier
-        # first doesn't absorb the Lloyd rounds into its reading
-        t0 = _t.monotonic()
-        _materialize(frozen_centroids(spark, d, rebuild=True))
-        cent_build[label] = round(_t.monotonic() - t0, 2)
-        # r13: q227's delta generation is an ingest artifact as well
-        t0 = _t.monotonic()
-        _materialize(sig_delta_landing(spark, d, rebuild=True))
-        delta_build[label] = round(_t.monotonic() - t0, 2)
-        # r14: the centroid REFRESH (q228's full-corpus retrain +
-        # generation swap) runs at refresh cadence, not per query —
-        # timed here like centroid_build so q228's per-query row
-        # measures the reassignment-delta consumer
-        t0 = _t.monotonic()
-        _materialize(refresh_centroids(spark, d, rebuild=True))
-        refresh_build[label] = round(_t.monotonic() - t0, 2)
-        # r14: the LSM read-merge sides (q229/q230) are ingest/landing
-        # artifacts; their consumers' rows should measure merge+rollup
-        t0 = _t.monotonic()
-        _materialize(cdc_delta_landing(spark, d, rebuild=True))
-        _materialize(base_assignments(spark, d, rebuild=True))
-        _materialize(emb_delta_landing(spark, d, rebuild=True))
-        _materialize(full_assignments(spark, d, rebuild=True))
-        _materialize(reassignment_delta(spark, d, rebuild=True))
-        readmerge_build[label] = round(_t.monotonic() - t0, 2)
-    for b in (
-        cdc_build,
-        sig_build,
-        emb_build,
-        rank_build,
-        cent_build,
-        delta_build,
-        refresh_build,
-        readmerge_build,
-    ):
-        b["scale_x"] = round(b["sf1_s"] / max(b["base_s"], 0.01), 1)
-    spark.catalog.clearCache()
+    base_builds = prebuild(spark, sf_dir, rebuild=True)
+    sf1_builds = prebuild(spark, SF1_DIR, rebuild=True)
+    artifact_build_s = {
+        name: {
+            "base_s": base_s,
+            "sf1_s": sf1_builds[name],
+            "scale_x": round(sf1_builds[name] / max(base_s, 0.01), 1),
+        }
+        for name, base_s in base_builds.items()
+    }
 
     prior_pb = _prior_sf1_per_batch()
     t01: dict[str, float] = {}
@@ -664,14 +597,7 @@ def bench_sf1(suite_spark, REGISTRY, sf_dir: str) -> dict:
     return {
         "gen_s": gen_s,
         "rows_x": 10,
-        "cdc_index_build": cdc_build,
-        "sig_index_build": sig_build,
-        "emb_index_build": emb_build,
-        "prefix_rank_build": rank_build,
-        "centroid_build": cent_build,
-        "sig_delta_build": delta_build,
-        "centroid_refresh_build": refresh_build,
-        "readmerge_build": readmerge_build,
+        "artifact_build_s": artifact_build_s,
         "base": {n.split("_", 1)[0]: t for n, t in t01.items()},
         "queries": {n.split("_", 1)[0]: t for n, t in t1.items()},
         "scale_x": scale,
@@ -749,62 +675,12 @@ def main() -> None:
     # timing (observed on q181 in r07)
     _warm_image_path(spark, warm)
 
-    # CDC chunk index: an ingest product the five CDC queries read (the
-    # persisted-lake-table shape), force-rebuilt and timed HERE so the
-    # per-query rows below measure probe/rollup cost while the chunk
-    # stage's cost stays on the round's record as its own line
-    from discogs_load_spark.queries.dedup import cdc_chunk_index
-    from discogs_load_spark.queries.sig_index import doc_signature_index
+    # the ingest artifacts (queries/artifacts.py): force-rebuilt and timed
+    # HERE, one sidecar entry each, so the per-query rows below measure
+    # reads while every build's cost stays on the round's record
+    from discogs_load_spark.queries.artifacts import prebuild
 
-    t0 = time.monotonic()
-    _materialize(cdc_chunk_index(spark, sf_dir, rebuild=True))
-    cdc_index = {"seconds": round(time.monotonic() - t0, 3)}
-    # document signature index: same ingest-product treatment for the
-    # text-dedup family (content hash + shingles + MinHash signature,
-    # paid once per corpus — queries/sig_index.py)
-    t0 = time.monotonic()
-    _materialize(doc_signature_index(spark, sf_dir, rebuild=True))
-    sig_index = {"seconds": round(time.monotonic() - t0, 3)}
-    # enriched embedding index: same treatment (LSH/SemDeDup family)
-    from discogs_load_spark.queries.emb_index import emb_enriched
-
-    t0 = time.monotonic()
-    _materialize(emb_enriched(spark, sf_dir, rebuild=True))
-    emb_index = {"seconds": round(time.monotonic() - t0, 3)}
-    # PPJoin prefix-rank index (q123/q215)
-    from discogs_load_spark.queries.sig_index import doc_prefix_rank_index
-
-    t0 = time.monotonic()
-    _materialize(doc_prefix_rank_index(spark, sf_dir, rebuild=True))
-    rank_index = {"seconds": round(time.monotonic() - t0, 3)}
-    # r14: the remaining ingest artifacts get the same treatment in the
-    # SUITE sweep (they already had it in the sf1 tier): the round's
-    # fixture is fresh, so without a prebuild whichever query touches
-    # each family first absorbs its build into that per-query row
-    from discogs_load_spark.queries.dedup import cdc_delta_landing
-    from discogs_load_spark.queries.emb_index import (
-        base_assignments,
-        emb_delta_landing,
-        frozen_centroids,
-        full_assignments,
-        reassignment_delta,
-        refresh_centroids,
-    )
-    from discogs_load_spark.queries.sig_index import sig_delta_landing
-
-    t0 = time.monotonic()
-    _materialize(frozen_centroids(spark, sf_dir, rebuild=True))
-    _materialize(refresh_centroids(spark, sf_dir, rebuild=True))
-    cent_index = {"seconds": round(time.monotonic() - t0, 3)}
-    t0 = time.monotonic()
-    _materialize(sig_delta_landing(spark, sf_dir, rebuild=True))
-    _materialize(cdc_delta_landing(spark, sf_dir, rebuild=True))
-    _materialize(base_assignments(spark, sf_dir, rebuild=True))
-    _materialize(emb_delta_landing(spark, sf_dir, rebuild=True))
-    _materialize(full_assignments(spark, sf_dir, rebuild=True))
-    _materialize(reassignment_delta(spark, sf_dir, rebuild=True))
-    landing_index = {"seconds": round(time.monotonic() - t0, 3)}
-    spark.catalog.clearCache()
+    artifact_build_s = prebuild(spark, sf_dir, rebuild=True)
     # r14: one-time fixture-derived /tmp inputs get the same out-of-window
     # treatment as the index artifacts above. The driver regenerates the
     # fixtures every round, so these caches miss exactly once per round —
@@ -963,12 +839,7 @@ def main() -> None:
             "suite_total_s": total,
             "n_queries": len(timings),
             "per_query": timings,
-            "cdc_index_build": cdc_index,
-            "sig_index_build": sig_index,
-            "emb_index_build": emb_index,
-            "prefix_rank_build": rank_index,
-            "centroid_builds": cent_index,
-            "landing_builds": landing_index,
+            "artifact_build_s": artifact_build_s,
             "fixture_prewarm": fixture_prewarm,
         }
         if sf1 is not None:
@@ -990,12 +861,9 @@ def main() -> None:
         "queries_note": f"top {TOP_N} slowest; full map on previous line",
         "sf": sf,
         "n_queries": len(timings),
-        "cdc_index_build": cdc_index,
-        "sig_index_build": sig_index,
-        "emb_index_build": emb_index,
-        "prefix_rank_build": rank_index,
-        # scalar only on the headline line; per-query build seconds live
-        # in the sidecar (driver tail budget)
+        # scalars only on the headline line; per-artifact and per-query
+        # build seconds live in the sidecar (driver tail budget)
+        "artifact_build_s": round(sum(artifact_build_s.values()), 3),
         "fixture_prewarm": {"seconds": fixture_prewarm["seconds"]},
     }
     if sf1 is not None:

@@ -26,10 +26,6 @@ from ..functions.vectors import dot_sql, lsh_bucket_sql, norm2_sql
 DEFAULT_PLANES = 8
 
 
-def with_norm(df: DataFrame, vec_col: str, dim: int, out: str = "norm") -> DataFrame:
-    return df.withColumn(out, F.expr(f"sqrt({norm2_sql(vec_col, dim, 'spark')})"))
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -24,23 +24,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def executed_plan(df: DataFrame) -> str:
-    """The physical plan AFTER execution — reflects AQE's final choices
-    (coalesced partitions, SMJ→BHJ conversions, skew splits). The df must
-    have been materialized by an action first."""
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    """Every PushedFilters entry across the plan's scans."""
-    return re.findall(r"PushedFilters: \[([^\]]*)\]", formatted_plan(df))
-
-
-def read_schemas(df: DataFrame) -> list[str]:
-    """ReadSchema of every scan — the column-pruning ground truth."""
-    return re.findall(r"ReadSchema: (\S+)", formatted_plan(df))
-
-
 def join_kinds(df: DataFrame) -> list[str]:
     """Physical join operators in plan order."""
     return re.findall(
@@ -48,13 +31,3 @@ def join_kinds(df: DataFrame) -> list[str]:
         r"BroadcastNestedLoopJoin|CartesianProduct)",
         formatted_plan(df),
     )
-
-
-def has_exchange(df: DataFrame) -> bool:
-    """True if the plan contains any shuffle/broadcast Exchange."""
-    return "Exchange" in formatted_plan(df)
-
-
-def wholestage_codegen_ids(df: DataFrame) -> list[str]:
-    """WholeStageCodegen span ids — fewer, wider spans = healthier plan."""
-    return re.findall(r"WholeStageCodegen \((\d+)\)", formatted_plan(df))

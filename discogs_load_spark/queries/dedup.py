@@ -11,9 +11,7 @@ Jaccard-verify pipeline recovers exactly those.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
@@ -48,6 +46,7 @@ from ..operators.dedup import (
     simhash_near_dup_pairs,
 )
 from ..session import load_tables
+from . import artifacts
 from .registry import register
 from .sig_index import (
     doc_shingle_frame,
@@ -1926,15 +1925,12 @@ def _cdc_chunk_frame(
 CDC_INDEX_DIR = os.environ.get(
     "SPARK_GRAFT_CDC_INDEX_DIR", "/tmp/spark_graft_cdc_index"
 )
-# bump when chunk semantics change so a stale cached index can never
-# satisfy a new definition
-_CDC_INDEX_VERSION = "v1:4gram-md5-0-prefix"
 
 
-def _cdc_index_fingerprint(sf_dir: str) -> str:
-    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    st = os.stat(src)
-    return f"{_CDC_INDEX_VERSION}|{src}|{st.st_size}|{int(st.st_mtime)}"
+def _cdc_index_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _cdc_chunk_frame(
+        _docs(spark, sf_dir), with_len=True, carry=("source",)
+    )
 
 
 def cdc_chunk_index(
@@ -1946,31 +1942,30 @@ def cdc_chunk_index(
     queries — the production shape q212's docstring names (a bucketed
     lake table keyed by chunk_hash, the reference-analogous move to
     sql/indexes.sql:1-16's pre-declared access paths: pay the shred at
-    ingest, not per query). Cache key = documents.parquet fingerprint +
-    chunker version, so a driver fixture regeneration can never serve a
-    stale index; SPARK_GRAFT_CDC_INDEX=0 bypasses materialization
-    (every query recomputes the in-plan chunk frame — the referee mode
-    used by plan tests and build-cost probes)."""
-    if os.environ.get("SPARK_GRAFT_CDC_INDEX", "1") == "0":
-        return _cdc_chunk_frame(
-            _docs(spark, sf_dir), with_len=True, carry=("source",)
+    ingest, not per query). Declared in queries/artifacts.py: keyed on
+    the documents fixture's identity and the chunker version, so a
+    fixture regeneration can never serve a stale index;
+    SPARK_GRAFT_ARTIFACTS=0 makes every query recompute the in-plan
+    chunk frame (the referee mode used by plan tests and build-cost
+    probes)."""
+    return artifacts.load("cdc_chunk_index", spark, sf_dir, rebuild)
+
+
+def _cdc_delta_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # deferred: streaming imports us (the landed-layout constants are
+    # the streamed maintainer's, shared so both landings stay one layout)
+    from .streaming import CDC_LANDED_PART_COL, cdc_landed_prefix_chars
+
+    docs = _docs(spark, sf_dir).filter((F.col("doc_id") % NEW_MOD) == NEW_REM)
+    return (
+        _cdc_chunk_frame(docs)
+        .select("chunk_hash")
+        .distinct()
+        .withColumn(
+            CDC_LANDED_PART_COL,
+            F.substring("chunk_hash", 1, cdc_landed_prefix_chars()),
         )
-    fp = _cdc_index_fingerprint(sf_dir)
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(CDC_INDEX_DIR, key)
-    if rebuild or not os.path.isdir(dest):
-        frame = _cdc_chunk_frame(
-            _docs(spark, sf_dir), with_len=True, carry=("source",)
-        )
-        tmp = f"{dest}.tmp.{os.getpid()}"
-        frame.write.mode("overwrite").parquet(tmp)
-        try:
-            if rebuild and os.path.isdir(dest):
-                shutil.rmtree(dest)
-            os.rename(tmp, dest)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost a concurrent race
-    return spark.read.parquet(dest)
+    )
 
 
 def cdc_delta_landing(
@@ -1981,40 +1976,9 @@ def cdc_delta_landing(
     hashes, landed hash-prefix-partitioned exactly like q219's streamed
     landing (``pb`` = cdc_landed_prefix_chars() leading hex chars) — the
     'delta' side of the CDC LSM read-merge (q229), the CDC sibling of
-    sig_index.sig_delta_landing. Same fingerprint discipline as the base
-    chunk index (+ the snapshot modulus) and the same
-    ``SPARK_GRAFT_CDC_INDEX=0`` in-plan referee switch."""
-    # deferred: streaming imports us (the landed-layout constants are
-    # the streamed maintainer's, shared so both landings stay one layout)
-    from .streaming import CDC_LANDED_PART_COL, cdc_landed_prefix_chars
-
-    def frame() -> DataFrame:
-        docs = _docs(spark, sf_dir).filter(
-            (F.col("doc_id") % NEW_MOD) == NEW_REM
-        )
-        return (
-            _cdc_chunk_frame(docs)
-            .select("chunk_hash")
-            .distinct()
-            .withColumn(
-                CDC_LANDED_PART_COL,
-                F.substring("chunk_hash", 1, cdc_landed_prefix_chars()),
-            )
-        )
-
-    if os.environ.get("SPARK_GRAFT_CDC_INDEX", "1") == "0":
-        return frame()
-    from .sig_index import _materialized
-
-    fp = (
-        f"{_cdc_index_fingerprint(sf_dir)}"
-        f"|delta-mod{NEW_MOD}r{NEW_REM}-pb{cdc_landed_prefix_chars()}"
-    )
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(CDC_INDEX_DIR, f"delta_{key}")
-    return _materialized(
-        spark, dest, frame, rebuild, partition_by=CDC_LANDED_PART_COL
-    )
+    sig_index.sig_delta_landing. Keyed on the base chunk index's
+    fingerprint plus the snapshot modulus and the prefix width."""
+    return artifacts.load("cdc_delta_landing", spark, sf_dir, rebuild)
 
 
 def _q229_oracle() -> str:

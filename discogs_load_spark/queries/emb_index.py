@@ -10,10 +10,11 @@ The assignment is a DETERMINISTIC pure function of the embeddings table
 at production scale it is an ingest artifact — SemDeDup's own recipe
 clusters once and reuses the partition for every downstream screen —
 not a per-query computation. This module materializes (vec_id, cluster)
-once per embeddings fingerprint (path, size, mtime + a version string
-folding in the k-ladder and iteration count), with
-``SPARK_GRAFT_EMB_INDEX=0`` as the in-plan referee switch, equality
-test-pinned (tests/test_sig_index.py).
+once per embeddings fingerprint (the fixture's identity plus the
+k-ladder, iteration count and plane width; declared with the other
+artifacts in queries/artifacts.py), with ``SPARK_GRAFT_ARTIFACTS=0`` as
+the in-plan referee switch, equality test-pinned
+(tests/test_sig_index.py).
 
 q99 (the registered k-means query) intentionally KEEPS computing its
 assignments in-plan: it is the live Lloyd computation the oracle checks
@@ -25,32 +26,28 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..operators.clustering import assign_clusters, recompute_centroids
+from ..session import load_tables
+from . import artifacts
 
 EMB_INDEX_DIR = os.environ.get(
     "SPARK_GRAFT_EMB_INDEX_DIR", "/tmp/spark_graft_emb_index"
 )
 
 
-def _version() -> str:
-    # every constant the build lineage branches on belongs here — a
-    # changed constant without a version change serves a stale cached
-    # index (ADVICE r10: SEM_K and the flat-vs-two-level cutoff were
-    # missing)
-    from ..functions.vectors import ADAPTIVE_LSH_MAX_PLANES
-    from .similarity import SEM_CELL, SEM_ITER, SEM_K, SEM_TWO_LEVEL_MIN
-
-    return (
-        f"v2:semk{SEM_K}-semcell{SEM_CELL}-iter{SEM_ITER}"
-        f"-2lvl{SEM_TWO_LEVEL_MIN}-bits{ADAPTIVE_LSH_MAX_PLANES}-nrm"
-    )
+def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
 
 
-def _index_fingerprint(sf_dir: str) -> str:
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    st = os.stat(src)
-    return f"{_version()}|{src}|{st.st_size}|{int(st.st_mtime)}"
+def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The base snapshot: every vector outside the held-out delta."""
+    from .dedup import NEW_MOD, NEW_REM
+
+    return _emb(spark, sf_dir).filter((F.col("vec_id") % NEW_MOD) != NEW_REM)
 
 
 def _enriched_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,17 +59,14 @@ def _enriched_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the L2 norm (the exact-cosine denominators). At production
     scale this IS the enriched embeddings table a pipeline writes at
     ingest; locally it doubles a small fixture."""
-    from pyspark.sql import functions as F
-
     from ..functions.vectors import (
         ADAPTIVE_LSH_MAX_PLANES,
         lsh_bucket_sql,
         norm2_sql,
     )
-    from ..session import load_tables
     from .similarity import DIM, sem_assignments
 
-    emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
+    emb = _emb(spark, sf_dir)
     # bounded: 1-row count-star scalar sizes the clustering to the corpus
     assigned = sem_assignments(emb, emb.count())
     bits = lsh_bucket_sql("embedding", ADAPTIVE_LSH_MAX_PLANES, DIM, "spark")
@@ -94,32 +88,8 @@ def emb_enriched(
     spark: SparkSession, sf_dir: str, rebuild: bool = False
 ) -> DataFrame:
     """(vec_id, embedding, cluster, bits, nrm) — the materialized
-    enriched embeddings table; see the module docstring.
-    ``SPARK_GRAFT_EMB_INDEX=0`` bypasses and returns the in-plan
-    lineage (referee mode)."""
-    if os.environ.get("SPARK_GRAFT_EMB_INDEX", "1") == "0":
-        return _enriched_frame(spark, sf_dir)
-    # one write-once/tmp-rename implementation for every index artifact
-    # (r13 review: three hand-copies of the race rule)
-    from .sig_index import _materialized
-
-    fp = _index_fingerprint(sf_dir)
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(EMB_INDEX_DIR, key)
-    return _materialized(
-        spark, dest, lambda: _enriched_frame(spark, sf_dir), rebuild
-    )
-
-
-def emb_cluster_index(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> DataFrame:
-    """(vec_id, cluster) — the SemDeDup blocking view of the enriched
-    table (column pruning reaches the parquet scan, so the embedding
-    payload is never read)."""
-    return emb_enriched(spark, sf_dir, rebuild=rebuild).select(
-        "vec_id", "cluster"
-    )
+    enriched embeddings table; see the module docstring."""
+    return artifacts.load("emb_enriched", spark, sf_dir, rebuild)
 
 
 # --- frozen delta-training centroids (q220/q221/q222/q225) -----------------
@@ -131,37 +101,15 @@ def emb_cluster_index(
 # means (recompute_centroids). That is a deterministic pure function of
 # the embeddings table — an ingest artifact, not per-query work (ADVICE
 # r12: q221/q222 re-ran the full Lloyd training per invocation and leaked
-# a persisted frame). Materialized per embeddings fingerprint with the
-# SAME referee switch as the enriched index (SPARK_GRAFT_EMB_INDEX=0
-# recomputes in-plan; equality test-pinned in tests/test_sig_index.py).
-
-
-def _centroid_version() -> str:
-    from .dedup import NEW_MOD, NEW_REM
-    from .similarity import SEM_CELL, SEM_ITER, SEM_K, SEM_TWO_LEVEL_MIN
-
-    return (
-        f"cent-v1:semk{SEM_K}-semcell{SEM_CELL}-iter{SEM_ITER}"
-        f"-2lvl{SEM_TWO_LEVEL_MIN}-mod{NEW_MOD}r{NEW_REM}"
-    )
-
-
-def _centroid_fingerprint(sf_dir: str) -> str:
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    st = os.stat(src)
-    return f"{_centroid_version()}|{src}|{st.st_size}|{int(st.st_mtime)}"
+# a persisted frame). Its fingerprint folds in the snapshot split as well
+# as the clustering constants; equality with the in-plan referee is
+# test-pinned in tests/test_sig_index.py.
 
 
 def _centroid_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ..operators.clustering import recompute_centroids
-    from ..session import load_tables
-    from .dedup import NEW_MOD, NEW_REM
     from .similarity import sem_assignments
 
-    emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    base = emb.filter((F.col("vec_id") % NEW_MOD) != NEW_REM)
+    base = _base(spark, sf_dir)
     # bounded: 1-row count-star scalar sizes the clustering to the corpus
     assigned = sem_assignments(base, base.count())
     return recompute_centroids(assigned, base, "vec_id", "embedding")
@@ -172,16 +120,7 @@ def frozen_centroids(
 ) -> DataFrame:
     """(cluster, centroid) — the frozen base-snapshot centroid table the
     delta-assignment family scores against; see the block comment."""
-    if os.environ.get("SPARK_GRAFT_EMB_INDEX", "1") == "0":
-        return _centroid_frame(spark, sf_dir)
-    from .sig_index import _materialized
-
-    fp = _centroid_fingerprint(sf_dir)
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(EMB_INDEX_DIR, f"cent_{key}")
-    return _materialized(
-        spark, dest, lambda: _centroid_frame(spark, sf_dir), rebuild
-    )
+    return artifacts.load("frozen_centroids", spark, sf_dir, rebuild)
 
 
 # --- centroid GENERATIONS + refresh (q228, VERDICT r13 item 1) --------------
@@ -196,28 +135,13 @@ def frozen_centroids(
 # pointer-swapped artifact, and q228 emits the reassignment delta
 # (vectors whose nearest centroid changed, old -> new). Generation
 # discipline: each generation directory is named by the md5 of its
-# TRAINING-INPUT fingerprint (corpus file identity + snapshot scope +
-# every constant the lineage branches on), the CURRENT pointer file is
-# swapped with os.replace (atomic on POSIX — a reader resolving the
-# pointer sees exactly the old or exactly the new name, never a partial
-# write), and the superseded generation is deleted only AFTER the swap
-# (tests/test_index_refresh.py pins the exactly-one-version invariant at
-# every step boundary via the _probe hook).
-
-
-def _refresh_version() -> str:
-    from .similarity import SEM_CELL, SEM_ITER, SEM_K, SEM_TWO_LEVEL_MIN
-
-    return (
-        f"cent-v1:semk{SEM_K}-semcell{SEM_CELL}-iter{SEM_ITER}"
-        f"-2lvl{SEM_TWO_LEVEL_MIN}-full"
-    )
-
-
-def _refresh_fingerprint(sf_dir: str) -> str:
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    st = os.stat(src)
-    return f"{_refresh_version()}|{src}|{st.st_size}|{int(st.st_mtime)}"
+# TRAINING-INPUT fingerprint (the frozen_centroids or refresh_centroids
+# declaration's), the CURRENT pointer file is swapped with os.replace
+# (atomic on POSIX — a reader resolving the pointer sees exactly the old
+# or exactly the new name, never a partial write), and the superseded
+# generation is deleted only AFTER the swap (tests/test_index_refresh.py
+# pins the exactly-one-version invariant at every step boundary via the
+# _probe hook).
 
 
 def _full_centroid_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -225,11 +149,9 @@ def _full_centroid_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     target: the same construction as _centroid_frame without the base
     filter, so the SQL dual is the same Lloyd CTE chain over the whole
     embeddings table."""
-    from ..operators.clustering import recompute_centroids
-    from ..session import load_tables
     from .similarity import sem_assignments
 
-    emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
+    emb = _emb(spark, sf_dir)
     # bounded: 1-row count-star scalar sizes the clustering to the corpus
     assigned = sem_assignments(emb, emb.count())
     return recompute_centroids(assigned, emb, "vec_id", "embedding")
@@ -237,12 +159,14 @@ def _full_centroid_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _centgen_root(sf_dir: str) -> str:
     """Per-corpus generation store: g_<trainkey> dirs + CURRENT pointer."""
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    st = os.stat(src)
     corpus = hashlib.md5(
-        f"{src}|{st.st_size}|{int(st.st_mtime)}".encode()
+        artifacts.source_identity("embeddings", sf_dir).encode()
     ).hexdigest()[:16]
     return os.path.join(EMB_INDEX_DIR, f"centgen_{corpus}")
+
+
+def _generation(name: str, sf_dir: str) -> str:
+    return "g_" + artifacts.key(name, sf_dir)[:12]
 
 
 def current_centroid_generation(sf_dir: str) -> str | None:
@@ -267,22 +191,6 @@ def _swap_pointer(root: str, gen_name: str) -> None:
     os.replace(tmp, ptr)
 
 
-def _land_generation(root: str, gen_name: str, frame_fn) -> None:
-    """Write a generation directory via the tmp-rename race rule (the
-    _materialized discipline): the finished dir appears atomically."""
-    import shutil
-
-    dest = os.path.join(root, gen_name)
-    if os.path.isdir(dest):
-        return
-    tmp = f"{dest}.tmp.{os.getpid()}"
-    frame_fn().write.mode("overwrite").parquet(tmp)
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost a concurrent race
-
-
 def refresh_centroids(
     spark: SparkSession, sf_dir: str, rebuild: bool = False, _probe=None
 ) -> DataFrame:
@@ -295,11 +203,9 @@ def refresh_centroids(
     invoked at the step boundaries ('seeded', 'landed', 'swapped',
     'cleaned') so the generation-swap safety test can assert the
     exactly-one-complete-version invariant mid-cycle; it is None in
-    production paths. SPARK_GRAFT_EMB_INDEX=0 recomputes the refreshed
+    production paths. SPARK_GRAFT_ARTIFACTS=0 recomputes the refreshed
     table in-plan (referee mode, no store)."""
-    import shutil
-
-    if os.environ.get("SPARK_GRAFT_EMB_INDEX", "1") == "0":
+    if not artifacts.enabled():
         return _full_centroid_frame(spark, sf_dir)
 
     root = _centgen_root(sf_dir)
@@ -309,37 +215,33 @@ def refresh_centroids(
         # timed value is real work, not an idempotent pointer read
         shutil.rmtree(root, ignore_errors=True)
     os.makedirs(root, exist_ok=True)
-    base_gen = (
-        "g_" + hashlib.md5(_centroid_fingerprint(sf_dir).encode()).hexdigest()[:12]
-    )
-    full_gen = (
-        "g_" + hashlib.md5(_refresh_fingerprint(sf_dir).encode()).hexdigest()[:12]
-    )
+    base_gen = _generation("frozen_centroids", sf_dir)
+    full_gen = _generation("refresh_centroids", sf_dir)
     cur = current_centroid_generation(sf_dir)
     if cur is None:
         # seed generation 0 = the frozen base-snapshot centroids — read
-        # from the cent_<key> artifact when it exists (identical frame,
-        # same fingerprint lineage) instead of re-running the base Lloyd
-        # training per seed (r14 review finding: every rebuild was
-        # double-training); referee mode recomputes in-plan either way
-        _land_generation(
-            root, base_gen, lambda: frozen_centroids(spark, sf_dir)
+        # from the frozen_centroids artifact (identical frame, same
+        # fingerprint) instead of re-running the base Lloyd training per
+        # seed (r14 review finding: every rebuild was double-training)
+        artifacts.land(
+            os.path.join(root, base_gen),
+            lambda: frozen_centroids(spark, sf_dir),
         )
         _swap_pointer(root, base_gen)
         cur = base_gen
         if _probe is not None:
             _probe("seeded")
     if cur != full_gen:
-        _land_generation(
-            root, full_gen, lambda: _full_centroid_frame(spark, sf_dir)
+        artifacts.land(
+            os.path.join(root, full_gen),
+            lambda: _full_centroid_frame(spark, sf_dir),
         )
         if _probe is not None:
             _probe("landed")  # new gen complete on disk; pointer still old
         _swap_pointer(root, full_gen)
         if _probe is not None:
             _probe("swapped")  # pointer new; old gen still readable
-        if cur != full_gen:
-            shutil.rmtree(os.path.join(root, cur), ignore_errors=True)
+        shutil.rmtree(os.path.join(root, cur), ignore_errors=True)
         if _probe is not None:
             _probe("cleaned")
     # straggler sweep (r14 review finding): a crash between the pointer
@@ -365,33 +267,28 @@ def refresh_centroids(
 # whole-delta artifact a compaction would produce).
 
 
+def _base_assignments_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .similarity import sem_assignments
+
+    base = _base(spark, sf_dir)
+    # bounded: 1-row count-star scalar sizes the clustering
+    return sem_assignments(base, base.count()).select("vec_id", "cluster")
+
+
 def base_assignments(
     spark: SparkSession, sf_dir: str, rebuild: bool = False
 ) -> DataFrame:
     """(vec_id, cluster) — the base snapshot's Lloyd-final assignment
     (sem_assignments over the base corpus: the SEM_ITER-th assignment,
-    whose per-cluster means ARE the frozen centroids). Same fingerprint
-    discipline and SPARK_GRAFT_EMB_INDEX=0 referee as frozen_centroids."""
-    from pyspark.sql import functions as F
+    whose per-cluster means ARE the frozen centroids). Keyed on the
+    frozen centroids' fingerprint."""
+    return artifacts.load("base_assignments", spark, sf_dir, rebuild)
 
-    from ..session import load_tables
-    from .dedup import NEW_MOD, NEW_REM
-    from .similarity import sem_assignments
 
-    def frame() -> DataFrame:
-        emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-        base = emb.filter((F.col("vec_id") % NEW_MOD) != NEW_REM)
-        # bounded: 1-row count-star scalar sizes the clustering
-        return sem_assignments(base, base.count()).select("vec_id", "cluster")
+def _emb_delta_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .similarity import complete_delta_labels
 
-    if os.environ.get("SPARK_GRAFT_EMB_INDEX", "1") == "0":
-        return frame()
-    from .sig_index import _materialized
-
-    fp = f"{_centroid_fingerprint(sf_dir)}|basea"
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(EMB_INDEX_DIR, f"basea_{key}")
-    return _materialized(spark, dest, frame, rebuild)
+    return complete_delta_labels(spark, sf_dir)
 
 
 def emb_delta_landing(
@@ -401,22 +298,9 @@ def emb_delta_landing(
     assignment labels (similarity.complete_delta_labels: q225's
     multiprobe cheap path + exact argmax for the bucket-miss residue)
     as a cached artifact: the accumulated landing a consumer merges
-    with base_assignments between compactions (q230). Same fingerprint
-    discipline and referee switch as the other embedding artifacts."""
-
-    def frame() -> DataFrame:
-        from .similarity import complete_delta_labels
-
-        return complete_delta_labels(spark, sf_dir)
-
-    if os.environ.get("SPARK_GRAFT_EMB_INDEX", "1") == "0":
-        return frame()
-    from .sig_index import _materialized
-
-    fp = f"{_centroid_fingerprint(sf_dir)}|deltalab"
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(EMB_INDEX_DIR, f"deltalab_{key}")
-    return _materialized(spark, dest, frame, rebuild)
+    with base_assignments between compactions (q230). Keyed on the
+    frozen centroids' fingerprint."""
+    return artifacts.load("emb_delta_landing", spark, sf_dir, rebuild)
 
 
 # --- refresh-apply artifacts (q231) ------------------------------------------
@@ -429,6 +313,18 @@ def emb_delta_landing(
 # new-centroid state exactly, without re-running any argmax.
 
 
+def _full_assignments_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .similarity import DIM
+
+    return assign_clusters(
+        _emb(spark, sf_dir),
+        frozen_centroids(spark, sf_dir),
+        "vec_id",
+        "embedding",
+        DIM,
+    ).select("vec_id", "cluster")
+
+
 def full_assignments(
     spark: SparkSession, sf_dir: str, rebuild: bool = False
 ) -> DataFrame:
@@ -436,27 +332,34 @@ def full_assignments(
     the FROZEN (old) centroids: the consumer's cluster-keyed state
     before a refresh lands. Distinct from base_assignments (the base
     snapshot's Lloyd-final labels): this is the old index's answer for
-    the whole corpus, base + delta alike. Same fingerprint discipline
-    and SPARK_GRAFT_EMB_INDEX=0 referee as the other artifacts."""
-    from ..operators.clustering import assign_clusters
-    from ..session import load_tables
+    the whole corpus, base + delta alike."""
+    return artifacts.load("full_assignments", spark, sf_dir, rebuild)
 
-    def frame() -> DataFrame:
-        from .similarity import DIM
 
-        emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-        return assign_clusters(
-            emb, frozen_centroids(spark, sf_dir), "vec_id", "embedding", DIM
-        ).select("vec_id", "cluster")
+def _reassignment_delta_frame(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from .similarity import DIM
 
-    if os.environ.get("SPARK_GRAFT_EMB_INDEX", "1") == "0":
-        return frame()
-    from .sig_index import _materialized
-
-    fp = f"{_centroid_fingerprint(sf_dir)}|fulla"
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(EMB_INDEX_DIR, f"fulla_{key}")
-    return _materialized(spark, dest, frame, rebuild)
+    # the old side IS full_assignments (identical computation, same
+    # fingerprint lineage) — read the artifact instead of re-running
+    # the corpus-sized argmax per rebuild (r14 review finding: the
+    # builds were paying it twice); referee mode recomputes in-plan
+    olda = full_assignments(spark, sf_dir).select(
+        "vec_id", F.col("cluster").alias("old_cluster")
+    )
+    newa = assign_clusters(
+        _emb(spark, sf_dir),
+        refresh_centroids(spark, sf_dir),
+        "vec_id",
+        "embedding",
+        DIM,
+    ).select("vec_id", F.col("cluster").alias("new_cluster"))
+    return (
+        olda.join(newa, "vec_id")
+        .filter(F.col("old_cluster") != F.col("new_cluster"))
+        .select("vec_id", "old_cluster", "new_cluster")
+    )
 
 
 def reassignment_delta(
@@ -465,43 +368,5 @@ def reassignment_delta(
     """(vec_id, old_cluster, new_cluster) — q228's reassignment delta as
     the artifact the refresh job ships to consumers: every vector whose
     exact argmax moved between the frozen and the refreshed centroid
-    generations. Keyed on the REFRESH fingerprint (it depends on both
-    generations' training inputs)."""
-    from ..operators.clustering import assign_clusters
-    from ..session import load_tables
-
-    def frame() -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from .similarity import DIM
-
-        emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-        # the old side IS full_assignments (identical computation, same
-        # fingerprint lineage) — read the artifact instead of re-running
-        # the corpus-sized argmax per rebuild (r14 review finding: the
-        # builds were paying it twice); referee mode recomputes in-plan
-        olda = full_assignments(spark, sf_dir).select(
-            "vec_id", F.col("cluster").alias("old_cluster")
-        )
-        newa = assign_clusters(
-            emb, refresh_centroids(spark, sf_dir), "vec_id", "embedding", DIM
-        ).select("vec_id", F.col("cluster").alias("new_cluster"))
-        return (
-            olda.join(newa, "vec_id")
-            .filter(F.col("old_cluster") != F.col("new_cluster"))
-            .select("vec_id", "old_cluster", "new_cluster")
-        )
-
-    if os.environ.get("SPARK_GRAFT_EMB_INDEX", "1") == "0":
-        return frame()
-    from .sig_index import _materialized
-
-    # BOTH lineages fold in (r14 review finding): the old side depends
-    # on the frozen-centroid fingerprint (which versions NEW_MOD/NEW_REM
-    # — a changed base split changes every old_cluster label), the new
-    # side on the refresh fingerprint; keying on the refresh side alone
-    # could serve a stale delta after a split-constant change
-    fp = f"{_centroid_fingerprint(sf_dir)}|{_refresh_fingerprint(sf_dir)}|redelta"
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(EMB_INDEX_DIR, f"redelta_{key}")
-    return _materialized(spark, dest, frame, rebuild)
+    generations. Keyed on both generations' training inputs."""
+    return artifacts.load("reassignment_delta", spark, sf_dir, rebuild)

@@ -98,7 +98,7 @@ REGISTRY: dict[str, QuerySpec] = {}
 # q220/q221/q222's frozen centroid training moved from per-invocation
 # Lloyd rounds to the MATERIALIZED fingerprinted artifact
 # (emb_index.frozen_centroids, ADVICE r12 — referee-switchable via
-# SPARK_GRAFT_EMB_INDEX=0, equality test-pinned). Semantics and oracles
+# SPARK_GRAFT_ARTIFACTS=0, equality test-pinned). Semantics and oracles
 # are unchanged in all four, but the executed default paths are new, so
 # each must re-earn its driver row on the path users now get.
 # r14: empty (VERDICT r13 item 2) — all four r13 names re-earned fully

@@ -25,9 +25,10 @@ move one level up: ONE pass over the corpus materializes, per document,
                      (operators/dedup.minhash_signatures_from_shingles,
                      byte-identical math to the in-plan path),
 
-fingerprinted by (documents.parquet path, size, mtime) + an index version
-string, so a driver fixture regeneration or a semantics change can never
-serve a stale index. ``SPARK_GRAFT_SIG_INDEX=0`` bypasses materialization
+declared in queries/artifacts.py: fingerprinted by the documents fixture's
+identity, the layout mode, the shingle and hash constants and the text
+functions' SQL, so a fixture regeneration or a semantics change can never
+serve a stale index. ``SPARK_GRAFT_ARTIFACTS=0`` bypasses materialization
 and every accessor returns the in-plan lineage (the referee mode —
 tests/test_sig_index.py pins bitwise equality between the two paths).
 
@@ -101,22 +102,16 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.textfns import norm_sql, shingles_sql, tokens_sql
 from ..operators.dedup import DEFAULT_N_HASHES
 from ..session import load_tables
+from . import artifacts
 
 SIG_INDEX_DIR = os.environ.get(
     "SPARK_GRAFT_SIG_INDEX_DIR", "/tmp/spark_graft_sig_index"
-)
-# bump when shingle/signature semantics change so a stale cached index
-# can never satisfy a new definition
-_SIG_INDEX_VERSION = f"v2:k3-md5-n{DEFAULT_N_HASHES}-contenthash-toks"
-_SIG_INDEX_VERSION_HASHED = (
-    f"v5h:k3-md5-n{DEFAULT_N_HASHES}-chb16-toks-sigint60-noshingle"
 )
 
 SHINGLE_K = 3
@@ -245,76 +240,40 @@ def with_derived_index_cols(df: DataFrame) -> DataFrame:
     return df
 
 
-def _index_fingerprint(sf_dir: str, hashed: bool | None = None) -> str:
-    if hashed is None:
-        hashed = hashed_mode()
-    version = _SIG_INDEX_VERSION_HASHED if hashed else _SIG_INDEX_VERSION
-    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    st = os.stat(src)
-    return (
-        f"{version}-tf{_semantics_hash()}"
-        f"|{src}|{st.st_size}|{int(st.st_mtime)}"
-    )
+def _read_index(df: DataFrame) -> DataFrame:
+    return with_derived_index_cols(df) if hashed_mode() else df
 
 
-def _materialized(
-    spark: SparkSession,
-    dest: str,
-    frame_fn,
-    rebuild: bool,
-    partition_by: str | None = None,
-) -> DataFrame:
-    """Write-once parquet materialization with the tmp-rename race rule
-    shared by every index builder in this module. ``partition_by``
-    lands the artifact directory-partitioned, one file per bucket (the
-    q219/q218 landed layout: repartition on the directory column so
-    partitionBy writes one file per bucket, not tasks x buckets)."""
-    if rebuild or not os.path.isdir(dest):
-        frame = frame_fn()
-        tmp = f"{dest}.tmp.{os.getpid()}"
-        if partition_by:
-            frame.repartition(partition_by).write.mode(
-                "overwrite"
-            ).partitionBy(partition_by).parquet(tmp)
-        else:
-            frame.write.mode("overwrite").parquet(tmp)
-        try:
-            if rebuild and os.path.isdir(dest):
-                shutil.rmtree(dest)
-            os.rename(tmp, dest)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost a concurrent race
-    return spark.read.parquet(dest)
+def _sig_index_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return sig_frame(_docs(spark, sf_dir))
 
 
 def doc_signature_index(
     spark: SparkSession, sf_dir: str, rebuild: bool = False
 ) -> DataFrame:
     """The materialized per-document signature index (see module
-    docstring). Cache key = documents.parquet fingerprint + index
-    version (mode-specific — the two modes cache separately);
-    ``SPARK_GRAFT_SIG_INDEX=0`` bypasses materialization and returns the
-    in-plan lineage (referee mode). In hashed mode the returned frame
-    carries a lazily DERIVED ``sh`` column (from ``toks``) so
-    shingle-text consumers work unchanged while the stored payload is
-    the 8 B/element ``shh``."""
-    hashed = hashed_mode()
-    if os.environ.get("SPARK_GRAFT_SIG_INDEX", "1") == "0":
-        frame = sig_frame(_docs(spark, sf_dir), hashed=hashed)
-        return with_derived_index_cols(frame) if hashed else frame
-    fp = _index_fingerprint(sf_dir, hashed)
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(SIG_INDEX_DIR, key)
-    df = _materialized(
-        spark,
-        dest,
-        lambda: sig_frame(_docs(spark, sf_dir), hashed=hashed),
-        rebuild,
-    )
-    return with_derived_index_cols(df) if hashed else df
+    docstring). The two layout modes cache separately (the mode is a
+    fingerprint input); ``SPARK_GRAFT_ARTIFACTS=0`` returns the in-plan
+    lineage (referee mode). In hashed mode the returned frame carries
+    lazily DERIVED ``content_hash``/``sh``/``shh`` columns (from ``chb``
+    and ``toks``) so every consumer works unchanged while none of them
+    is stored."""
+    return artifacts.load("doc_signature_index", spark, sf_dir, rebuild)
 
 
 SIG_DELTA_PART_COL = "pb"
+
+
+def _sig_delta_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .dedup import NEW_MOD, NEW_REM  # deferred: dedup imports us
+
+    docs = _docs(spark, sf_dir).filter((F.col("doc_id") % NEW_MOD) == NEW_REM)
+    pb = (
+        F.substring(F.lower(F.hex("chb")), 1, 1)
+        if hashed_mode()
+        else F.substring("content_hash", 1, 1)
+    )
+    return sig_frame(docs).withColumn(SIG_DELTA_PART_COL, pb)
 
 
 def sig_delta_landing(
@@ -327,39 +286,9 @@ def sig_delta_landing(
     hash — exactly q218's landed layout after its in-stream
     compaction, one file per bucket). This is the 'delta' side of the
     LSM read-merge (q227): a consumer reads base index ∪ delta landing
-    without waiting for the next full index rebuild. Same fingerprint
-    discipline (documents fingerprint + index version + the snapshot
-    modulus) and the same ``SPARK_GRAFT_SIG_INDEX=0`` in-plan referee
-    switch as the base index."""
-    from .dedup import NEW_MOD, NEW_REM  # deferred: dedup imports us
-
-    hashed = hashed_mode()
-
-    def delta_frame() -> DataFrame:
-        docs = _docs(spark, sf_dir).filter(
-            (F.col("doc_id") % NEW_MOD) == NEW_REM
-        )
-        frame = sig_frame(docs, hashed=hashed)
-        pb = (
-            F.substring(F.lower(F.hex("chb")), 1, 1)
-            if hashed
-            else F.substring("content_hash", 1, 1)
-        )
-        return frame.withColumn(SIG_DELTA_PART_COL, pb)
-
-    if os.environ.get("SPARK_GRAFT_SIG_INDEX", "1") == "0":
-        frame = delta_frame()
-        return with_derived_index_cols(frame) if hashed else frame
-    fp = (
-        f"{_index_fingerprint(sf_dir, hashed)}"
-        f"|delta-mod{NEW_MOD}r{NEW_REM}"
-    )
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(SIG_INDEX_DIR, f"delta_{key}")
-    df = _materialized(
-        spark, dest, delta_frame, rebuild, partition_by=SIG_DELTA_PART_COL
-    )
-    return with_derived_index_cols(df) if hashed else df
+    without waiting for the next full index rebuild. Keyed on the base
+    index's fingerprint plus the snapshot modulus."""
+    return artifacts.load("sig_delta_landing", spark, sf_dir, rebuild)
 
 
 def doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -451,17 +380,8 @@ def _prefix_rank_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_prefix_rank_index(
     spark: SparkSession, sf_dir: str, rebuild: bool = False
 ) -> DataFrame:
-    """Materialized :func:`_prefix_rank_frame` — cache key = the
-    signature index fingerprint + a stage suffix; the same
-    ``SPARK_GRAFT_SIG_INDEX=0`` referee switch returns the in-plan
-    lineage (which then also derives its shingles in-plan)."""
-    if os.environ.get("SPARK_GRAFT_SIG_INDEX", "1") == "0":
-        return _prefix_rank_frame(spark, sf_dir)
-    # _index_fingerprint is mode-aware, so the hashed and string rank
-    # artifacts cache separately too
-    fp = _index_fingerprint(sf_dir) + "|prefixrank-v1"
-    key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    dest = os.path.join(SIG_INDEX_DIR, key)
-    return _materialized(
-        spark, dest, lambda: _prefix_rank_frame(spark, sf_dir), rebuild
-    )
+    """Materialized :func:`_prefix_rank_frame`, keyed on the signature
+    index's fingerprint (so the hashed and string rank artifacts cache
+    separately too); under the referee switch the in-plan lineage also
+    derives its shingles in-plan."""
+    return artifacts.load("doc_prefix_rank_index", spark, sf_dir, rebuild)

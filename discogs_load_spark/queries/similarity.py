@@ -938,7 +938,7 @@ def q154_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .emb_index import emb_enriched
 
     # (cluster, vec_id, embedding) straight from the enriched index (the
-    # ingest artifact — queries/emb_index.py); SPARK_GRAFT_EMB_INDEX=0
+    # ingest artifact — queries/emb_index.py); SPARK_GRAFT_ARTIFACTS=0
     # re-runs the Lloyd rounds in-plan (referee, equality test-pinned)
     # repartition on the join key: the small index parquet reads back as
     # 1-2 splits, which would run the quadratic in-cluster cosine stage
@@ -1291,7 +1291,7 @@ def _frozen_centroid_buckets(
     (emb_index.frozen_centroids — ADVICE r12: the Lloyd training used to
     re-run per invocation and leak a persisted frame; it is a
     deterministic pure function of the embeddings table, so it is an
-    ingest artifact, referee-switchable via SPARK_GRAFT_EMB_INDEX=0),
+    ingest artifact, referee-switchable via SPARK_GRAFT_ARTIFACTS=0),
     both sides bucketed on the centroid-sized sign-bit prefix. Returns
     (centb = (cluster, centroid, bk), newv = (vec_id, embedding, bk,
     __p)) — ``__p`` carries the prefix length scalar so the multiprobe
@@ -1619,9 +1619,9 @@ def q228_centroid_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query cost grows QUADRATICALLY with the corpus, the same
     scaling disease as the naive q226 (36x/batch) caught in r13. The
     argmax pair is the refresh JOB's shape, paid once per refresh and
-    timed out-of-window (bench readmerge_build / centroid_refresh_
-    build); after the replacement the per-query row is a pruned
-    artifact scan (re-probed ~1x). SPARK_GRAFT_EMB_INDEX=0 recomputes
+    timed out-of-window (bench's artifact_build_s entries for
+    refresh_centroids and reassignment_delta); after the replacement the per-query row is a pruned
+    artifact scan (re-probed ~1x). SPARK_GRAFT_ARTIFACTS=0 recomputes
     the whole chain in-plan (referee, equality test-pinned), and the
     oracle replays retrain + both argmaxes + the diff against the
     artifact's contents either way. Scale: at 100 TB the refresh is a

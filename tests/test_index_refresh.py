@@ -8,7 +8,8 @@ Three property families:
    generation (the swap is an atomic os.replace; the superseded
    generation is deleted only after the swap);
 2. artifact == in-plan referee for every new materialized frame
-   (``SPARK_GRAFT_EMB_INDEX=0`` / ``SPARK_GRAFT_CDC_INDEX=0``);
+   (``SPARK_GRAFT_ARTIFACTS=0``; the CDC pair is pinned by
+   tests/test_sig_index.py through q229);
 3. the read-merge consumers read BOTH artifacts and re-derive nothing
    (no chunker stage, no Lloyd crossJoin), and their unions cover the
    corpus exactly once (seam invariants).
@@ -85,6 +86,7 @@ def test_refresh_artifacts_match_inplan_referee(spark, monkeypatch):
     and the delta-assignment landing."""
     from discogs_load_spark.queries.similarity import complete_delta_labels
 
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "1")  # not vacuous
     cent = sorted(
         (r.cluster, tuple(r.centroid))
         for r in ei.refresh_centroids(spark, SF_SMALL).collect()
@@ -107,7 +109,7 @@ def test_refresh_artifacts_match_inplan_referee(spark, monkeypatch):
         for r in ei.reassignment_delta(spark, SF_SMALL).collect()
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_EMB_INDEX", "0")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "0")
     assert cent == sorted(
         (r.cluster, tuple(r.centroid))
         for r in ei.refresh_centroids(spark, SF_SMALL).collect()

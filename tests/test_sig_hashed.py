@@ -18,7 +18,7 @@ These tests pin what makes that safe:
 3. The hashed artifact ON DISK carries no shingle payload at all and
    int64 minhash columns — the k×-corpus payload is genuinely not
    stored.
-4. The referee switch (SIG_INDEX=0) is result-neutral WITHIN the
+4. The referee switch (ARTIFACTS=0) is result-neutral WITHIN the
    hashed layout, completing the four mode quadrants.
 """
 
@@ -31,7 +31,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from discogs_load_spark.queries.registry import REGISTRY
-from discogs_load_spark.queries import sig_index as si
+from discogs_load_spark.queries import artifacts, sig_index as si
 
 from .conftest import SF_SMALL
 
@@ -59,7 +59,7 @@ def _rows(spark, name):
 
 @pytest.mark.parametrize("name", PINNED)
 def test_hashed_mode_outputs_equal_string_mode(spark, name, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SIG_INDEX", "1")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "1")
     monkeypatch.setenv("SPARK_GRAFT_SIG_HASHED", "0")
     spark.catalog.clearCache()
     via_strings = _rows(spark, name)
@@ -76,7 +76,7 @@ def test_compact_signatures_are_the_truncated_string_minhashes(
     docs agree on a compact slot iff they agree on the string slot
     (modulo the documented ~pairs/2⁶⁰ truncation term, which this
     bitwise check would also surface on the fixtures)."""
-    monkeypatch.setenv("SPARK_GRAFT_SIG_INDEX", "1")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "1")
     monkeypatch.setenv("SPARK_GRAFT_SIG_HASHED", "0")
     spark.catalog.clearCache()
     a = {
@@ -99,17 +99,13 @@ def test_hashed_artifact_stores_no_shingle_payload(spark, monkeypatch):
     The DataFrame the accessor returns DOES carry derived sh/shh (from
     toks), which Catalyst prunes for consumers that never select them."""
     pa = pytest.importorskip("pyarrow.parquet")
-    monkeypatch.setenv("SPARK_GRAFT_SIG_INDEX", "1")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "1")
     monkeypatch.setenv("SPARK_GRAFT_SIG_HASHED", "1")
     df = si.doc_signature_index(spark, SF_SMALL, rebuild=True)
     assert "sh" in df.columns and "shh" in df.columns
     assert df.schema["h0"].dataType.simpleString() == "bigint"
-    import hashlib
-
-    key = hashlib.md5(
-        si._index_fingerprint(SF_SMALL, hashed=True).encode()
-    ).hexdigest()[:16]
-    dest = os.path.join(si.SIG_INDEX_DIR, key)
+    dest = artifacts.path("doc_signature_index", SF_SMALL)
+    assert dest.startswith(si.SIG_INDEX_DIR)
     files = glob.glob(os.path.join(dest, "*.parquet"))
     assert files, f"no parquet parts under {dest}"
     schema = pa.read_schema(files[0])
@@ -118,14 +114,18 @@ def test_hashed_artifact_stores_no_shingle_payload(spark, monkeypatch):
     assert str(schema.field("h0").type) == "int64"
 
 
-def test_hashed_mode_caches_separately_from_string_mode():
-    fp_s = si._index_fingerprint(SF_SMALL, hashed=False)
-    fp_h = si._index_fingerprint(SF_SMALL, hashed=True)
-    assert fp_s != fp_h
+def test_hashed_mode_caches_separately_from_string_mode(monkeypatch):
+    # the prefix-rank artifact is keyed on the signature index's
+    # fingerprint, so its two layouts cache separately too
+    for name in ("doc_signature_index", "doc_prefix_rank_index"):
+        monkeypatch.setenv("SPARK_GRAFT_SIG_HASHED", "0")
+        fp_s = artifacts.fingerprint(name, SF_SMALL)
+        monkeypatch.setenv("SPARK_GRAFT_SIG_HASHED", "1")
+        assert artifacts.fingerprint(name, SF_SMALL) != fp_s
 
 
 def test_hashed_shingle_sets_are_bigint(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SIG_INDEX", "1")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "1")
     monkeypatch.setenv("SPARK_GRAFT_SIG_HASHED", "1")
     spark.catalog.clearCache()
     sets = si.doc_shingle_sets(spark, SF_SMALL)
@@ -142,15 +142,15 @@ def test_hashed_shingle_sets_are_bigint(spark, monkeypatch):
 def test_hashed_referee_mode_equals_hashed_index_mode(
     spark, name, monkeypatch
 ):
-    """The fourth mode quadrant: SIG_INDEX=0 (in-plan lineage) combined
+    """The fourth mode quadrant: ARTIFACTS=0 (in-plan lineage) combined
     with SIG_HASHED=1 must equal the materialized hashed index path —
     the referee switch may never change results WITHIN a layout mode
     (the other three quadrants are pinned by test_sig_index and the
     mode-equality tests above)."""
     monkeypatch.setenv("SPARK_GRAFT_SIG_HASHED", "1")
-    monkeypatch.setenv("SPARK_GRAFT_SIG_INDEX", "1")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "1")
     spark.catalog.clearCache()
     via_index = _rows(spark, name)
-    monkeypatch.setenv("SPARK_GRAFT_SIG_INDEX", "0")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "0")
     spark.catalog.clearCache()
     assert _rows(spark, name) == via_index

@@ -1,12 +1,14 @@
-"""Document signature index pins (queries/sig_index.py).
+"""Ingest artifact pins (queries/artifacts.py), led by the document
+signature index (queries/sig_index.py).
 
 The dedup family's r10 execution-path change: signatures, shingle sets,
 and content hashes come from a materialized per-corpus parquet index
 instead of per-query normalize→shingle→hash chains. These tests pin the
-three properties that make that safe:
+three properties that make that safe, for every artifact family:
 
-1. the index path equals the in-plan referee BITWISE for every rewired
-   query shape (``SPARK_GRAFT_SIG_INDEX=0`` is the referee switch);
+1. the artifact path equals the in-plan referee BITWISE for every
+   rewired query shape (``SPARK_GRAFT_ARTIFACTS=0`` is the referee
+   switch);
 2. the index is one row per document, with null signatures exactly for
    shingle-less docs (< k tokens) — the long-standing operator contract;
 3. the cache key tracks fixture identity (size+mtime) and the index
@@ -23,13 +25,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from discogs_load_spark.queries.registry import REGISTRY
-from discogs_load_spark.queries import sig_index as si
+from discogs_load_spark.queries import artifacts, sig_index as si
 
 from .conftest import SF_SMALL
 
-# one query per rewired operator shape: exact-hash groupBy, raw
-# signatures, Jaccard verify w/ sets, SimHash fold, OPH fold, prefix
-# filter explode, asymmetric containment prefix + verify sets
+# one query per rewired operator shape, across the three artifact
+# families. Signature index: exact-hash groupBy, raw signatures, Jaccard
+# verify w/ sets, SimHash fold, OPH fold, prefix filter explode,
+# asymmetric containment prefix + verify sets
 PINNED = (
     "q50_exact_dedup",
     "q51_minhash_lsh_pairs",
@@ -46,6 +49,22 @@ PINNED = (
     # r13: the LSM read-merge (base index ∪ delta landing) — the switch
     # must flip BOTH artifact reads to their in-plan lineages
     "q227_index_delta_merge_read",
+    # CDC chunk index, and its LSM read-merge with the delta landing
+    "q202_cdc_chunk_dedup",
+    "q229_cdc_delta_merge_read",
+    # embedding artifacts: the enriched index's cluster, sign-bit prefix
+    # and norm consumers, and the frozen-centroid consumers (r13: the
+    # delta-assignment family's Lloyd training moved to
+    # emb_index.frozen_centroids)
+    "q154_semdedup",
+    "q169_curation_pipeline",
+    "q54_embedding_neardup",
+    "q95_embedding_dedup_groups",
+    "q192_best_embedding_match",
+    "q199_adaptive_lsh_best_match",
+    "q221_delta_cluster_assign_lsh",
+    "q222_delta_assign_multiprobe",
+    "q225_delta_assign_complete",
 )
 
 
@@ -55,13 +74,13 @@ def _rows(spark, name):
 
 @pytest.mark.parametrize("name", PINNED)
 def test_index_path_equals_inplan_referee(spark, name, monkeypatch):
-    # pin the switch ON for the index side: an ambient
-    # SPARK_GRAFT_SIG_INDEX=0 would make both sides run the referee and
+    # pin the switch ON for the artifact side: an ambient
+    # SPARK_GRAFT_ARTIFACTS=0 would make both sides run the referee and
     # the equality vacuous (ADVICE r10)
-    monkeypatch.setenv("SPARK_GRAFT_SIG_INDEX", "1")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "1")
     spark.catalog.clearCache()
     via_index = _rows(spark, name)
-    monkeypatch.setenv("SPARK_GRAFT_SIG_INDEX", "0")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "0")
     spark.catalog.clearCache()
     assert _rows(spark, name) == via_index
 
@@ -93,20 +112,25 @@ def test_stored_shingle_consumers_share_the_index_k():
     assert DUPNGRAM_K == si.SHINGLE_K
 
 
-def test_fingerprint_tracks_fixture_identity_and_version(tmp_path):
+def test_fingerprint_tracks_fixture_identity_and_version(
+    tmp_path, monkeypatch
+):
     src = os.path.join(SF_SMALL, "documents.parquet")
     dst = tmp_path / "documents.parquet"
     (shutil.copytree if os.path.isdir(src) else shutil.copy2)(src, str(dst))
-    fp1 = si._index_fingerprint(str(tmp_path), hashed=False)
-    assert fp1.startswith(si._SIG_INDEX_VERSION)
-    assert si._index_fingerprint(str(tmp_path), hashed=True).startswith(
-        si._SIG_INDEX_VERSION_HASHED
-    )
+    fp1 = artifacts.fingerprint("doc_signature_index", str(tmp_path))
+    assert artifacts.ARTIFACTS["doc_signature_index"].tag in fp1
     # a regenerated fixture (same path, new mtime) must change the key
     st = os.stat(dst)
     os.utime(dst, (st.st_atime, st.st_mtime + 7))
-    fp2 = si._index_fingerprint(str(tmp_path), hashed=False)
+    fp2 = artifacts.fingerprint("doc_signature_index", str(tmp_path))
     assert fp1 != fp2
+    # and so must every version constant the build branches on
+    monkeypatch.setattr(si, "SHINGLE_K", si.SHINGLE_K + 1)
+    fp3 = artifacts.fingerprint("doc_signature_index", str(tmp_path))
+    assert fp3 != fp2
+    monkeypatch.setattr(si, "DEFAULT_N_HASHES", si.DEFAULT_N_HASHES + 1)
+    assert artifacts.fingerprint("doc_signature_index", str(tmp_path)) != fp3
 
 
 def test_fingerprint_tracks_textfn_semantics(monkeypatch):
@@ -117,31 +141,62 @@ def test_fingerprint_tracks_textfn_semantics(monkeypatch):
     index). Both layouts must rebuild: they share the build lineage."""
     from discogs_load_spark.functions import textfns
 
-    fp_s = si._index_fingerprint(SF_SMALL, hashed=False)
-    fp_h = si._index_fingerprint(SF_SMALL, hashed=True)
+    def fps() -> tuple[str, str]:
+        out = []
+        for mode in ("0", "1"):
+            monkeypatch.setenv("SPARK_GRAFT_SIG_HASHED", mode)
+            out.append(artifacts.fingerprint("doc_signature_index", SF_SMALL))
+        return tuple(out)
+
+    fp_s, fp_h = fps()
     orig = textfns.norm_sql
     monkeypatch.setattr(
         textfns, "norm_sql", lambda col, d: f"upper({orig(col, d)})"
     )
-    assert si._index_fingerprint(SF_SMALL, hashed=False) != fp_s
-    assert si._index_fingerprint(SF_SMALL, hashed=True) != fp_h
+    fp_s2, fp_h2 = fps()
+    assert fp_s2 != fp_s
+    assert fp_h2 != fp_h
 
 
 def test_emb_version_tracks_clustering_constants(monkeypatch):
     """The emb-index fingerprint must fold every constant the build
     lineage branches on — SEM_K was the r10 miss; pin it (and the
     two-level cutoff) with a mutation, not a string inspection."""
-    from discogs_load_spark.queries import emb_index as ei
     from discogs_load_spark.queries import similarity
 
-    v0 = ei._version()
+    def fp() -> str:
+        return artifacts.fingerprint("emb_enriched", SF_SMALL)
+
+    v0 = fp()
     monkeypatch.setattr(similarity, "SEM_K", similarity.SEM_K + 1)
-    v1 = ei._version()
+    v1 = fp()
     assert v1 != v0
     monkeypatch.setattr(
         similarity, "SEM_TWO_LEVEL_MIN", similarity.SEM_TWO_LEVEL_MIN + 1
     )
-    assert ei._version() != v1
+    assert fp() != v1
+
+
+def test_prebuild_names_the_benchmarks_artifact_builders():
+    """perfbench traces each artifact build by wrapping the accessor BY
+    NAME in the module it maps it to (perfbench.metrics.ARTIFACT_BUILDERS)
+    and calls them with ``rebuild=``; a rename or move here must fail
+    this test, not only a traced benchmark run. The prebuild order must
+    also build every upstream before the artifacts keyed on it."""
+    import importlib
+    import inspect
+
+    from perfbench.metrics import ARTIFACT_BUILDERS
+
+    order = list(artifacts.ARTIFACTS)
+    assert sorted(order) == sorted(ARTIFACT_BUILDERS)
+    for name, mod in ARTIFACT_BUILDERS.items():
+        assert artifacts.ARTIFACTS[name].module == mod
+        fn = getattr(importlib.import_module(f"discogs_load_spark.{mod}"), name)
+        assert callable(fn)
+        assert "rebuild" in inspect.signature(fn).parameters
+        for up in artifacts.ARTIFACTS[name].upstream:
+            assert order.index(up) < order.index(name), (up, name)
 
 
 def test_index_build_is_one_map_side_pass(spark):
@@ -180,44 +235,15 @@ def test_index_scan_replaces_normalize_chain_in_plan(spark):
 # --- embedding cluster-assignment index (queries/emb_index.py) -----------
 
 
-@pytest.mark.parametrize(
-    "name",
-    (
-        "q154_semdedup",
-        "q169_curation_pipeline",
-        # v2 enriched-column consumers: stored sign-bit prefixes + norms
-        "q54_embedding_neardup",
-        "q95_embedding_dedup_groups",
-        "q192_best_embedding_match",
-        "q199_adaptive_lsh_best_match",
-        # frozen-centroid artifact consumers (r13: the delta-assignment
-        # family's Lloyd training moved to emb_index.frozen_centroids)
-        "q221_delta_cluster_assign_lsh",
-        "q222_delta_assign_multiprobe",
-        "q225_delta_assign_complete",
-    ),
-)
-def test_emb_index_path_equals_inplan_referee(spark, name, monkeypatch):
-    # same anti-vacuity pin as the sig-index test above (ADVICE r10)
-    monkeypatch.setenv("SPARK_GRAFT_EMB_INDEX", "1")
-    spark.catalog.clearCache()
-    via_index = _rows(spark, name)
-    monkeypatch.setenv("SPARK_GRAFT_EMB_INDEX", "0")
-    spark.catalog.clearCache()
-    assert _rows(spark, name) == via_index
-
-
 def test_emb_index_fingerprint_tracks_fixture_and_params(tmp_path):
-    from discogs_load_spark.queries import emb_index as ei
-
     src = os.path.join(SF_SMALL, "embeddings.parquet")
     dst = tmp_path / "embeddings.parquet"
     (shutil.copytree if os.path.isdir(src) else shutil.copy2)(src, str(dst))
-    fp1 = ei._index_fingerprint(str(tmp_path))
-    assert fp1.startswith(ei._version())
+    fp1 = artifacts.fingerprint("emb_enriched", str(tmp_path))
+    assert artifacts.ARTIFACTS["emb_enriched"].tag in fp1
     st = os.stat(dst)
     os.utime(dst, (st.st_atime, st.st_mtime + 7))
-    assert ei._index_fingerprint(str(tmp_path)) != fp1
+    assert artifacts.fingerprint("emb_enriched", str(tmp_path)) != fp1
 
 
 def test_emb_index_is_total_over_vectors(spark):
@@ -244,30 +270,33 @@ def test_frozen_centroid_fingerprint_tracks_constants(monkeypatch):
     the enriched index (a changed constant without a version change
     serves a stale centroid table and silently drifts every
     delta-assignment answer)."""
-    from discogs_load_spark.queries import emb_index as ei, similarity as sim
+    from discogs_load_spark.queries import similarity as sim
     from discogs_load_spark.queries import dedup as dd
 
-    v0 = ei._centroid_version()
+    def fp() -> str:
+        return artifacts.fingerprint("frozen_centroids", SF_SMALL)
+
+    v0 = fp()
     monkeypatch.setattr(sim, "SEM_ITER", sim.SEM_ITER + 1)
-    v1 = ei._centroid_version()
+    v1 = fp()
     assert v1 != v0
     monkeypatch.setattr(dd, "NEW_REM", (dd.NEW_REM + 1) % dd.NEW_MOD)
-    assert ei._centroid_version() != v1
+    assert fp() != v1
 
 
 def test_frozen_centroids_artifact_equals_inplan_referee(spark, monkeypatch):
-    """Artifact path (materialized parquet) vs SPARK_GRAFT_EMB_INDEX=0
+    """Artifact path (materialized parquet) vs SPARK_GRAFT_ARTIFACTS=0
     in-plan recompute: the centroid tables must be identical to the
     last bit (deterministic Lloyd + decimal-exact means + exact parquet
     double round-trip)."""
     from discogs_load_spark.queries.emb_index import frozen_centroids
 
-    monkeypatch.setenv("SPARK_GRAFT_EMB_INDEX", "1")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "1")
     via_artifact = sorted(
         (r.cluster, tuple(r.centroid))
         for r in frozen_centroids(spark, SF_SMALL).collect()
     )
-    monkeypatch.setenv("SPARK_GRAFT_EMB_INDEX", "0")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "0")
     in_plan = sorted(
         (r.cluster, tuple(r.centroid))
         for r in frozen_centroids(spark, SF_SMALL).collect()

@@ -54,25 +54,11 @@ def main() -> None:
 
     spark = get_spark(app_name=f"ab_drift_{arm}")
 
-    # the suite's prebuild block, replicated (bench.py main)
-    from discogs_load_spark.queries.dedup import cdc_chunk_index
-    from discogs_load_spark.queries.emb_index import emb_enriched
-    from discogs_load_spark.queries.sig_index import (
-        doc_prefix_rank_index,
-        doc_signature_index,
-    )
+    # the suite's prebuild (bench.py main)
+    from bench import _materialize
+    from discogs_load_spark.queries.artifacts import prebuild
 
-    def _materialize(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    for b in (
-        cdc_chunk_index,
-        doc_signature_index,
-        emb_enriched,
-        doc_prefix_rank_index,
-    ):
-        _materialize(b(spark, sf_dir, rebuild=True))
-    spark.catalog.clearCache()
+    prebuild(spark, sf_dir, rebuild=True)
 
     timings: dict[str, float] = {}
     for name in names:

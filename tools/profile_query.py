@@ -72,38 +72,9 @@ def main() -> None:
 
     # prebuild the ingest artifacts exactly like bench.py does, so
     # per-query numbers here are comparable to the suite's rows
-    from discogs_load_spark.queries.dedup import cdc_chunk_index, cdc_delta_landing
-    from discogs_load_spark.queries.emb_index import (
-        base_assignments,
-        emb_delta_landing,
-        emb_enriched,
-        frozen_centroids,
-        full_assignments,
-        reassignment_delta,
-        refresh_centroids,
-    )
-    from discogs_load_spark.queries.sig_index import (
-        doc_prefix_rank_index,
-        doc_signature_index,
-        sig_delta_landing,
-    )
+    from discogs_load_spark.queries.artifacts import prebuild
 
-    for b in (
-        cdc_chunk_index,
-        doc_signature_index,
-        emb_enriched,
-        doc_prefix_rank_index,
-        frozen_centroids,
-        refresh_centroids,
-        sig_delta_landing,
-        cdc_delta_landing,
-        base_assignments,
-        emb_delta_landing,
-        full_assignments,
-        reassignment_delta,
-    ):
-        b(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
+    prebuild(spark, sf_dir, rebuild=False)
 
     results = {}
     for name in args:

@@ -123,60 +123,15 @@ def main() -> None:
         for df in load_tables(spark, d).values():
             _materialize(df)
 
-    # CDC queries read the persisted chunk index (an ingest product);
-    # build it for both tiers OUTSIDE the timed windows so a probe
-    # measures the query's own probe/rollup shape, not re-ingest. The
-    # build cost itself is bench.py's cdc_index_build line.
-    if any("cdc" in REGISTRY[q].tags for q in args.queries):
-        from discogs_load_spark.queries.dedup import cdc_chunk_index
-
-        for d in (small, big):
-            _materialize(cdc_chunk_index(spark, d))
-        spark.catalog.clearCache()
-
-    # the dedup AND text-analysis families read the persisted document
-    # signature index (queries/sig_index.py) — same ingest-product
-    # treatment as the CDC chunk index; build it for both tiers
-    # UNCONDITIONALLY (consumers span too many tag families to gate on,
-    # and a warm-but-unused index costs one linear pass) so a probe
-    # never pays ingest inside its timed window. The build cost itself
-    # is bench.py's sig_index_build line.
-    from discogs_load_spark.queries.dedup import cdc_delta_landing
-    from discogs_load_spark.queries.emb_index import (
-        base_assignments,
-        emb_delta_landing,
-        emb_enriched,
-        frozen_centroids,
-        full_assignments,
-        reassignment_delta,
-        refresh_centroids,
-    )
-    from discogs_load_spark.queries.sig_index import (
-        doc_prefix_rank_index,
-        doc_signature_index,
-        sig_delta_landing,
-    )
+    # every ingest artifact (queries/artifacts.py) is built for both
+    # tiers OUTSIDE the timed windows, so a probe measures the query's
+    # own read shape, never re-ingest (r13's probe sessions showed the
+    # FIRST query touching a tier absorbing the centroid Lloyd build).
+    # The builds themselves are timed by bench.py (artifact_build_s).
+    from discogs_load_spark.queries.artifacts import prebuild
 
     for d in (small, big):
-        _materialize(doc_signature_index(spark, d))
-        _materialize(emb_enriched(spark, d))
-        _materialize(doc_prefix_rank_index(spark, d))
-        # r14: the remaining ingest artifacts (frozen/refreshed
-        # centroids, the three delta landings, the base assignment) get
-        # the same treatment — r13's probe sessions showed the FIRST
-        # query touching a tier absorbing the centroid Lloyd build
-        # (q225 read 5.5x training-dominated; q221 1.4x after). Builds
-        # are timed by bench.py (centroid_build / centroid_refresh_build
-        # / readmerge_build), never inside a probe window.
-        _materialize(frozen_centroids(spark, d))
-        _materialize(refresh_centroids(spark, d))
-        _materialize(sig_delta_landing(spark, d))
-        _materialize(cdc_delta_landing(spark, d))
-        _materialize(base_assignments(spark, d))
-        _materialize(emb_delta_landing(spark, d))
-        _materialize(full_assignments(spark, d))
-        _materialize(reassignment_delta(spark, d))
-    spark.catalog.clearCache()
+        prebuild(spark, d, rebuild=False)
 
     tiny = str(TESTDATA / "sf0.001")
     if os.path.isdir(tiny):
