@@ -13,13 +13,14 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent
-if str(REPO) not in sys.path:
-    sys.path.insert(0, str(REPO))
+sys.path.insert(0, str(REPO / "tools"))
+
+from harness import bench_round, cpus, start, time_query  # noqa: E402
 
 # --- sf1 scaling tier (VERDICT r04 item 5 / r05 item 3) ---------------------
 # The driver ships sf<=0.1; the 100 TB story needs at least one measured
@@ -28,7 +29,6 @@ if str(REPO) not in sys.path:
 # the heaviest queries + the watch-list from the verdict (q64 byte-band
 # pairs, q123 prefix buckets, q89/q95 round counts, pre-shard ingest).
 # scale_x ~ 10 means linear-in-rows; >>10 flags a superlinear term.
-SF1_DIR = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/spark_graft_sf1")
 SF1_QUERIES = [
     "q64_simhash_hamming_pairs",
     "q71_multimodal_features",
@@ -215,48 +215,28 @@ SF1_MIN_OF_3 = {
 
 
 def _prior_sidecar_section(key: str) -> dict | None:
-    """Newest PRIOR-round BENCH_perquery_r*.json's ``sf1.<key>`` section —
-    the shared reference-resolution rule behind BOTH big-side gates (the
-    sf1 time gate and the per-batch gate), in one place (r13 review: two
-    hand-copies would let a fix to the round inference reach one gate
-    and not the other).
+    """Newest PRIOR-round sidecar's ``sf1.<key>`` section taken at this
+    run's core count — the shared reference-resolution rule behind BOTH
+    big-side gates (the sf1 time gate and the per-batch gate), in one
+    place (r13 review: two hand-copies would let a fix to the round
+    inference reach one gate and not the other).
 
     Sidecars from the CURRENT round are skipped (VERDICT r10 item 2): an
     in-round bench run writes BENCH_perquery_r{N} for the round in
     progress, and keying the cap to it let q95's intra-round creep
     (15.64 s in r09 -> 30.51 s in r10) ratchet the cap instead of
-    tripping it. The round in progress is max(BENCH_r*)+1 — the same
-    inference the sidecar writer uses — so the gates always compare
-    against the last COMPLETED round's record.
-
-    REDO caveat (ADVICE r11): re-benching AFTER a round's BENCH_r{N}
-    has been written makes the inference read N+1 and compare against
-    that same round's sidecar — the same code state, re-opening the
-    self-ratchet for the redo case. Set SPARK_GRAFT_BENCH_ROUND=N when
-    re-running a finalized round so the gates key to round N's PRIOR
-    sidecar; an unpinned redo is operator error by contract."""
-    import re as _re
-
-    env_round = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
-    current = int(env_round) if env_round else (
-        max(
-            (
-                int(m.group(1))
-                for p in REPO.glob("BENCH_r*.json")
-                for m in [_re.match(r"BENCH_r(\d+)\.json$", p.name)]
-                if m
-            ),
-            default=0,
-        )
-        + 1
-    )
-    paths = sorted(
-        REPO.glob("BENCH_perquery_r*.json"),
-        key=lambda p: int(_re.search(r"r(\d+)", p.name).group(1)),
-    )
-    for p in reversed(paths):
-        if int(_re.search(r"r(\d+)", p.name).group(1)) >= current:
-            continue
+    tripping it. The round in progress comes from harness.bench_round,
+    as the sidecar's name does. Sidecar names carry their core count
+    (``_c<N>``; an unsuffixed legacy name is a 32-core record): a reading
+    at 8 cores is no reference for one at 4."""
+    current = bench_round(REPO)
+    cores = cpus()
+    found = []
+    for p in REPO.glob("BENCH_perquery_r*.json"):
+        m = re.match(r"BENCH_perquery_r(\d+)(?:_c(\d+))?\.json$", p.name)
+        if m and int(m.group(1)) < current and int(m.group(2) or 32) == cores:
+            found.append((int(m.group(1)), p))
+    for _, p in sorted(found, reverse=True):
         try:
             # key PRESENCE, not truthiness (ADVICE r13): an
             # empty-but-present section is this round's real record —
@@ -284,10 +264,10 @@ def _prior_sf1_timings() -> dict[str, float]:
 # bigger micro-batches), so the drain-based scale_x and the sf1 time gate
 # stay the published-but-NON-GATING numbers for these queries' growth
 # shape; the steady-state streaming health number is the PER-BATCH mean
-# latency (streaming.BATCH_LATENCIES). Without its own gate, a q220-style
-# per-batch blow-up (19.1x on 10x batches, SCALE_PROBES_r12 — the
-# O(batch x k) term) hiding inside an amortized-looking drain total would
-# never flag automatically.
+# latency (each micro-batch's addBatch seconds, harness.time_query).
+# Without its own gate, a q220-style per-batch blow-up (19.1x on 10x
+# batches, SCALE_PROBES_r12 — the O(batch x k) term) hiding inside an
+# amortized-looking drain total would never flag automatically.
 # Queries whose FIRST invocation constructs a fixture-keyed /tmp lake
 # artifact (bucketed tables, partitioned/roundtrip layouts, the q223
 # compaction pair) — invoked once out-of-window by the suite prewarm so
@@ -343,105 +323,42 @@ def _prior_sf1_per_batch() -> dict[str, float]:
     }
 
 
-def bench_sf1(suite_spark, REGISTRY, sf_dir: str) -> dict:
-    """Scale measurement on a FRESH SparkSession — normally invoked in a
-    FRESH SUBPROCESS (see main): a stop-and-recreate inside the suite's
-    JVM is not clean enough. The suite session is unusable for paired
-    timings after ~180 queries: its CacheManager still plan-matches the
-    suite's persisted frames (the sf0.1 base re-runs came back 4x too
-    fast) while the full storage pool slows the cold sf1 side (q64 43s
-    vs 22s isolated); and even a NEW session in the aged JVM inflates
-    the small fixed-cost sf0.1 sides by 3-4s (q71 read 5.4s in-bench vs
-    1.3s in a pristine JVM with the identical warmup — heap/codegen/
-    listener baggage survives the session), which shows up as bogus
-    scale_x < 1 readings."""
-    import time as _t
+def bench_sf1(sf_dir: str) -> dict:
+    """Scale measurement on a FRESH SparkSession in a FRESH SUBPROCESS
+    (see main): a stop-and-recreate inside the suite's JVM is not clean
+    enough. The suite session is unusable for paired timings after ~180
+    queries: its CacheManager still plan-matches the suite's persisted
+    frames (the sf0.1 base re-runs came back 4x too fast) while the full
+    storage pool slows the cold sf1 side (q64 43s vs 22s isolated); and
+    even a NEW session in the aged JVM inflates the small fixed-cost
+    sf0.1 sides by 3-4s (q71 read 5.4s in-bench vs 1.3s in a pristine
+    JVM with the identical warmup — heap/codegen/listener baggage
+    survives the session), which shows up as bogus scale_x < 1 readings.
 
-    from discogs_load_spark.session import get_spark
-
-    if suite_spark is not None:
-        suite_spark.stop()
-    spark = get_spark(app_name="discogs_load_spark_bench_sf1")
-    spark.range(1000).selectExpr("sum(id) AS s").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    warm = spark.range(256).repartition(
-        int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    The sf1 tier is derived from the sf0.1 fixtures and regenerated when
+    they or the generator change (harness.resolve_tier). Every measured
+    query is JIT-warmed at sf0.001 first: without it the first pairs'
+    sf0.1 sides absorb C2 compilation of their plan shapes (observed:
+    q64 base 13.7s cold vs ~4s hot), which UNDERSTATES their scale_x.
+    The ingest artifacts are force-rebuilt and timed at both tiers
+    outside the per-query windows, so the record carries every build's
+    cost and its scaling."""
+    s = start(
+        "discogs_load_spark_bench_sf1",
+        [sf_dir, "sf1"],
+        rebuild=True,
+        jit_queries=SF1_QUERIES,
     )
-    _materialize(warm.mapInPandas(lambda it: it, "id long"))
-    # image-path warm — without it the first mapInPandas pair (q71)
-    # absorbs the per-worker imports into its sf0.1 side and reads as a
-    # bogus scale_x < 1
-    _warm_image_path(spark, warm)
-
-    t0 = _t.monotonic()
-    gen_s = 0.0
-    # regenerate when missing OR when the source fixtures changed (the
-    # driver regenerates /root/testdata between rounds; sf1 is derived
-    # from sf0.1, so a stale cache would tile last round's data) OR when
-    # the generator semantics changed (GEN_VERSION in the fingerprint)
-    sys.path.insert(0, str(REPO / "tools"))
-    from gen_sf1 import GEN_VERSION
-
-    src_fp = f"gen{GEN_VERSION}|" + "|".join(
-        f"{n}:{os.path.getsize(p)}:{int(os.path.getmtime(p))}"
-        for n in ("documents", "embeddings", "events", "lineitem")
-        for p in [os.path.join(sf_dir, f"{n}.parquet")]
-        if os.path.exists(p)
-    )
-    marker = os.path.join(SF1_DIR, "_source_fp.txt")
-    have = all(
-        os.path.exists(os.path.join(SF1_DIR, f"{n}.parquet"))
-        for n in ("documents", "embeddings", "events", "lineitem")
-    )
-    fresh = (
-        have
-        and os.path.exists(marker)
-        and open(marker).read() == src_fp
-    )
-    if not fresh:
-        sys.path.insert(0, str(REPO / "tools"))
-        from gen_sf1 import generate_sf1
-
-        generate_sf1(spark, sf_dir, SF1_DIR)
-        with open(marker, "w") as f:
-            f.write(src_fp)
-        gen_s = round(_t.monotonic() - t0, 1)
-
-    from discogs_load_spark.session import load_tables
-
-    for d in (sf_dir, SF1_DIR):  # reshard + page cache, both tiers
-        for df in load_tables(spark, d).values():
-            _materialize(df)
-
-    # warm q170's fixture->XML dump cache OUTSIDE the timed windows: the
-    # render is a one-time driver-side harness shim (the fixture must be
-    # turned into a dump file before ingest can be measured), not ingest
-    # work — and the fingerprint cache misses every round (the driver
-    # regenerates fixtures), so without this t1['q170'] and its published
-    # scale_x silently include the sf1 render while the sf0.1 side,
-    # warmed by the earlier suite sweep, never pays it
-    from discogs_load_spark.queries.shred import _q170_dump_path
-    from discogs_load_spark.queries.streaming import prewarm_stream_sources
-
-    for d in (sf_dir, SF1_DIR):
-        _q170_dump_path(load_tables(spark, d, ["documents"])["documents"], d)
-        # stream-source parquet copies: same out-of-window rule as the
-        # suite sweep (see main()) — without this the first streaming
-        # pair's sf1 side absorbs the one-time sf1 source write
-        prewarm_stream_sources(spark, d)
-
-    # JIT-warm every measured query at sf0.001 first: this process's JVM
-    # is pristine (that is the point — see docstring), so without this
-    # the first pairs' sf0.1 sides absorb C2 compilation of their plan
-    # shapes (observed: q64 base 13.7s cold vs ~4s hot), which
-    # UNDERSTATES their scale_x. A tiny-tier run compiles the same
-    # generated classes for pennies.
-    tiny = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if os.path.isdir(tiny):
-        for name in SF1_QUERIES:
-            _materialize(REGISTRY[name].fn(spark, tiny))
-        spark.catalog.clearCache()
+    spark, sf1_dir = s.spark, s.dirs[1]
+    base_builds, sf1_builds = s.builds
+    artifact_build_s = {
+        name: {
+            "base_s": base_s,
+            "sf1_s": sf1_builds[name],
+            "scale_x": round(sf1_builds[name] / max(base_s, 0.01), 1),
+        }
+        for name, base_s in base_builds.items()
+    }
 
     # base-side sanity gate (VERDICT r07 item 2): the committed r07
     # artifact carried sf0.1 base readings (q181 18.75 s, q95 13.2 s)
@@ -458,24 +375,9 @@ def bench_sf1(suite_spark, REGISTRY, sf_dir: str) -> dict:
     if st_path and os.path.exists(st_path):
         suite_t = json.loads(Path(st_path).read_text())
 
-    from discogs_load_spark.queries import streaming as _streaming
-
     def time_pair(name: str) -> tuple[float, float, dict | None]:
-        # clear stale latencies BEFORE each side (the scale_probe rule,
-        # ADVICE r12) so a drain that dies pre-wrapper can't misattribute
-        _streaming.BATCH_LATENCIES.pop(name, None)
-        t0 = _t.monotonic()
-        _materialize(REGISTRY[name].fn(spark, sf_dir))
-        base = round(_t.monotonic() - t0, 2)
-        lat_b = list(_streaming.BATCH_LATENCIES.get(name) or [])
-        _streaming.BATCH_LATENCIES.pop(name, None)
-        t0 = _t.monotonic()
-        _materialize(REGISTRY[name].fn(spark, SF1_DIR))
-        big = round(_t.monotonic() - t0, 2)
-        lat_g = list(_streaming.BATCH_LATENCIES.get(name) or [])
-        # queries share helper lineages (q154/q169 reuse the same kmeans
-        # frame): drop plan-matched caches so every pair starts cold
-        spark.catalog.clearCache()
+        base, lat_b = time_query(spark, name, sf_dir)
+        big, lat_g = time_query(spark, name, sf1_dir)
         pb = None
         if name in STREAMING_PER_BATCH and lat_b and lat_g:
             mb = sum(lat_b) / len(lat_b)
@@ -493,23 +395,6 @@ def bench_sf1(suite_spark, REGISTRY, sf_dir: str) -> dict:
     # reading >1.5x its prior value (+1 s absolute slack) is re-measured
     # before being published, the mirror of the base-side gate below
     prior_sf1 = _prior_sf1_timings()
-
-    # the ingest artifacts (queries/artifacts.py) are INGEST products the
-    # queries read as landed parquet, so build them OUTSIDE the per-query
-    # timed windows at both tiers — but time each build so the round's
-    # record still carries every artifact's cost and its scaling
-    from discogs_load_spark.queries.artifacts import prebuild
-
-    base_builds = prebuild(spark, sf_dir, rebuild=True)
-    sf1_builds = prebuild(spark, SF1_DIR, rebuild=True)
-    artifact_build_s = {
-        name: {
-            "base_s": base_s,
-            "sf1_s": sf1_builds[name],
-            "scale_x": round(sf1_builds[name] / max(base_s, 0.01), 1),
-        }
-        for name, base_s in base_builds.items()
-    }
 
     prior_pb = _prior_sf1_per_batch()
     t01: dict[str, float] = {}
@@ -595,7 +480,7 @@ def bench_sf1(suite_spark, REGISTRY, sf_dir: str) -> dict:
         n.split("_", 1)[0]: round(t1[n] / t01[n], 1) for n in SF1_QUERIES
     }
     return {
-        "gen_s": gen_s,
+        "gen_s": round(s.gen_s, 1),
         "rows_x": 10,
         "artifact_build_s": artifact_build_s,
         "base": {n.split("_", 1)[0]: t for n, t in t01.items()},
@@ -618,130 +503,52 @@ def bench_sf1(suite_spark, REGISTRY, sf_dir: str) -> dict:
     }
 
 
-def _materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _warm_image_path(spark, warm) -> None:
-    """Exercise the image codec path once (numpy + package import in
-    every Python worker) so the first image query doesn't absorb ~20 s
-    of one-time per-worker imports into its own timing. ONE definition
-    for both the suite and the sf1 sessions — the pairing's 'same
-    warmup both tiers' claim depends on these staying identical."""
-    from discogs_load_spark.operators.multimodal import (
-        image_ahash,
-        render_procedural_bmp,
-    )
-
-    _materialize(
-        image_ahash(
-            render_procedural_bmp(warm, 16, 16, id_col="id"), id_col="id"
-        )
-    )
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
 
     from discogs_load_spark.queries import REGISTRY
-    from discogs_load_spark.session import get_spark
 
     if os.environ.get("SPARK_GRAFT_SF1_SUBPROC") == "1":
         # child mode: run ONLY the sf1 tier on this pristine JVM and
         # hand the result back as the last stdout line
-        sf1 = bench_sf1(None, REGISTRY, sf_dir)
+        sf1 = bench_sf1(sf_dir)
         print(json.dumps({"sf1_full": sf1}, separators=(",", ":")), flush=True)
         return
 
-    spark = get_spark(app_name="discogs_load_spark_bench")
-    # Warm the one-time paths so per-query timings measure the engine, not
-    # startup: JVM/codegen/noop sink, the fixture re-shard cache + page
-    # cache (load_tables), and the Python worker pool (first Pandas-UDF
-    # call forks N workers that each import pandas).
-    spark.range(1000).selectExpr("sum(id) AS s").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    from discogs_load_spark.session import load_tables
-
-    for df in load_tables(spark, sf_dir).values():
-        _materialize(df)
-    import pandas as pd  # noqa: F401 — fail fast if absent
-
-    warm = spark.range(256).repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    _materialize(warm.mapInPandas(lambda it: it, "id long"))
-    # ... and the image path: whichever query first touched it
-    # otherwise absorbs ~20 s of one-time per-worker imports into ITS
-    # timing (observed on q181 in r07)
-    _warm_image_path(spark, warm)
-
-    # the ingest artifacts (queries/artifacts.py): force-rebuilt and timed
-    # HERE, one sidecar entry each, so the per-query rows below measure
-    # reads while every build's cost stays on the round's record
-    from discogs_load_spark.queries.artifacts import prebuild
-
-    artifact_build_s = prebuild(spark, sf_dir, rebuild=True)
+    # the ingest artifacts (queries/artifacts.py) are force-rebuilt and
+    # timed by the warm-up, one sidecar entry each, so the per-query rows
+    # below measure reads while every build's cost stays on the record
+    s = start("discogs_load_spark_bench", [sf_dir], rebuild=True)
+    spark, artifact_build_s = s.spark, s.builds[0]
     # r14: one-time fixture-derived /tmp inputs get the same out-of-window
-    # treatment as the index artifacts above. The driver regenerates the
+    # treatment as the index artifacts. The driver regenerates the
     # fixtures every round, so these caches miss exactly once per round —
     # and whichever suite position paid the miss carried a one-time build
     # (measured: q132 5.4 s cold vs 0.7 s steady-state, q223 3.0 vs 0.4,
     # q149 2.5 vs 0.9 — OPTIMIZATION_r14.md) that is INPUT construction
-    # (lake tables an ingest job writes once; stream-source parquet copies
-    # standing in for kafka), not the operator under measurement. The
-    # stream sources build via the shared helper; the lake artifacts build
-    # by invoking their owning queries once (their builders are the
-    # queries' own cache-miss paths). Total build time stays on the record
-    # as its own line; per-query rows then measure steady-state reads —
-    # which is also what every PRIOR round's committed sidecar de-facto
-    # recorded, since in-round re-runs had warmed the same caches.
-    from discogs_load_spark.queries.shred import _q170_dump_path
-    from discogs_load_spark.queries.streaming import prewarm_stream_sources
-
-    t0 = time.monotonic()
-    prewarm_stream_sources(spark, sf_dir)
-    _q170_dump_path(
-        load_tables(spark, sf_dir, ["documents"])["documents"], sf_dir
-    )
-    # per-query build seconds (ADVICE r14): the prewarm moves first-touch
-    # artifact construction out of the timed rows, so a regression in a
-    # build path would otherwise only show as an aggregate scalar — keep
-    # each build attributable in the sidecar
-    prewarm_by_query: dict[str, float] = {}
-    for name in FIXTURE_PREWARM_QUERIES:
-        tq = time.monotonic()
-        _materialize(REGISTRY[name].fn(spark, sf_dir))
-        prewarm_by_query[name] = round(time.monotonic() - tq, 3)
+    # (lake tables an ingest job writes once), not the operator under
+    # measurement. The lake artifacts build by invoking their owning
+    # queries once (their builders are the queries' own cache-miss
+    # paths), each build's seconds kept in the sidecar (ADVICE r14); the
+    # per-query rows then measure steady-state reads.
+    prewarm_by_query = {
+        name: time_query(spark, name, sf_dir)[0]
+        for name in FIXTURE_PREWARM_QUERIES
+    }
     fixture_prewarm = {
-        "seconds": round(time.monotonic() - t0, 3),
+        "seconds": round(sum(prewarm_by_query.values()), 3),
         "by_query": prewarm_by_query,
     }
-    spark.catalog.clearCache()
 
-    timings: dict[str, float] = {}
-    for name in sorted(REGISTRY):
-        fn = REGISTRY[name].fn
-        t0 = time.monotonic()
-        _materialize(fn(spark, sf_dir))
-        timings[name] = round(time.monotonic() - t0, 3)
-        # queries persist their shared frames for the duration of the
-        # app; across a 180+-query sweep those dead caches accumulate in
-        # executor memory and bleed into later timings — drop them (no
-        # query depends on another's cache)
-        spark.catalog.clearCache()
+    timings = {name: time_query(spark, name, sf_dir)[0] for name in sorted(REGISTRY)}
     # Re-time the slowest readings once and keep the min: a long sweep
     # occasionally lands a Python-worker respawn or GC cycle on one
     # query, inflating IT by seconds (observed: q181 1.5 s in isolation,
     # 17-23 s in-suite across identical-code runs). Genuinely expensive
-    # queries repeat at the same cost, so min() only removes the
-    # scatter; the ingest bench applies the same min-of-N rule.
+    # queries repeat at the same cost, so min() only removes the scatter.
     for name in sorted(timings, key=timings.get, reverse=True)[:12]:
-        t0 = time.monotonic()
-        _materialize(REGISTRY[name].fn(spark, sf_dir))
-        timings[name] = min(
-            timings[name], round(time.monotonic() - t0, 3)
-        )
-        spark.catalog.clearCache()
+        timings[name] = min(timings[name], time_query(spark, name, sf_dir)[0])
     total = round(sum(timings.values()), 3)
 
     # Full per-query timings go to stderr AND to their own stdout line
@@ -816,24 +623,11 @@ def main() -> None:
     # (VERDICT r07 item 3): the driver keeps only a ~2 KB stdout tail, so
     # BENCH_r0{5,7}.json's inline maps were truncated and round-over-round
     # per-query regression analysis was impossible from committed
-    # artifacts. The round number is inferred as 1 + the newest committed
-    # BENCH_r*.json (the driver writes BENCH_r{N} for the round AFTER
-    # this run completes); a custom SF dir skips the sidecar — that's
-    # someone measuring something specific, not the round's record.
+    # artifacts. The name carries the round (harness.bench_round) and the
+    # core count; a custom SF dir skips the sidecar — that's someone
+    # measuring something specific, not the round's record.
     if abs(sf - 0.1) < 1e-9:
-        import re as _re
-
-        env_round = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
-        rounds = [
-            int(m.group(1))
-            for p in REPO.glob("BENCH_r*.json")
-            for m in [_re.match(r"BENCH_r(\d+)\.json$", p.name)]
-            if m
-        ]
-        # SPARK_GRAFT_BENCH_ROUND pins both the sidecar name and the
-        # sf1 gate prior — the redo-of-a-finalized-round contract
-        # (_prior_sf1_timings docstring)
-        rnd = int(env_round) if env_round else max(rounds, default=0) + 1
+        rnd = bench_round(REPO)
         sidecar = {
             "round_guess": rnd,
             "suite_total_s": total,
@@ -844,7 +638,7 @@ def main() -> None:
         }
         if sf1 is not None:
             sidecar["sf1"] = sf1
-        (REPO / f"BENCH_perquery_r{rnd:02d}.json").write_text(
+        (REPO / f"BENCH_perquery_r{rnd:02d}_c{cpus()}.json").write_text(
             json.dumps(sidecar, indent=1, sort_keys=True)
         )
 

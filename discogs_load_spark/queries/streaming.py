@@ -124,33 +124,6 @@ def _source_writer(df: DataFrame):
     )
 
 
-# Per-micro-batch wall latencies for the index-maintenance trio
-# (q218/q219/q220), recorded by _timed_foreach_batch and read by
-# tools/scale_probe.py (VERDICT r11 item 5): the suite-drain wall time is
-# backlog-proportional by construction (more files = more batches), so
-# drain totals overstate scale_x for streaming queries — per-batch
-# latency is the honest steady-state streaming number. Keyed by query
-# name; reset at each query start, so after a run the list holds exactly
-# that drain's batches in order.
-BATCH_LATENCIES: dict[str, list[float]] = {}
-
-
-def _timed_foreach_batch(name: str, fn):
-    """Wrap a foreachBatch callable to append each batch's wall seconds
-    to BATCH_LATENCIES[name]. foreachBatch runs batches sequentially on
-    the driver, so a plain list append is race-free."""
-    import time as _time
-
-    BATCH_LATENCIES[name] = []
-
-    def wrapped(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.perf_counter()
-        fn(batch_df, batch_id)
-        BATCH_LATENCIES[name].append(_time.perf_counter() - t0)
-
-    return wrapped
-
-
 class _GenerationLanding:
     """The shared generation-swap landing behind the three streamed
     index maintainers (q218 signature / q224 CDC chunk / q226
@@ -262,8 +235,8 @@ def prewarm_stream_sources(spark: SparkSession, sf_dir: str) -> None:
     """Build the fixture-keyed /tmp stream-source copies every streaming
     query reads (events single/duplicated, the 12-file docs source shared
     by q218/q219/q224, the 12-file new-vector source shared by q220/q226)
-    WITHOUT running any drain. bench.py calls this once per tier outside
-    the per-query timed windows — the same out-of-window treatment the
+    WITHOUT running any drain. The measurement warm-up (tools/harness.py)
+    calls this once per tier outside the per-query timed windows — the same out-of-window treatment the
     ingest artifacts already get — so a query's committed row measures
     the drain, not a one-time parquet copy of its input (the copies are
     harness plumbing standing in for the always-there kafka/landing
@@ -1022,9 +995,7 @@ def q218_streaming_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 4)
             .parquet(src)
-            .writeStream.foreachBatch(
-                _timed_foreach_batch("q218_streaming_index_ingest", land)
-            )
+            .writeStream.foreachBatch(land)
             .option("checkpointLocation", landing.checkpoint_dir())
             .start()
         )
@@ -1223,11 +1194,7 @@ def q219_streaming_cdc_index_maintenance(
             spark.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 4)
             .parquet(src)
-            .writeStream.foreachBatch(
-                _timed_foreach_batch(
-                    "q219_streaming_cdc_index_maintenance", land_novel
-                )
-            )
+            .writeStream.foreachBatch(land_novel)
             .option("checkpointLocation", os.path.join(out, "_chk"))
             .start()
         )
@@ -1411,11 +1378,7 @@ def q220_streaming_emb_index_maintenance(
             spark.readStream.schema(emb.schema)
             .option("maxFilesPerTrigger", 4)
             .parquet(src)
-            .writeStream.foreachBatch(
-                _timed_foreach_batch(
-                    "q220_streaming_emb_index_maintenance", land_assigned
-                )
-            )
+            .writeStream.foreachBatch(land_assigned)
             .option("checkpointLocation", os.path.join(out, "_chk"))
             .start()
         )
@@ -1516,11 +1479,7 @@ def q224_streaming_maintain_and_compact(
             spark.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 4)
             .parquet(src)
-            .writeStream.foreachBatch(
-                _timed_foreach_batch(
-                    "q224_streaming_maintain_and_compact", land_novel
-                )
-            )
+            .writeStream.foreachBatch(land_novel)
             .option("checkpointLocation", landing.checkpoint_dir())
             .start()
         )
@@ -1744,11 +1703,7 @@ def q226_streaming_emb_maintain_and_compact(
             spark.readStream.schema(emb.schema)
             .option("maxFilesPerTrigger", 4)
             .parquet(src)
-            .writeStream.foreachBatch(
-                _timed_foreach_batch(
-                    "q226_streaming_emb_maintain_and_compact", land_assigned
-                )
-            )
+            .writeStream.foreachBatch(land_assigned)
             .option("checkpointLocation", landing.checkpoint_dir())
             .start()
         )

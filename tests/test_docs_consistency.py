@@ -97,3 +97,31 @@ def test_per_batch_gate_catches_synthetic_regression():
 
     for name in bench.STREAMING_PER_BATCH:
         assert "streaming" in _REG[name].tags
+
+
+def test_prior_sidecar_lookup_reads_only_its_core_count(tmp_path, monkeypatch):
+    """The sf1 gates compare against the last completed round's sidecar
+    taken at the SAME core count: sidecar names carry ``_c<cores>`` and an
+    unsuffixed legacy name is a 32-core record. A current-round sidecar
+    is never a reference."""
+    import json
+    import sys
+
+    sys.path.insert(0, str(README.parent))
+    import bench
+
+    for name, q64 in (
+        ("BENCH_perquery_r14.json", 32.0),
+        ("BENCH_perquery_r14_c8.json", 8.0),
+        ("BENCH_perquery_r15_c8.json", 15.0),
+    ):
+        (tmp_path / name).write_text(json.dumps({"sf1": {"queries": {"q64": q64}}}))
+    monkeypatch.setattr(bench, "REPO", tmp_path)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ROUND", "15")
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    assert bench._prior_sidecar_section("queries") == {"q64": 8.0}
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    assert bench._prior_sidecar_section("queries") == {"q64": 32.0}
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    assert bench._prior_sidecar_section("queries") is None

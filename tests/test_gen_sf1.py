@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
+import gen_sf1  # noqa: E402
 from gen_sf1 import TILES, _gen_documents, _gen_events, _tile  # noqa: E402
 
 from .conftest import SF_SMALL  # noqa: E402
@@ -108,3 +109,50 @@ def test_documents_plant_near_dup_pairs_at_fixture_density(spark):
         F.min("n").alias("lo"), F.max("n").alias("hi")
     ).collect()[0]
     assert stats["lo"] >= 50 and stats["hi"] <= 99
+
+
+def test_ensure_tier_regenerates_only_when_stale(tmp_path, monkeypatch):
+    """A derived tier is reused while its source files (size, mtime) and
+    GEN_VERSION are unchanged, and regenerated when any of them moves;
+    gen_sf1's own CLI leaves the marker, so a later bench reuses its tier."""
+    import os
+
+    src, out = tmp_path / "src", tmp_path / "out"
+    src.mkdir()
+    for n in gen_sf1.FINGERPRINT_TABLES:
+        (src / f"{n}.parquet").write_bytes(b"x")
+    calls = []
+
+    def fake_generate(spark, src_dir, out_dir, scale=1):
+        calls.append(scale)
+        os.makedirs(out_dir, exist_ok=True)
+        for n in gen_sf1.FINGERPRINT_TABLES:
+            open(os.path.join(out_dir, f"{n}.parquet"), "w").close()
+
+    monkeypatch.setattr(gen_sf1, "generate_sf1", fake_generate)
+
+    def ensure():
+        gen_sf1.ensure_tier(None, str(src), str(out))
+        return len(calls)
+
+    assert ensure() == 1  # missing
+    assert ensure() == 1  # fresh: reused
+    (src / "events.parquet").write_bytes(b"xy")
+    assert ensure() == 2  # size changed
+    st = os.stat(src / "documents.parquet")
+    os.utime(src / "documents.parquet", (st.st_atime, st.st_mtime + 10))
+    assert ensure() == 3  # mtime changed
+    monkeypatch.setattr(gen_sf1, "GEN_VERSION", gen_sf1.GEN_VERSION + 1)
+    assert ensure() == 4  # generator changed
+    assert ensure() == 4
+
+    cli_out = tmp_path / "cli"
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(src))
+    monkeypatch.setenv("SPARK_GRAFT_SF1_DIR", str(cli_out))
+    import discogs_load_spark.session as session
+
+    monkeypatch.setattr(session, "get_spark", lambda **kw: None)
+    gen_sf1.main()
+    assert len(calls) == 5 and (cli_out / "_source_fp.txt").exists()
+    gen_sf1.ensure_tier(None, str(src), str(cli_out))
+    assert len(calls) == 5

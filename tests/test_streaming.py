@@ -5,6 +5,9 @@ their batch duals.
 
 from __future__ import annotations
 
+import sys
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,7 +21,10 @@ from discogs_load_spark.streaming.ops import (
     windowed_counts,
 )
 
-from .conftest import SF_SMALL
+from .conftest import REPO, SF_SMALL
+
+sys.path.insert(0, str(REPO / "tools"))
+from harness import batch_seconds, time_query  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -230,7 +236,8 @@ def test_q219_lands_partitioned_and_prunes_anti_join_reads(spark):
     from discogs_load_spark.queries.registry import REGISTRY
 
     name = "q219_streaming_cdc_index_maintenance"
-    result = REGISTRY[name].fn(spark, SF_SMALL)
+    with batch_seconds(spark) as lat:
+        result = REGISTRY[name].fn(spark, SF_SMALL)
     assert result.count() == 16  # hex first-char rollup, all buckets hit
 
     out = st._LAST_CDC_LANDED_DIR
@@ -264,7 +271,6 @@ def test_q219_lands_partitioned_and_prunes_anti_join_reads(spark):
     # one latency per micro-batch (>= 1: at sf0.001 the source can land
     # as a single file and drain in one batch; the probe tiers land
     # many files and genuinely span batches)
-    lat = st.BATCH_LATENCIES.get(name)
     assert lat and all(t > 0 for t in lat)
 
 
@@ -281,12 +287,12 @@ def test_q224_in_stream_compaction_swaps_generations(spark):
     from discogs_load_spark.queries.registry import REGISTRY
 
     name = "q224_streaming_maintain_and_compact"
-    out = REGISTRY[name].fn(spark, SF_SMALL)
+    with batch_seconds(spark) as lat:
+        out = REGISTRY[name].fn(spark, SF_SMALL)
     assert out.count() == 16  # hex first-char rollup
 
     info = st._LAST_Q224
     assert info is not None
-    lat = st.BATCH_LATENCIES[name]
     assert len(lat) >= 3 and all(t > 0 for t in lat)
     # >= 1 in-stream swap (since >= COMPACT_EVERY batches); the drain-end
     # finalize() is elided when the landing is already compact
@@ -317,12 +323,12 @@ def test_q218_sig_landing_partitioned_and_compacted(spark):
     from discogs_load_spark.queries.registry import REGISTRY
 
     name = "q218_streaming_index_ingest"
-    out = REGISTRY[name].fn(spark, SF_SMALL)
+    with batch_seconds(spark) as lat:
+        out = REGISTRY[name].fn(spark, SF_SMALL)
     assert out.count() >= 1  # per-source rollup
 
     info = st._LAST_Q218
     assert info is not None
-    lat = st.BATCH_LATENCIES[name]
     assert len(lat) >= 3 and all(t > 0 for t in lat)
     # >= 3 batches with COMPACT_EVERY = 3 guarantees the IN-STREAM swap
     # fired; the drain-end finalize() is elided when the cadence compact
@@ -355,10 +361,11 @@ def test_q226_emb_landing_partitioned_and_compacted(spark):
     from discogs_load_spark.queries.registry import REGISTRY
 
     name = "q226_streaming_emb_maintain_and_compact"
-    out = sorted(
-        (r.cluster, r.n_new, r.min_vec, r.max_vec, r.n_via_exact)
-        for r in REGISTRY[name].fn(spark, SF_SMALL).collect()
-    )
+    with batch_seconds(spark) as lat:
+        out = sorted(
+            (r.cluster, r.n_new, r.min_vec, r.max_vec, r.n_via_exact)
+            for r in REGISTRY[name].fn(spark, SF_SMALL).collect()
+        )
     composed = sorted(
         map(
             tuple,
@@ -371,7 +378,6 @@ def test_q226_emb_landing_partitioned_and_compacted(spark):
 
     info = st._LAST_Q226
     assert info is not None
-    lat = st.BATCH_LATENCIES[name]
     assert len(lat) >= 3 and all(t > 0 for t in lat)
     assert info["generations"] >= 1
 
@@ -418,11 +424,11 @@ def test_two_swap_cadence_is_correct_and_bounded(spark, monkeypatch):
     assert st.stream_source_files() == 24
 
     name = "q226_streaming_emb_maintain_and_compact"
-    out = sorted(
-        (r.cluster, r.n_new, r.min_vec, r.max_vec, r.n_via_exact)
-        for r in REGISTRY[name].fn(spark, SF_SMALL).collect()
-    )
-    lat = st.BATCH_LATENCIES[name]
+    with batch_seconds(spark) as lat:
+        out = sorted(
+            (r.cluster, r.n_new, r.min_vec, r.max_vec, r.n_via_exact)
+            for r in REGISTRY[name].fn(spark, SF_SMALL).collect()
+        )
     assert len(lat) == 6 and all(t > 0 for t in lat)
     info = st._LAST_Q226
     assert info["generations"] == 2  # two in-stream swaps, finalize elided
@@ -448,10 +454,30 @@ def test_two_swap_cadence_is_correct_and_bounded(spark, monkeypatch):
     # the CDC maintainer on the same 24-file cadence
     monkeypatch.setenv("SPARK_GRAFT_STREAM_FILES", "24")
     name = "q224_streaming_maintain_and_compact"
-    assert REGISTRY[name].fn(spark, SF_SMALL).count() == 16
-    lat = st.BATCH_LATENCIES[name]
+    with batch_seconds(spark) as lat:
+        assert REGISTRY[name].fn(spark, SF_SMALL).count() == 16
     assert len(lat) == 6
     assert st._LAST_Q224["generations"] == 2
+
+
+def test_time_query_reads_batch_seconds_from_progress_events(spark):
+    """The harness reads per-micro-batch latency from Spark's progress
+    events (each batch's addBatch duration): a drain reports one positive
+    entry per batch, a query that starts no stream reports none and does
+    not wait for events, and the listener is removed afterwards."""
+    streams = spark._jsparkSession.streams()
+    n_listeners = len(streams.listListeners())
+
+    seconds, lat = time_query(spark, "q218_streaming_index_ingest", SF_SMALL)
+    assert seconds > 0
+    assert lat and all(t > 0 for t in lat)
+
+    t0 = time.monotonic()
+    seconds, lat = time_query(spark, "q01_pricing_summary", SF_SMALL)
+    assert lat == []
+    assert time.monotonic() - t0 < seconds + 5
+
+    assert len(streams.listListeners()) == n_listeners
 
 
 def test_centroid_planes_value_matches_sql_ladder():

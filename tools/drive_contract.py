@@ -1,29 +1,28 @@
-"""Simulates the driver: imports __spark_entry__ from /root/repo, runs
-entry() smoke, then every queries() entry at sf0.01 vs oracle_sql() in DuckDB
-with order-insensitive value comparison."""
-import math, sys
+"""Simulates the driver: imports __spark_entry__ from the repo, runs entry()
+smoke, then each queries() entry at sf0.01 (override with
+SPARK_GRAFT_SF_DIR) vs oracle_sql() in DuckDB with order-insensitive value
+comparison. Query names on argv restrict the run (substring match).
+
+    python tools/drive_contract.py              # every query
+    python tools/drive_contract.py q165 q218    # only those
+"""
+import math
+import os
+import sys
+import tempfile
 from collections import Counter
 from datetime import datetime
-sys.path.insert(0, "/root/repo")
-import __spark_entry__ as e
-import tempfile
+from pathlib import Path
 
-import duckdb
-from pyspark.sql import SparkSession
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+import __spark_entry__ as e  # noqa: E402
 
-spark = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions","8")
-         .config("spark.sql.session.timeZone","UTC")
-         .config("spark.ui.enabled","false").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
+import duckdb  # noqa: E402
+from pyspark.sql import SparkSession  # noqa: E402
 
-df = e.entry(spark)
-n = df.count()
-print(f"entry(): {n} rows, schema: {[f.name for f in df.schema.fields]}")
-assert n > 0
-
-SF = "/root/testdata/sf0.01"
+SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 SPILL = tempfile.mkdtemp(prefix="duck_spill_")
+
 
 def fresh_duck():
     """One connection PER ORACLE: a shared connection accumulates
@@ -46,49 +45,72 @@ def norm(v):
     if isinstance(v, (list, tuple)): return tuple(norm(x) for x in v)
     return v
 
-qs, oracles = e.queries(), e.oracle_sql()
-# Oracle regime guards (registry.QuerySpec.oracle_guard): a guard returning
-# a reason string means the SQL dual is invalid BY CONSTRUCTION at this
-# fixture (e.g. the delta-assignment oracles unroll flat k-means, valid
-# only under similarity.SEM_TWO_LEVEL_MIN) — skip the comparison loudly
-# with the reason instead of reporting a misleading hash mismatch. At the
-# driver's sf0.01 tier no guard fires; this exists so a future larger
-# correctness tier fails with a clear message (VERDICT r12 item 5).
-from discogs_load_spark.queries.registry import REGISTRY as _REG
-fail = 0
-for name, fn in sorted(qs.items()):
-    guard = getattr(_REG.get(name), "oracle_guard", None)
-    guard_reason = None
-    if guard is not None and name in oracles:
-        guard_reason = guard(spark, SF)
-    sdf = fn(spark, SF)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    if guard_reason:
-        # the SQL dual is regime-invalid here, but the query itself must
-        # still RUN and produce rows (a guarded query's own crash or
-        # empty result must not hide behind the skip — r13 review)
-        print(
-            f"{name}: rows-only {len(srows)} rows, "
-            f"SKIP-ORACLE (guard: {guard_reason})"
-        )
-        continue
-    if name not in oracles:
-        print(f"{name}: rows-only, {len(srows)} rows"); continue
-    con = fresh_duck()
-    res = con.execute(oracles[name])
-    dcols = [d[0] for d in res.description]; drows = res.fetchall()
-    con.close()
-    ok_names = sorted(scols) == sorted(dcols)
-    sidx = sorted(range(len(scols)), key=lambda i: scols[i])
-    didx = sorted(range(len(dcols)), key=lambda i: dcols[i])
-    sset = Counter(tuple(norm(r[i]) for i in sidx) for r in srows)
-    dset = Counter(tuple(norm(r[i]) for i in didx) for r in drows)
-    ok = ok_names and sset == dset
-    print(f"{name}: {'MATCH' if ok else 'MISMATCH'} ({len(srows)} rows)")
-    if not ok:
-        fail += 1
-        print("  spark-only:", list((sset-dset).items())[:2])
-        print("  duck-only:", list((dset-sset).items())[:2])
-print("FAILURES:", fail)
-sys.exit(1 if fail else 0)
+
+def main() -> None:
+    qs, oracles = e.queries(), e.oracle_sql()
+    wanted = sys.argv[1:]
+    names = [n for n in sorted(qs) if not wanted or any(w in n for w in wanted)]
+    if not names:
+        print("no queries match", wanted)
+        sys.exit(2)
+
+    spark = (SparkSession.builder.master("local[8]")
+             .config("spark.sql.shuffle.partitions","8")
+             .config("spark.sql.session.timeZone","UTC")
+             .config("spark.ui.enabled","false").getOrCreate())
+    spark.sparkContext.setLogLevel("ERROR")
+
+    df = e.entry(spark)
+    n = df.count()
+    print(f"entry(): {n} rows, schema: {[f.name for f in df.schema.fields]}")
+    assert n > 0
+
+    # Oracle regime guards (registry.QuerySpec.oracle_guard): a guard returning
+    # a reason string means the SQL dual is invalid BY CONSTRUCTION at this
+    # fixture (e.g. the delta-assignment oracles unroll flat k-means, valid
+    # only under similarity.SEM_TWO_LEVEL_MIN) — skip the comparison loudly
+    # with the reason instead of reporting a misleading hash mismatch. At the
+    # driver's sf0.01 tier no guard fires; this exists so a future larger
+    # correctness tier fails with a clear message (VERDICT r12 item 5).
+    from discogs_load_spark.queries.registry import REGISTRY as _REG
+    fail = 0
+    for name in names:
+        guard = getattr(_REG.get(name), "oracle_guard", None)
+        guard_reason = None
+        if guard is not None and name in oracles:
+            guard_reason = guard(spark, SF)
+        sdf = qs[name](spark, SF)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+        if guard_reason:
+            # the SQL dual is regime-invalid here, but the query itself must
+            # still RUN and produce rows (a guarded query's own crash or
+            # empty result must not hide behind the skip — r13 review)
+            print(
+                f"{name}: rows-only {len(srows)} rows, "
+                f"SKIP-ORACLE (guard: {guard_reason})"
+            )
+            continue
+        if name not in oracles:
+            print(f"{name}: rows-only, {len(srows)} rows"); continue
+        con = fresh_duck()
+        res = con.execute(oracles[name])
+        dcols = [d[0] for d in res.description]; drows = res.fetchall()
+        con.close()
+        ok_names = sorted(scols) == sorted(dcols)
+        sidx = sorted(range(len(scols)), key=lambda i: scols[i])
+        didx = sorted(range(len(dcols)), key=lambda i: dcols[i])
+        sset = Counter(tuple(norm(r[i]) for i in sidx) for r in srows)
+        dset = Counter(tuple(norm(r[i]) for i in didx) for r in drows)
+        ok = ok_names and sset == dset
+        print(f"{name}: {'MATCH' if ok else 'MISMATCH'} ({len(srows)} rows)")
+        if not ok:
+            fail += 1
+            print("  spark-only:", list((sset-dset).items())[:2])
+            print("  duck-only:", list((dset-sset).items())[:2])
+    print("FAILURES:", fail)
+    sys.exit(1 if fail else 0)
+
+
+if __name__ == "__main__":
+    main()

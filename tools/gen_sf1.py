@@ -34,6 +34,7 @@ no Python UDFs); generation is a few seconds on local[32].
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -43,8 +44,10 @@ EVENTS_N = 1_000_000
 USERS_N = 15_000
 TILES = 10
 # bump to invalidate cached /tmp tiers when generation semantics change
-# (bench.py and tools/scale_probe.py fold this into the source fingerprint)
+# (ensure_tier folds this into the source fingerprint)
 GEN_VERSION = 2
+# the source tables whose size + mtime key a derived tier
+FINGERPRINT_TABLES = ("documents", "embeddings", "events", "lineitem")
 # 1 planted near-dup pair per PLANT_MOD docs (doc_id % PLANT_MOD == 0 is
 # the base, == 1 the append-one-word copy) — the driver fixture's density
 PLANT_MOD = 20
@@ -220,6 +223,32 @@ def generate_sf1(spark: SparkSession, src_dir: str, out_dir: str, scale: int = 1
         shutil.rmtree(tmp)
 
 
+def ensure_tier(spark: SparkSession, src_dir: str, out_dir: str, scale: int = 1) -> float:
+    """Generate ``out_dir`` from ``src_dir`` unless it already holds a tier
+    generated from the same source files by the same GEN_VERSION; returns
+    the seconds spent generating (0.0 on reuse). The fixtures are
+    regenerated between rounds and a derived tier tiles them, so a cache
+    keyed on the directory alone would tile last round's data."""
+    fp = f"gen{GEN_VERSION}|" + "|".join(
+        f"{n}:{os.path.getsize(p)}:{int(os.path.getmtime(p))}"
+        for n in FINGERPRINT_TABLES
+        for p in [os.path.join(src_dir, f"{n}.parquet")]
+        if os.path.exists(p)
+    )
+    marker = os.path.join(out_dir, "_source_fp.txt")
+    have = all(
+        os.path.exists(os.path.join(out_dir, f"{n}.parquet"))
+        for n in FINGERPRINT_TABLES
+    )
+    if have and os.path.exists(marker) and open(marker).read() == fp:
+        return 0.0
+    t0 = time.monotonic()
+    generate_sf1(spark, src_dir, out_dir, scale=scale)
+    with open(marker, "w") as f:
+        f.write(fp)
+    return time.monotonic() - t0
+
+
 def main() -> None:
     import sys
 
@@ -228,7 +257,7 @@ def main() -> None:
 
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/spark_graft_sf1")
-    generate_sf1(get_spark(app_name="gen_sf1"), src, out)
+    ensure_tier(get_spark(app_name="gen_sf1"), src, out)
     print(f"sf1 fixtures written to {out}")
 
 

@@ -19,7 +19,7 @@ dictionary settings:
 
     python tools/sig_index_bytes.py sf0.1 sf1 sf10
 
-Prints one JSON line. Tier names resolve like tools/scale_probe.py
+Prints one JSON line. Tier names resolve through harness.resolve_tier
 (sf1/sf10 are the /tmp-derived tiers).
 """
 
@@ -68,7 +68,7 @@ def dir_bytes(d: str) -> int:
 
 
 def main() -> None:
-    from scale_probe import resolve_tier
+    from harness import resolve_tier
 
     from discogs_load_spark.queries import sig_index as si
     from discogs_load_spark.session import get_spark
