@@ -45,7 +45,7 @@ from ..operators.dedup import (
     simhash_from_shingles,
     simhash_near_dup_pairs,
 )
-from ..session import load_tables
+from ..session import load_tables, scoped_conf
 from . import artifacts
 from .registry import register
 from .sig_index import (
@@ -1024,14 +1024,9 @@ def q198_linkage_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and skew splitting have no corpus-scaled target, while AQE's
     # per-exchange stage materialization charged this 1-row collect
     # TWELVE driver-bound stage-jobs of the q200 profile's 58.
-    aqe_key = "spark.sql.adaptive.enabled"
-    old_aqe = spark.conf.get(aqe_key)
-    spark.conf.set(aqe_key, "false")
-    try:
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         # bounded: the 1-row 5-scalar stats frame (see block above)
         srow = u_name.crossJoin(u_size).crossJoin(bt).collect()[0]
-    finally:
-        spark.conf.set(aqe_key, old_aqe)
     u_lit = {f: _ilit(srow[f"u_{f}_num"]) for f in _FS_AGREE}
     n_lit = _ilit(srow["n_rows"])
     weighted = pairs

@@ -9,8 +9,10 @@ a shuffle partition is ~128-512 MB at the target scale).
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
+import threading
 import zipfile
 from pathlib import Path
 
@@ -95,6 +97,47 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_OPEN_SCOPES: set[int] = set()
+_SCOPES_LOCK = threading.Lock()
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set session config keys for the body only.
+
+    Each key's prior value is restored on exit, also when the body
+    raises; a key that was unset before the scope is unset again. Session
+    config is shared by every job on the session, so two overlapping
+    scopes would restore out of order and leak one scope's values into
+    the other's jobs: opening a second scope while one is already open on
+    the same session raises instead.
+    """
+    sid = id(spark)
+    with _SCOPES_LOCK:
+        if sid in _OPEN_SCOPES:
+            raise RuntimeError(
+                f"scoped_conf{sorted(conf)}: another scope is already open "
+                "on this session"
+            )
+        _OPEN_SCOPES.add(sid)
+    # read only once admitted: before that, another scope's values may
+    # still be set
+    saved = {}
+    try:
+        for k, v in conf.items():
+            saved[k] = spark.conf.get(k, None)
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        with _SCOPES_LOCK:
+            _OPEN_SCOPES.discard(sid)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):

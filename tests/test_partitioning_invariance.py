@@ -9,7 +9,6 @@ same row multiset (floats compared by bit pattern, not tolerance)."""
 
 from __future__ import annotations
 
-import contextlib
 import math
 import struct
 from collections import Counter
@@ -17,6 +16,7 @@ from collections import Counter
 import pytest
 
 from discogs_load_spark.queries import REGISTRY
+from discogs_load_spark.session import scoped_conf
 
 from .conftest import SF_SMALL
 
@@ -46,14 +46,8 @@ def _rows(df):
     return Counter(tuple(_bits(v) for v in r) for r in df.collect())
 
 
-@contextlib.contextmanager
 def _shuffle_partitions(spark, n: int):
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 @pytest.mark.parametrize("name", CASES)

@@ -9,8 +9,11 @@ import pytest
 
 from discogs_load_spark.plans import formatted_plan, join_kinds
 from discogs_load_spark.queries import REGISTRY
+from discogs_load_spark.session import scoped_conf
 
 from .conftest import SF_SMALL
+
+_NO_AUTO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
 
 
 @pytest.fixture(autouse=True)
@@ -244,12 +247,8 @@ def test_fuzzy_match_never_broadcasts_catalog(spark):
     hint — at scale-realistic sizes (broadcast threshold off, AQE's
     runtime re-pick removed from the picture) it must land as a shuffle
     join, never a BroadcastExchange of the catalog or a nested loop."""
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, _NO_AUTO_BROADCAST):
         plan = _plan(spark, "q112_fuzzy_name_match")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     assert "BroadcastExchange" not in plan, plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -379,12 +378,8 @@ def test_semdedup_pair_join_is_cluster_equi(spark):
     broadcast the fixture-sized side at runtime, which is fine live but
     nondeterministic to assert), the equi key must surface as a shuffle
     join."""
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, _NO_AUTO_BROADCAST):
         kinds = join_kinds(REGISTRY["q154_semdedup"].fn(spark, SF_SMALL))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     assert "CartesianProduct" not in kinds
     assert "SortMergeJoin" in kinds or "ShuffledHashJoin" in kinds, kinds
 

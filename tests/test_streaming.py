@@ -240,7 +240,7 @@ def test_q219_lands_partitioned_and_prunes_anti_join_reads(spark):
         result = REGISTRY[name].fn(spark, SF_SMALL)
     assert result.count() == 16  # hex first-char rollup, all buckets hit
 
-    out = st._LAST_CDC_LANDED_DIR
+    out = st.LAST_LANDING[name]["dir"]
     assert out is not None
     part_dirs = [
         e for e in os.listdir(out)
@@ -291,7 +291,7 @@ def test_q224_in_stream_compaction_swaps_generations(spark):
         out = REGISTRY[name].fn(spark, SF_SMALL)
     assert out.count() == 16  # hex first-char rollup
 
-    info = st._LAST_Q224
+    info = st.LAST_LANDING[name]
     assert info is not None
     assert len(lat) >= 3 and all(t > 0 for t in lat)
     # >= 1 in-stream swap (since >= COMPACT_EVERY batches); the drain-end
@@ -327,7 +327,7 @@ def test_q218_sig_landing_partitioned_and_compacted(spark):
         out = REGISTRY[name].fn(spark, SF_SMALL)
     assert out.count() >= 1  # per-source rollup
 
-    info = st._LAST_Q218
+    info = st.LAST_LANDING[name]
     assert info is not None
     assert len(lat) >= 3 and all(t > 0 for t in lat)
     # >= 3 batches with COMPACT_EVERY = 3 guarantees the IN-STREAM swap
@@ -376,7 +376,7 @@ def test_q226_emb_landing_partitioned_and_compacted(spark):
     )
     assert out == composed and len(out) >= 1
 
-    info = st._LAST_Q226
+    info = st.LAST_LANDING[name]
     assert info is not None
     assert len(lat) >= 3 and all(t > 0 for t in lat)
     assert info["generations"] >= 1
@@ -430,7 +430,7 @@ def test_two_swap_cadence_is_correct_and_bounded(spark, monkeypatch):
             for r in REGISTRY[name].fn(spark, SF_SMALL).collect()
         )
     assert len(lat) == 6 and all(t > 0 for t in lat)
-    info = st._LAST_Q226
+    info = st.LAST_LANDING[name]
     assert info["generations"] == 2  # two in-stream swaps, finalize elided
 
     monkeypatch.delenv("SPARK_GRAFT_STREAM_FILES")
@@ -457,7 +457,54 @@ def test_two_swap_cadence_is_correct_and_bounded(spark, monkeypatch):
     with batch_seconds(spark) as lat:
         assert REGISTRY[name].fn(spark, SF_SMALL).count() == 16
     assert len(lat) == 6
-    assert st._LAST_Q224["generations"] == 2
+    assert st.LAST_LANDING[name]["generations"] == 2
+
+
+def test_q226_cold_source_is_written_by_the_row_group_writer(
+    spark, tmp_path, monkeypatch
+):
+    """Run first against an empty temp dir, q226 must build the shared
+    new-vector source through the row-group writer: the copy's key names
+    the small-row-group layout, and q220 reads the same copy. At sf0.001
+    each file holds a handful of rows, so comparing row-group counts
+    cannot tell the writers apart; a spy on the writer can."""
+    import os
+    import tempfile
+
+    from discogs_load_spark.queries import streaming as st
+    from discogs_load_spark.queries.registry import REGISTRY
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    written = []
+    real_writer = st._source_writer
+
+    def spy(df):
+        written.append(df.columns)
+        return real_writer(df)
+
+    monkeypatch.setattr(st, "_source_writer", spy)
+    REGISTRY["q226_streaming_emb_maintain_and_compact"].fn(
+        spark, SF_SMALL
+    ).collect()
+
+    assert any(e.startswith("stream_newvecs") for e in os.listdir(tmp_path))
+    emb = load_tables(spark, SF_SMALL, ["embeddings"])["embeddings"]
+    assert emb.columns in written, written
+
+
+def test_ledger_landing_is_replay_safe(spark, tmp_path):
+    """foreachBatch is at-least-once: a batch replayed after a crash
+    re-lands under the same batch_id and must replace its own rows, not
+    add to them (the q92/q161/q190/q220 ledgers)."""
+    from discogs_load_spark.queries import streaming as st
+
+    ledger = str(tmp_path / "ledger")
+    rows = spark.range(5)
+    st._land_ledger(rows, 0, ledger)
+    st._land_ledger(rows, 0, ledger)  # replay of batch 0
+    assert spark.read.parquet(ledger).count() == 5
+    st._land_ledger(rows, 1, ledger)
+    assert spark.read.parquet(ledger).count() == 10
 
 
 def test_time_query_reads_batch_seconds_from_progress_events(spark):
