@@ -320,15 +320,15 @@ def q130_event_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded: ≤ |event-type vocab|² rows (the broadcast size class)
     graph = [
         (r["src"], r["dst"], r["w"], r["ow"])
-        for r in edges.join(outw, "src").collect()
+        for r in edges.join(outw, "src").limit(PR_GRAPH_CAP + 1).collect()
     ]
     if len(graph) > PR_GRAPH_CAP:
         # fail loudly at the premise, not as an opaque driver OOM: this
         # path exists BECAUSE event_type is a low-cardinality enum whose
         # vocab² transition graph is driver-sized (r15 guard)
         raise ValueError(
-            f"q130 transition graph has {len(graph)} edges > cap "
-            f"{PR_GRAPH_CAP}: the event-type vocabulary is not "
+            f"q130 transition graph has more than {PR_GRAPH_CAP} "
+            "edges: the event-type vocabulary is not "
             "enum-small, so the collected-graph PageRank premise does "
             "not hold — use a distributed rank iteration for this input"
         )

@@ -1413,10 +1413,11 @@ def q165_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-grain graphs); a name graph is not one. Catalog rows then join
     the finished |vocab|-row name→entity map once, by name, broadcast."""
     part = load_tables(spark, sf_dir, ["part"])["part"]
+    pairs = _fuzzy_name_pairs(part).select("n1", "n2")
     # bounded: the edit-distance pair list lives at the name-VOCABULARY
     # grain (q112's banded domain self-join output — the broadcast size
-    # class), never the catalog grain
-    edges = _fuzzy_name_pairs(part).select("n1", "n2").collect()
+    # class), never the catalog grain; ENTITY_EDGE_CAP + 1 rows at most
+    edges = pairs.limit(ENTITY_EDGE_CAP + 1).collect()
     if len(edges) > ENTITY_EDGE_CAP:
         # fail loudly at the premise, not as an opaque driver OOM: the
         # driver-side union-find exists BECAUSE the name vocabulary is
@@ -1424,8 +1425,8 @@ def q165_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # vocabulary where the banded pair list outgrows the broadcast
         # size class needs the distributed closure instead (r15 guard)
         raise ValueError(
-            f"q165 name-pair graph has {len(edges)} edges > cap "
-            f"{ENTITY_EDGE_CAP}: the name vocabulary is not domain-"
+            f"q165 name-pair graph has more than {ENTITY_EDGE_CAP} "
+            "edges: the name vocabulary is not domain-"
             "small, so the collected union-find premise does not hold "
             "— close this graph with connected_components_star"
         )

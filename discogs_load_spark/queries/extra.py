@@ -1378,9 +1378,10 @@ def q186_join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             counts.groupBy(F.col("c").alias("v"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("m"))
+            .limit(SKEW_CC_CAP + 1)
             # bounded: distinct per-key count VALUES (the frame the old
-            # form already ran a single-partition window over);
-            # SKEW_CC_CAP raises on a pathological distribution
+            # form already ran a single-partition window over); at most
+            # SKEW_CC_CAP + 1 rows, and the guard below raises past the cap
             .collect()
         )
 
@@ -1392,8 +1393,8 @@ def q186_join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     for (table, key), cc in zip(SKEW_KEYS, ccs):
         if len(cc) > SKEW_CC_CAP:
             raise RuntimeError(
-                f"q186: {len(cc)} distinct per-key count values for "
-                f"{table}.{key} exceeds SKEW_CC_CAP={SKEW_CC_CAP} — the "
+                f"q186: more than SKEW_CC_CAP={SKEW_CC_CAP} distinct "
+                f"per-key count values for {table}.{key} — the "
                 "count-of-counts frame is assumed value-domain-bounded "
                 "(it already rode a single-partition window); raise the "
                 "cap only with a matching window/collect strategy review"

@@ -30,6 +30,9 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     guaranteed when the driving process imported us by path (e.g. the
     grading driver, or spark-submit without --py-files). Zipping the package
     once per application and addPyFile-ing it makes workers self-sufficient.
+    On a local master, ``get_spark`` also puts the package's parent
+    directory on the workers' ``PYTHONPATH`` (see ``python_worker_conf``),
+    so local workers import the package from there as well.
     """
     app_id = spark.sparkContext.applicationId
     if app_id in _SHIPPED_APPS:
@@ -59,6 +62,14 @@ def get_spark(
       the DuckDB oracle's UTC-naive timestamps).
     - autoBroadcastJoinThreshold stays default (10 MB); dimension tables in
       the star schema (region/nation/label/...) broadcast automatically.
+    - Python workers on a local master start from
+      ``discogs_load_spark.pydaemon`` (``python_worker_conf``). Before
+      Python 3.13, pyspark's per-task ``importlib.invalidate_caches()``
+      re-reads every zip on the worker path (pyspark.zip, the spark-core
+      jar): 0.14-0.31 s of CPU per task. The daemon makes that lazy,
+      re-reading only a changed archive, then runs ``pyspark.daemon``. Only
+      local masters, whose workers can import the package from its
+      directory; on Python 3.13+ it changes nothing.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -91,12 +102,31 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in {**python_worker_conf(master), **(extra_conf or {})}.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def python_worker_conf(master: str) -> dict[str, str]:
+    """Config that starts a local master's Python workers from
+    ``discogs_load_spark.pydaemon`` (lazy zipimport invalidation) instead
+    of ``pyspark.daemon``.
+
+    The daemon starts before any task ships this package, so the
+    package's parent directory goes on the workers' PYTHONPATH. A local
+    master's workers share the driver's files; a remote executor's need
+    not, so every other master keeps ``pyspark.daemon``.
+    (``spark.python.worker.module`` is no way round that:
+    ``pyspark.daemon`` honours only worker modules named ``pyspark*``.)
+    """
+    if master != "local" and not master.startswith("local["):
+        return {}
+    return {
+        "spark.python.daemon.module": "discogs_load_spark.pydaemon",
+        "spark.executorEnv.PYTHONPATH": str(Path(__file__).resolve().parent.parent),
+    }
 
 
 _OPEN_SCOPES: set[int] = set()

@@ -532,30 +532,57 @@ def test_q200_merge_purge_python_reference(spark):
     assert any(v[0] > 1 for v in want.values()), "expected >= 1 merged entity"
 
 
+# a small positive cap: each guarded sf0.001 frame has more rows than this
+GUARD_CAP = 2
+
+
+def _collect_sizes(monkeypatch) -> list[int]:
+    """Spy on DataFrame.collect: the row count each call brought to the
+    driver."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    sizes: list[int] = []
+    collect = DataFrame.collect
+
+    def spy(self):
+        rows = collect(self)
+        sizes.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    return sizes
+
+
 def test_q130_collect_guard_trips_with_premise_message(spark, monkeypatch):
     """The driver-side PageRank collects the vocab² transition graph;
-    the r15 guard must refuse (naming the enum-vocabulary premise)
-    instead of silently growing the driver when the bound is exceeded."""
+    the guard must refuse (naming the enum-vocabulary premise) after
+    bringing at most PR_GRAPH_CAP + 1 rows to the driver."""
     import pytest
 
     from discogs_load_spark.queries import behavior
 
-    monkeypatch.setattr(behavior, "PR_GRAPH_CAP", -1)
+    monkeypatch.setattr(behavior, "PR_GRAPH_CAP", GUARD_CAP)
+    sizes = _collect_sizes(monkeypatch)
     with pytest.raises(ValueError, match="vocabulary is not enum-small"):
         REGISTRY["q130_event_pagerank"].fn(spark, SF_SMALL)
+    # GUARD_CAP + 1 rows came back: the graph has more real edges than
+    # the cap, and the collect stopped one past it
+    assert sizes == [GUARD_CAP + 1]
 
 
 def test_q165_collect_guard_trips_with_premise_message(spark, monkeypatch):
     """q165's driver-side union-find collects the banded name-pair list;
-    the r15 guard must refuse (naming the domain-grain vocabulary
-    premise) instead of silently growing the driver."""
+    the guard must refuse (naming the domain-grain vocabulary premise)
+    after bringing at most ENTITY_EDGE_CAP + 1 rows to the driver."""
     import pytest
 
     from discogs_load_spark.queries import dedup as qdedup
 
-    monkeypatch.setattr(qdedup, "ENTITY_EDGE_CAP", -1)
+    monkeypatch.setattr(qdedup, "ENTITY_EDGE_CAP", GUARD_CAP)
+    sizes = _collect_sizes(monkeypatch)
     with pytest.raises(ValueError, match="not domain-small"):
         REGISTRY["q165_entity_clusters"].fn(spark, SF_SMALL)
+    assert sizes == [GUARD_CAP + 1]
 
 
 def test_q130_empty_events_returns_empty_frame(spark, tmp_path):
@@ -581,12 +608,16 @@ def test_q130_empty_events_returns_empty_frame(spark, tmp_path):
 
 def test_q186_collect_guard_trips_with_premise_message(spark, monkeypatch):
     """q186's driver-side skew profile collects each key's
-    count-of-counts frame; the r15 guard must refuse (naming the
-    value-domain premise) instead of silently growing the driver."""
+    count-of-counts frame; the guard must refuse (naming the
+    value-domain premise) after bringing at most SKEW_CC_CAP + 1 rows
+    per key to the driver."""
     import pytest
 
     from discogs_load_spark.queries import extra
 
-    monkeypatch.setattr(extra, "SKEW_CC_CAP", -1)
+    monkeypatch.setattr(extra, "SKEW_CC_CAP", GUARD_CAP)
+    sizes = _collect_sizes(monkeypatch)
     with pytest.raises(RuntimeError, match="value-domain-bounded"):
         REGISTRY["q186_join_key_skew_profile"].fn(spark, SF_SMALL)
+    assert len(sizes) == len(extra.SKEW_KEYS)
+    assert max(sizes) == GUARD_CAP + 1

@@ -1,13 +1,23 @@
 """session.scoped_conf: the one helper that changes session config around
-a body (streaming drains, q198's collect, tests)."""
+a body (streaming drains, q198's collect, tests); and the local-master
+Python-worker entry (session.python_worker_conf, pydaemon)."""
 
 from __future__ import annotations
 
+import importlib
+import json
+import os
+import subprocess
+import sys
 import time
+import zipfile
+import zipimport
+from pathlib import Path
 
 import pytest
 
-from discogs_load_spark.session import scoped_conf
+from discogs_load_spark import pydaemon
+from discogs_load_spark.session import python_worker_conf, scoped_conf
 
 SET_KEY = "spark.sql.shuffle.partitions"  # set explicitly by get_spark
 UNSET_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -102,3 +112,162 @@ def test_scoped_conf_admits_one_scope_at_a_time_across_threads():
     assert state["peak"] == 1 and state["admitted"] > 0
     assert state["foreign"] == 0
     assert session.conf.get("k") is None
+
+
+# -- the local-master Python-worker entry ------------------------------------
+
+DAEMON_KEY = "spark.python.daemon.module"
+PYTHONPATH_KEY = "spark.executorEnv.PYTHONPATH"
+
+
+def _write_zip(path: Path, modules: dict[str, str]) -> None:
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, body in modules.items():
+            zf.writestr(f"{name}.py", body)
+
+
+@pytest.mark.skipif(
+    sys.version_info >= (3, 13), reason="3.13's zipimport is lazy already"
+)
+def test_lazy_invalidation_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    """pydaemon's invalidate_caches reads an unchanged archive's directory
+    zero times, re-reads a rewritten one (its new module imports), and
+    hands a missing one to the original."""
+    archive = tmp_path / "lazy.zip"
+    _write_zip(archive, {"lazyzip_a": "VALUE = 1\n"})
+    reads: list[str] = []
+    read_directory = zipimport._read_directory
+
+    def counting(path):
+        reads.append(path)
+        return read_directory(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", pydaemon.lazy_invalidate_caches
+    )
+    monkeypatch.syspath_prepend(str(archive))
+    try:
+        import lazyzip_a
+
+        assert lazyzip_a.VALUE == 1
+        importer = sys.path_importer_cache[str(archive)]
+        importer.invalidate_caches()  # first call: nothing to compare with
+        reads.clear()
+        for _ in range(3):
+            importer.invalidate_caches()
+        assert reads == []  # unchanged archive: no directory read
+
+        _write_zip(
+            archive, {"lazyzip_a": "VALUE = 1\n", "lazyzip_b": "VALUE = 2\n"}
+        )
+        importlib.invalidate_caches()
+        assert reads.count(str(archive)) == 1  # rewritten: read again
+        import lazyzip_b
+
+        assert lazyzip_b.VALUE == 2
+
+        reads.clear()
+        archive.unlink()
+        importer.invalidate_caches()  # missing: the original behaviour
+        assert reads == [str(archive)] and importer._files == {}
+    finally:
+        for name in ("lazyzip_a", "lazyzip_b"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(str(archive), None)
+
+
+_WORKER_PROBE = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from discogs_load_spark.session import get_spark
+
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+
+
+def probe(batches):
+    import importlib
+    import zipimport
+
+    import pandas as pd
+
+    reads = []
+    read_directory = zipimport._read_directory
+    zipimport._read_directory = lambda p: reads.append(p) or read_directory(p)
+    try:
+        importlib.invalidate_caches()  # a warm worker's per-task call
+    finally:
+        zipimport._read_directory = read_directory
+    for _ in batches:
+        pass
+    code = zipimport.zipimporter.invalidate_caches.__code__.co_filename
+    yield pd.DataFrame({"code": [code], "reads": [len(reads)]})
+
+
+frame = spark.range(4).repartition(2)
+rows = frame.mapInPandas(probe, "code string, reads int").collect()
+print(json.dumps([r.asDict() for r in rows]))
+spark.stop()
+"""
+
+
+@pytest.mark.skipif(
+    sys.version_info >= (3, 13), reason="3.13's zipimport is lazy already"
+)
+def test_local_session_workers_run_the_lazy_invalidation(tmp_path):
+    """A local[2] session built by get_spark starts its workers from
+    pydaemon: inside a mapInPandas task the lazy invalidate_caches is
+    installed, and the task's invalidation reads no archive directory."""
+    repo = Path(__file__).resolve().parent.parent
+    out = subprocess.run(
+        [sys.executable, "-c", _WORKER_PROBE, str(repo)],
+        cwd=tmp_path,
+        env={**os.environ, "SPARK_DRIVER_MEMORY": "1g"},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    rows = json.loads(out.stdout.strip().splitlines()[-1])
+    assert len(rows) == 2
+    for r in rows:
+        assert Path(r["code"]) == Path(pydaemon.__file__)
+        assert r["reads"] == 0
+
+
+def test_pyfile_added_after_workers_are_warm_is_importable(spark, tmp_path):
+    """addPyFile is the case pyspark invalidates import caches for: a zip
+    shipped after the workers started must import in the next task."""
+    n = spark.sparkContext.defaultParallelism
+    frame = spark.range(2 * n).repartition(n)
+
+    def late_value(batches):
+        import pandas as pd
+
+        import late_pyfile_mod
+
+        for b in batches:
+            yield pd.DataFrame({"v": [late_pyfile_mod.VALUE] * len(b)})
+
+    assert frame.mapInPandas(lambda bs: bs, frame.schema).count() == 2 * n  # warm
+    archive = tmp_path / "late_pyfile.zip"
+    _write_zip(archive, {"late_pyfile_mod": "VALUE = 42\n"})
+    spark.sparkContext.addPyFile(str(archive))
+    got = frame.mapInPandas(late_value, "v long").collect()
+    assert [r.v for r in got] == [42] * (2 * n)
+
+
+def test_python_worker_conf_is_for_local_masters_only():
+    for master in ("local", "local[2]", "local[*]", "local[4,2]"):
+        conf = python_worker_conf(master)
+        assert conf[DAEMON_KEY] == "discogs_load_spark.pydaemon"
+        package_dir = Path(conf[PYTHONPATH_KEY]) / "discogs_load_spark"
+        assert (package_dir / "pydaemon.py").is_file()
+    for master in (
+        "spark://host:7077",
+        "yarn",
+        "k8s://https://host:443",
+        "local-cluster[2,1,1024]",
+    ):
+        conf = python_worker_conf(master)
+        assert DAEMON_KEY not in conf and PYTHONPATH_KEY not in conf

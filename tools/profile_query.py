@@ -14,7 +14,12 @@ source copies, roundtrip dirs), the second is the suite-comparable
 reading and the one profiled. Prints one WALL line and one summary line
 per query: jobs, stages, tasks, executor run and CPU seconds, the
 inter-job gap (wall not covered by any job: driver-side work), shuffle
-read/write, spill, input and the bytes crossing the Python seam.
+read/write, spill, input and the bytes crossing the Python seam. A CPU
+line per query splits the profiled run's process-tree CPU seconds
+(perfbench's /proc readers) into the driver JVM less its JIT threads, the
+Python workers (daemon and workers, exited ones included), and the
+children the JVM forked and reaped (e.g. ``chmod`` when libhadoop is
+missing), so a fixed cost at a process seam shows up without a profiler.
 """
 
 from __future__ import annotations
@@ -29,11 +34,36 @@ from pathlib import Path
 
 from harness import REPO, bench_round, start, time_query  # puts REPO on sys.path
 
+from perfbench.run import _comm, jit_cpu_s, proc_stats, process_tree
 from perfbench.spans import Tracer, busy_seconds, find_event_log, parse_event_log
+
+_TICK = os.sysconf("SC_CLK_TCK")
 
 
 def _mb(n: float) -> str:
     return f"{n / 2**20:.1f}MB"
+
+
+def cpu_split() -> dict[str, float]:
+    """CPU seconds used so far by this process's descendants, by kind: the
+    driver JVM's own threads less its JIT threads, the Python workers
+    (with the workers the daemon has reaped), and the JVM's reaped
+    children."""
+    stats = proc_stats()
+    out = {"jvm": -jit_cpu_s(), "py_workers": 0.0, "reaped": 0.0}
+    for pid in process_tree(stats) - {os.getpid()}:
+        if pid not in stats:
+            continue
+        f = stats[pid]
+        own = (int(f[11]) + int(f[12])) / _TICK  # utime, stime
+        reaped = (int(f[13]) + int(f[14])) / _TICK  # cutime, cstime
+        comm = _comm(pid)
+        if comm == "java":
+            out["jvm"] += own
+            out["reaped"] += reaped
+        elif comm.startswith("python"):
+            out["py_workers"] += own + reaped
+    return out
 
 
 def main() -> None:
@@ -78,9 +108,16 @@ def main() -> None:
             (pdir / f"{name}_{tag}.txt").write_text(buf.getvalue())
             spark.catalog.clearCache()
         cold, _ = time_query(spark, name, sf_dir)
+        cpu0 = cpu_split()
         with tracer.span(name):
             wall, _ = time_query(spark, name, sf_dir)
+        cpu = {k: v - cpu0[k] for k, v in cpu_split().items()}
         print(f"WALL {name} cold={cold:.3f}s warm={wall:.3f}s", flush=True)
+        print(
+            f"CPU {name} jvm_less_jit={cpu['jvm']:.2f}s "
+            f"py_workers={cpu['py_workers']:.2f}s reaped={cpu['reaped']:.2f}s",
+            flush=True,
+        )
 
     spark.stop()
     log = parse_event_log(find_event_log(evdir))
