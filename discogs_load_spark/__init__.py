@@ -8,8 +8,8 @@ surface Spark-first:
 - ``sources``   : XML/parquet/CSV/JSON readers (reference main.rs:42-102)
 - ``operators`` : shred/dedup/join/agg/text/similarity operators (SURVEY §2)
 - ``sinks``     : JDBC/Postgres-COPY/parquet writers (reference db.rs)
-- ``queries``   : the declared, oracle-checked query surface
-- ``streaming`` : structured-streaming duals of the batch operators
+- ``queries``   : the declared, oracle-checked query surface, batch and
+  structured-streaming
 
 Everything is built on the DataFrame API so Catalyst/AQE pick physical plans;
 Python UDFs appear only where built-ins genuinely cannot express semantics.

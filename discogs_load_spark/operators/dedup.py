@@ -192,23 +192,6 @@ def minhash_signatures(
     return minhash_signatures_from_shingles(out, id_col, n_hashes, "__sh")
 
 
-def oph_minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_hashes: int = DEFAULT_N_HASHES,
-    k: int = 3,
-) -> DataFrame:
-    """One-permutation MinHash over raw text — shingles in-plan, then
-    delegates to :func:`oph_minhash_signatures_from_shingles` (the core
-    the signature index path shares). See that function for the
-    algorithm and the honest measurement notes."""
-    out = _shingle_col(df, text_col, k, "__sh")
-    return oph_minhash_signatures_from_shingles(
-        out, id_col, n_hashes, "__sh"
-    )
-
-
 def oph_minhash_signatures_from_shingles(
     shf: DataFrame,
     id_col: str,

@@ -6,7 +6,7 @@ Spark-side design for image/audio/video at 100 TB:
   blobs, keeping parquet row groups scannable);
 - typed metadata (modality, byte length, checksum) travels alongside so
   filters/partition pruning never touch the bytes;
-- decode / feature-extract / resize / frame-sample run as Arrow-batched
+- render / decode / hash / frame-sample run as Arrow-batched
   ``mapInPandas`` stages — per-batch Python, schema declared up front,
   partition-parallel.
 
@@ -15,11 +15,10 @@ uncompressed formats whose byte layout is pure public spec — BMP
 (24-bit BI_RGB: BGR channel order, bottom-up rows, 4-byte row padding) and
 PPM (P6 binary, whitespace/comment header grammar). :func:`encode_bmp` is
 the matching writer. Compressed formats (JPEG/PNG/audio/video) need
-PIL/ffmpeg, absent from this container: for those payloads
-:func:`extract_features` falls back to a deterministic sha256-derived
-vector and emits an explicit ``decoded = false`` column (the decode
-attempt itself is gated on ``modality == 'image'`` so byte coincidences
-in text/audio payloads can never switch semantics).
+PIL/ffmpeg, which the package does not depend on: the decode stages
+(:func:`decode_image_stats`, :func:`image_ahash`) drop payloads that do
+not parse, and :func:`sample_frames` cuts fixed byte windows instead of
+seeking keyframes.
 """
 
 from __future__ import annotations
@@ -28,8 +27,6 @@ import struct
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
-
-FEATURE_DIM = 8
 
 
 def attach_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -147,77 +144,6 @@ def _decode_ppm(payload: bytes) -> tuple[int, int, bytes]:
     if len(payload) < pos + n:
         raise ValueError("truncated PPM pixel array")
     return width, height, bytes(payload[pos : pos + n])
-
-
-def image_features(payload: bytes) -> list[float]:
-    """FEATURE_DIM floats from a REAL decode: [width, height, r_sum,
-    g_sum, b_sum, min_byte, max_byte, n_pixels]. Exact in float32 for
-    images under ~65k pixels (sums stay below 2^24); the oracle-grade
-    integer path is :func:`decode_image_stats`, which keeps bigints."""
-    width, height, rgb = decode_image(payload)
-    arr = np.frombuffer(rgb, dtype=np.uint8).reshape(-1, 3)
-    sums = arr.sum(axis=0, dtype=np.int64)
-    return [
-        float(width),
-        float(height),
-        float(sums[0]),
-        float(sums[1]),
-        float(sums[2]),
-        float(arr.min()),
-        float(arr.max()),
-        float(width * height),
-    ]
-
-
-def _fake_features(payload: bytes) -> list[float]:
-    """Deterministic stand-in for a feature extractor: 8 floats from the
-    sha256 digest, scaled to [0, 1)."""
-    import hashlib
-
-    digest = hashlib.sha256(payload).digest()
-    return [b / 256.0 for b in digest[:FEATURE_DIM]]
-
-
-def extract_features(df: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    Real plumbing: mapInPandas with an explicit output schema, one Python
-    worker per partition, Arrow transfer both ways. The decode attempt is
-    GATED on ``modality == 'image'`` (the typed metadata travels with the
-    payload precisely so stages can branch without sniffing bytes — a
-    text/audio payload that happens to start with ``BM`` must not switch
-    feature semantics). Image payloads that parse get REAL BMP/PPM
-    width/height/channel-sum features and ``decoded = true``; everything
-    else gets the deterministic sha256 fallback with ``decoded = false``
-    — compressed codecs aren't in this container (see module docstring)."""
-    from ..session import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
-    schema = (
-        "doc_id bigint, modality string, n_bytes int, "
-        "features array<float>, decoded boolean"
-    )
-
-    def one(modality: str, payload: bytes) -> tuple[list[float], bool]:
-        if modality == "image":
-            try:
-                return image_features(payload), True
-            except (ValueError, IndexError):
-                pass
-        return _fake_features(payload), False
-
-    def run(batches):
-        for pdf in batches:
-            out = pdf[["doc_id", "modality", "n_bytes"]].copy()
-            pairs = [
-                one(m, bytes(p))
-                for m, p in zip(pdf["modality"], pdf["payload"])
-            ]
-            out["features"] = [f for f, _ in pairs]
-            out["decoded"] = [d for _, d in pairs]
-            yield out
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def render_procedural_bmp(
@@ -363,44 +289,6 @@ def decode_image_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 rows,
                 columns=[id_col, "width", "height", "r_sum", "g_sum", "b_sum"],
             )
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def resize_images(
-    df: DataFrame, width: int = 64, height: int = 64
-) -> DataFrame:
-    """Arrow-batched image resize stage (1 row in → 1 row out).
-
-    Plumbing is real: mapInPandas, declared schema, partition-parallel.
-    The codec call is the stub — a real deployment swaps the body for
-    PIL/opencv decode→resize→re-encode. The fake output is deterministic:
-    payload sha256 re-keyed with the target dims, n_bytes = w*h*3 (RGB),
-    so tests can assert exact values and the stage composes downstream.
-    """
-    from ..session import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
-    schema = (
-        "doc_id bigint, modality string, width int, height int, "
-        "n_bytes int, checksum string"
-    )
-
-    def run(batches):
-        import hashlib
-
-        for pdf in batches:
-            out = pdf[["doc_id", "modality"]].copy()
-            out["width"] = width
-            out["height"] = height
-            out["n_bytes"] = width * height * 3
-            out["checksum"] = [
-                hashlib.sha256(
-                    bytes(p) + f":{width}x{height}".encode()
-                ).hexdigest()
-                for p in pdf["payload"]
-            ]
-            yield out
 
     return df.mapInPandas(run, schema=schema)
 

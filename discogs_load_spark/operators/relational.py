@@ -175,8 +175,8 @@ def sessionize(
     Adds an integer ``session_seq`` (1-based per key). Classic lag-then-
     cumulative-sum over one window — a single shuffle on the key. Gap math is
     done in epoch microseconds (exact integers) for cross-engine determinism.
-    The streaming dual is ``session_window``/``applyInPandasWithState`` in
-    discogs_load_spark.streaming.
+    The streaming dual is q114's ``session_window`` aggregate in
+    queries/streaming.py.
     """
     order = [F.col(ts_col)] + [F.col(c) for c in (order_tiebreak or [])]
     w = W.partitionBy(*key_cols).orderBy(*order)

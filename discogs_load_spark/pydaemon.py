@@ -9,8 +9,9 @@ spark-core jar (~5.4k entries): 0.14-0.31 s of CPU per task. Python 3.13
 made the invalidation lazy (it drops the cached directory and reads it
 again only when an import needs it); this module makes it lazy on older
 versions by skipping the re-read while the archive's (mtime, size) is
-unchanged, so a zip rewritten in place or removed is still re-read. On
-3.13+ it changes nothing.
+unchanged, so a zip rewritten in place or removed is still re-read. The
+daemon stamps its importers once before forking, so a worker's first task
+skips the re-read as well. On 3.13+ it changes nothing.
 
 Run as ``python -m discogs_load_spark.pydaemon`` through
 ``spark.python.daemon.module`` (``session.get_spark`` sets it).
@@ -18,6 +19,7 @@ Run as ``python -m discogs_load_spark.pydaemon`` through
 
 from __future__ import annotations
 
+import importlib
 import os
 import sys
 import zipimport
@@ -41,8 +43,11 @@ def lazy_invalidate_caches(self: zipimport.zipimporter) -> None:
 
 
 if __name__ == "__main__":
-    if sys.version_info < (3, 13):
-        zipimport.zipimporter.invalidate_caches = lazy_invalidate_caches
     from pyspark.daemon import manager
 
+    if sys.version_info < (3, 13):
+        zipimport.zipimporter.invalidate_caches = lazy_invalidate_caches
+        # stamp every importer the daemon holds: the workers it forks
+        # inherit the stamps and skip the re-read on their first task too
+        importlib.invalidate_caches()
     manager()

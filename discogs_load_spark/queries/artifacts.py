@@ -122,7 +122,7 @@ ARTIFACTS: dict[str, Artifact] = {
         Artifact(
             "cdc_delta_landing", "queries.dedup", "documents",
             tag="delta-v1", frame="_cdc_delta_frame", root="CDC_INDEX_DIR",
-            inputs=(*_SPLIT, "queries.streaming.cdc_landed_prefix_chars"),
+            inputs=(*_SPLIT, "queries.streaming.CDC_LANDED_PREFIX_CHARS"),
             upstream=("cdc_chunk_index",),
             partition_by="queries.streaming.CDC_LANDED_PART_COL",
         ),

@@ -16,7 +16,7 @@ at 100 TB scale, and each is written in its scalable form:
     a pre-aggregated count.
 
 The reference has no event-time capability at all (SURVEY §2.C streaming:
-none); this module plus streaming/ops.py is the engine's superset.
+none); this module plus queries/streaming.py is the engine's superset.
 """
 
 from __future__ import annotations

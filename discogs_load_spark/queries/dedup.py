@@ -1766,9 +1766,10 @@ def _cdc_chunks_duckdb(with_len: bool = False) -> str:
 
 def _token_frame(docs: DataFrame, carry: tuple[str, ...]) -> DataFrame:
     """(doc_id, *carry, __toks) — normalization + tokenization stay
-    JVM-side (codegen'd regexp_replace/split) in BOTH chunker impls, so
-    the Arrow path can never drift from the HOF path on the one step
-    where engines disagree in subtle ways (locale lowercasing)."""
+    JVM-side (codegen'd regexp_replace/split from the textfns fragments
+    the DuckDB oracle renders in its own dialect), so the Arrow chunker
+    never re-implements the one step where engines disagree in subtle
+    ways (locale lowercasing)."""
     from ..functions.textfns import norm_sql, tokens_sql
 
     return docs.select(
@@ -1780,62 +1781,25 @@ def _token_frame(docs: DataFrame, carry: tuple[str, ...]) -> DataFrame:
     )
 
 
-def _cdc_chunk_frame_hof(
+def _cdc_chunk_frame(
     docs: DataFrame, with_len: bool = False, carry: tuple[str, ...] = ()
 ) -> DataFrame:
-    """REFEREE implementation (the q112 discipline — VERDICT r09 item 1):
-    pure JVM array HOFs, zero Python in the plan. Kept as the
-    equivalence referee for the Arrow path (tests pin bitwise equality);
-    ~2.2 ms/doc of interpreted-Catalyst-lambda cost makes it the slow
-    path in production. All per-row work is array HOFs over
-    materialized columns (lambda variables only — the shingles_sql
-    O(tokens²) trap)."""
-    from ..functions.textfns import shingles_sql
+    """(doc_id, *carry, chunk_hash[, chunk_tokens]) with multiplicity —
+    the exploded CDC chunk table shared by the CDC suite (q202/q205/
+    q208/q211/q212) and the streamed maintainers.
 
-    d = (
-        _token_frame(docs, carry)
-        .withColumn("__sh", F.expr(shingles_sql("__toks", 4, "spark")))
-        .withColumn(
-            "__b",
-            F.expr(
-                "filter(transform(__sh, (s, g) -> "
-                "IF(md5(s) LIKE '0%', g + 4, -1)), x -> x != -1)"
-            ),
-        )
-        .withColumn(
-            "__ch",
-            F.expr(
-                "filter(zip_with(concat(array(0), __b), "
-                "concat(__b, array(size(__toks))), "
-                "(s, e) -> IF(e > s, struct("
-                "md5(array_join(slice(__toks, s + 1, e - s), ' ')) AS h, "
-                "CAST(e - s AS BIGINT) AS l), NULL)), "
-                "c -> c IS NOT NULL)"
-            ),
-        )
-    )
-    out = d.select("doc_id", *carry, F.explode("__ch").alias("__c"))
-    cols = ["doc_id", *carry, F.col("__c.h").alias("chunk_hash")]
-    if with_len:
-        cols.append(F.col("__c.l").alias("chunk_tokens"))
-    return out.select(*cols)
-
-
-def _cdc_chunk_frame_arrow(
-    docs: DataFrame, with_len: bool = False, carry: tuple[str, ...] = ()
-) -> DataFrame:
-    """Arrow-batched chunker (VERDICT r09 item 1): tokens are computed
-    JVM-side (same expression as the HOF referee), then one mapInPandas
-    stage does the md5 boundary/content hashing per Arrow batch — the
-    q193 codec pattern. Still map-side only: no shuffle is introduced,
-    the fan-out happens inside the UDF, and distribution follows the
-    scan partitioning. Why Python wins here: the HOF form pays
-    interpreted-Catalyst-lambda evaluation per 4-gram (~2.2 ms/doc,
-    ARCHITECTURE round-9 telemetry) while hashlib.md5 over offset-sliced
-    bytes of the pre-joined token string is a tight C loop. Chunk
-    semantics are BYTE-IDENTICAL to the referee: tokens are [a-z0-9]+
-    (pure ASCII after norm), so char offsets == byte offsets and
-    md5 over the byte slice equals md5 over the SQL concat."""
+    Arrow-batched chunker (VERDICT r09 item 1): tokens are computed
+    JVM-side, then one mapInPandas stage does the md5 boundary/content
+    hashing per Arrow batch — the q193 codec pattern. Map-side only: no
+    shuffle is introduced, the fan-out happens inside the UDF, and
+    distribution follows the scan partitioning. Why Python wins here:
+    the array-HOF form pays interpreted-Catalyst-lambda evaluation per
+    4-gram (~2.2 ms/doc, ARCHITECTURE round-9 telemetry) while
+    hashlib.md5 over offset-sliced bytes of the pre-joined token string
+    is a tight C loop. Chunks are BYTE-IDENTICAL to the oracle's SQL
+    form: tokens are [a-z0-9]+ (pure ASCII after norm), so char offsets
+    == byte offsets and md5 over the byte slice equals md5 over the SQL
+    concat (tests/test_plans.py pins it against a plain-Python chunker)."""
     from pyspark.sql import types as T
 
     toks = _token_frame(docs, carry)
@@ -1902,22 +1866,6 @@ def _cdc_chunk_frame_arrow(
     return toks.mapInPandas(chunk_batches, schema)
 
 
-def _cdc_chunk_frame(
-    docs: DataFrame,
-    with_len: bool = False,
-    carry: tuple[str, ...] = (),
-    impl: str | None = None,
-) -> DataFrame:
-    """(doc_id, chunk_hash[, chunk_tokens][, *carry]) with multiplicity —
-    the exploded CDC chunk table shared by the CDC suite (q202/q205/
-    q208/q211/q212). Default impl is the Arrow chunker; the HOF referee
-    stays selectable (SPARK_GRAFT_CDC_IMPL=hof) and equality is pinned
-    in tests/test_adaptive_ops.py."""
-    impl = impl or os.environ.get("SPARK_GRAFT_CDC_IMPL", "arrow")
-    fn = _cdc_chunk_frame_hof if impl == "hof" else _cdc_chunk_frame_arrow
-    return fn(docs, with_len=with_len, carry=carry)
-
-
 CDC_INDEX_DIR = os.environ.get(
     "SPARK_GRAFT_CDC_INDEX_DIR", "/tmp/spark_graft_cdc_index"
 )
@@ -1950,7 +1898,7 @@ def cdc_chunk_index(
 def _cdc_delta_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deferred: streaming imports us (the landed-layout constants are
     # the streamed maintainer's, shared so both landings stay one layout)
-    from .streaming import CDC_LANDED_PART_COL, cdc_landed_prefix_chars
+    from .streaming import CDC_LANDED_PART_COL, CDC_LANDED_PREFIX_CHARS
 
     docs = _docs(spark, sf_dir).filter((F.col("doc_id") % NEW_MOD) == NEW_REM)
     return (
@@ -1959,7 +1907,7 @@ def _cdc_delta_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn(
             CDC_LANDED_PART_COL,
-            F.substring("chunk_hash", 1, cdc_landed_prefix_chars()),
+            F.substring("chunk_hash", 1, CDC_LANDED_PREFIX_CHARS),
         )
     )
 
@@ -1970,7 +1918,7 @@ def cdc_delta_landing(
     """(chunk_hash, pb) — the DELTA generation of the CDC chunk index as
     a cached artifact: the new-snapshot documents' DISTINCT chunk
     hashes, landed hash-prefix-partitioned exactly like q219's streamed
-    landing (``pb`` = cdc_landed_prefix_chars() leading hex chars) — the
+    landing (``pb`` = CDC_LANDED_PREFIX_CHARS leading hex chars) — the
     'delta' side of the CDC LSM read-merge (q229), the CDC sibling of
     sig_index.sig_delta_landing. Keyed on the base chunk index's
     fingerprint plus the snapshot modulus and the prefix width."""
@@ -2088,12 +2036,10 @@ def q202_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     so an insertion near the top of a near-copy re-synchronizes within a
     chunk or two and the shared tail still dedups — the property
     fixed-size chunking lacks and the reason CDC is the shape backup
-    systems and crawl-dedup pipelines use. Everything is per-row array
-    HOFs until the single chunk-grain groupBy: boundary detection rides
-    the 4-shingle array (one indexed transform+filter), chunk content
-    hashes come from zip_with over the boundary-offset arrays (lambda
-    variables only — the shingles_sql O(tokens²) trap), so the map side
-    emits (doc_id, chunk_hash) with no shuffle before the rollup.
+    systems and crawl-dedup pipelines use. The chunk stage is map-side
+    (the Arrow chunker, _cdc_chunk_frame), so the map side emits
+    (doc_id, chunk_hash) with no shuffle before the single chunk-grain
+    rollup.
     Output: chunks appearing in >= 2 docs with occurrence counts and the
     min-id keeper — bounded by shared-chunk cardinality. Reads the
     materialized chunk index (cdc_chunk_index) so the chunk stage is

@@ -16,9 +16,9 @@ aggregates add in arrival order, which would make a raw double SUM
 hash-unstable.
 
 Scale shape: the watermark bounds state to O(active windows) regardless of
-stream length (streaming/ops.py docstring); the memory sink is test/driver
-plumbing only — production composes writeStream.foreachBatch → JDBC/parquet
-(sinks/) around the same transformation.
+stream length; the memory sink is test/driver plumbing only — production
+composes writeStream.foreachBatch → JDBC/parquet (sinks/) around the same
+transformation.
 """
 
 from __future__ import annotations
@@ -31,12 +31,11 @@ from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
-from pyspark.sql.types import StructType
 
 from ..functions.numeric import dec_sum, dec_sum_sql
 from ..session import load_tables, scoped_conf
-from ..streaming.ops import EVENT_SCHEMA
 from .artifacts import source_identity
 from .registry import register
 
@@ -157,17 +156,35 @@ def _new_vectors(embeddings: DataFrame) -> DataFrame:
     return embeddings.filter((F.col("vec_id") % NEW_MOD) == NEW_REM)
 
 
+EVENT_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
+
+# File count of the throttled (maxFilesPerTrigger=4) sources: 3 micro-
+# batches per drain, so COMPACT_EVERY=3 fires exactly one in-stream
+# compaction. Read when a source is built, so a test can set 24 (6
+# batches, two swaps); the count folds into the copy's cache key.
+STREAM_SOURCE_FILES = 12
+
+
 @dataclass(frozen=True)
 class _StreamSource:
     """One fixture-derived stream-source copy: the fixture table it is
     cut from, the frame written from that table, the reader schema (None:
     the table's own) and the micro-batch throttle. A throttled source is
-    written as ``stream_source_files()`` files, so every drain spans
+    written as ``STREAM_SOURCE_FILES`` files, so every drain spans
     files / maxFilesPerTrigger micro-batches at any fixture scale."""
 
     table: str
     frame: Callable[[DataFrame], DataFrame]
-    schema: StructType | None = None
+    schema: T.StructType | None = None
     max_files_per_trigger: int | None = None
 
 
@@ -202,7 +219,7 @@ def stream_source(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     change or a file-count probe never serves a stale copy."""
     src = STREAM_SOURCES[name]
     table = load_tables(spark, sf_dir, [src.table])[src.table]
-    nf = stream_source_files() if src.max_files_per_trigger else None
+    nf = STREAM_SOURCE_FILES if src.max_files_per_trigger else None
     ident = (
         f"{source_identity(src.table, sf_dir)}"
         f"|rg{STREAM_SOURCE_ROW_GROUP_BYTES}|nf{nf}"
@@ -462,8 +479,8 @@ def q110_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Unwatermarked ``dropDuplicates`` keeps one state row per key forever —
     correct for a drained bounded test; a production stream bounds state
-    with ``dropDuplicatesWithinWatermark`` (streaming/ops.dedup_stream),
-    which trades exactness outside the lateness horizon. Duplicates here
+    with ``withWatermark`` + ``dropDuplicatesWithinWatermark``, which
+    trades exactness outside the lateness horizon. Duplicates here
     may arrive in DIFFERENT micro-batches (file order is not promised),
     which is exactly what the unbounded state handles deterministically.
     """
@@ -595,6 +612,42 @@ def q115_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def purchase_click_join(
+    purchases: DataFrame,
+    clicks: DataFrame,
+    horizon: str = "1 hour",
+    watermark: str = "2 hours",
+) -> DataFrame:
+    """Stream-stream interval join: each purchase matched with the same
+    user's clicks in the following ``horizon``.
+
+    Both sides carry watermarks and the join condition bounds event time in
+    BOTH directions — that pair of constraints is what lets Spark evict
+    buffered rows (state is O(rows inside the horizon window per side), not
+    O(stream)). Without the time bound, a stream-stream join must buffer a
+    side forever. The equi key (user_id) carries the state-store sharding,
+    so state scales out with the shuffle like every other keyed operator.
+    """
+    p = purchases.select(
+        F.col("user_id").alias("p_user"),
+        F.col("event_id").alias("p_event"),
+        F.col("ts").alias("p_ts"),
+    ).withWatermark("p_ts", watermark)
+    c = clicks.select(
+        F.col("user_id").alias("c_user"),
+        F.col("event_id").alias("c_event"),
+        F.col("ts").alias("c_ts"),
+        F.col("value").alias("c_value"),
+    ).withWatermark("c_ts", watermark)
+    return p.join(
+        c,
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("c_ts") > F.col("p_ts"))
+        & (F.col("c_ts") <= F.col("p_ts") + F.expr(f"INTERVAL {horizon}")),
+        "inner",
+    ).select("p_event", "p_user", "c_event", "c_ts", "c_value")
+
+
 @register(
     "q116_stream_stream_join",
     oracle="""
@@ -614,10 +667,8 @@ def q116_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion — against the batch interval-join oracle. Inner join
     results emit as matches arrive (append mode); the two-sided time
     bound in the condition is what lets the state store evict buffered
-    rows (streaming/ops.purchase_click_join docstring). No float
-    aggregation anywhere, so the row set is trivially deterministic."""
-    from ..streaming.ops import purchase_click_join
-
+    rows (purchase_click_join docstring). No float aggregation anywhere,
+    so the row set is trivially deterministic."""
     # one stream_source call per join side: the plan keeps two
     # independent file sources, each tracking its own offsets
     purchases = stream_source(spark, sf_dir, "events").filter(
@@ -940,34 +991,13 @@ def q218_streaming_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # micro-batch's anti-join PRUNES to the directories its candidate hashes
 # can live in. 1 hex char = 16 buckets at fixture scale: bucket count is
 # a target-file-size knob (the same knob as any bucketed lake table —
-# a 100 TB deployment raises SPARK_GRAFT_CDC_LANDED_CHARS so a steady-
-# state delta touches a strict subset), and the MEASURED cost of over-
-# bucketing is real: at 256 buckets batch k's anti-join opened k x 256
-# tiny files and the sf1 drain read 56.7 s vs 14.7 flat (SCALE_PROBES
-# r12) — file-open fixed costs, not data. The rollup's 1-char bucket is
-# derived from chunk_hash independently, so the OUTPUT is
-# layout-invariant.
-def cdc_landed_prefix_chars() -> int:
-    """Bucket-count knob, read PER CALL (like sig_index.hashed_mode) so
-    setting SPARK_GRAFT_CDC_LANDED_CHARS after import — notebooks,
-    in-process tooling, the scale probes — takes effect (ADVICE r12:
-    the module-import-time read silently ignored late sets)."""
-    return int(os.environ.get("SPARK_GRAFT_CDC_LANDED_CHARS", "1"))
-
-
-def stream_source_files() -> int:
-    """Probe knob: file count of the index maintainers' own stream
-    sources (``SPARK_GRAFT_STREAM_FILES``, default 12; read PER CALL
-    like cdc_landed_prefix_chars so late sets take effect). At
-    maxFilesPerTrigger=4 the default yields >= 3 micro-batches per
-    drain — exactly ONE in-stream compaction at COMPACT_EVERY=3, so
-    the amortization claim ("rewrites amortized 1/COMPACT_EVERY") was
-    only ever measured at n_swaps=1. Setting 24 yields 6 batches and
-    TWO in-stream swaps (the second rewriting an already-compacted +
-    newly-appended landing) with the drain-end finalize elided — the
-    r13 verdict's cadence probe. The count is folded into the cached
-    source path, so a probe run can never poison the default cache."""
-    return int(os.environ.get("SPARK_GRAFT_STREAM_FILES", "12"))
+# a 100 TB deployment raises it so a steady-state delta touches a strict
+# subset), and the MEASURED cost of over-bucketing is real: at 256
+# buckets batch k's anti-join opened k x 256 tiny files and the sf1
+# drain read 56.7 s vs 14.7 flat (SCALE_PROBES r12) — file-open fixed
+# costs, not data. The rollup's 1-char bucket is derived from chunk_hash
+# independently, so the OUTPUT is layout-invariant.
+CDC_LANDED_PREFIX_CHARS = 1
 CDC_LANDED_PART_COL = "pb"
 CDC_LANDED_SCHEMA = f"chunk_hash string, {CDC_LANDED_PART_COL} string"
 
@@ -1000,7 +1030,7 @@ def _land_novel_hashes(
         .distinct()
         .withColumn(
             CDC_LANDED_PART_COL,
-            F.substring("chunk_hash", 1, cdc_landed_prefix_chars()),
+            F.substring("chunk_hash", 1, CDC_LANDED_PREFIX_CHARS),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

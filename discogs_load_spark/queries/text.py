@@ -4,8 +4,6 @@ counting, quality scoring, language ID, fingerprinting (north-star ops).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.numeric import dec_avg, dec_avg_sql
@@ -1386,37 +1384,26 @@ def _gd_oracle() -> str:
     return head + "," + ",".join(steps) + f"\n    SELECT * FROM (\n{tail}\n    ) ORDER BY round"
 
 
-def _stopword_feature_frame(
-    docs: DataFrame, y_sql: str, y_type: str, impl: str | None = None
-) -> DataFrame:
+def _stopword_feature_frame(docs: DataFrame, y_sql: str, y_type: str) -> DataFrame:
     """(x, y) stopword-ratio feature frame shared by the classifier-
     training (q176) and AUC-evaluation (q177) pair — x =
     stopword_ratio_sql's exact value, y = the caller's label expression.
 
-    Default impl is Arrow (r15, guide §4 / the CDC-chunker precedent):
-    the SQL form's ``filter(toks, t -> t IN (...))`` is an interpreted
-    Catalyst lambda paying a per-token linear IN scan (~6.3 s for the
-    sf1 featurize pass — the whole cost of both queries' corpus pass),
-    while a Python frozenset lookup over the SAME normalized string is a
-    tight C loop (measured 1.8 s, x3.5). Bitwise equality with the HOF
-    referee (SPARK_GRAFT_SW_IMPL=hof) is test-pinned: the normalize
-    happens JVM-side in both forms; Python's str.split(' ') equals
-    Spark's split on the single-space-collapsed norm; hits and token
-    counts are exact ints, and int/int float division is correctly
-    rounded in both runtimes, so the double x is bit-identical.
-    NULL text -> NULL norm -> NULL x in both forms; '' norm -> 0.0."""
+    Arrow (r15, guide §4 / the CDC-chunker precedent): the SQL form's
+    ``filter(toks, t -> t IN (...))`` is an interpreted Catalyst lambda
+    paying a per-token linear IN scan (~6.3 s for the sf1 featurize pass
+    — the whole cost of both queries' corpus pass), while a Python
+    frozenset lookup over the SAME normalized string is a tight C loop
+    (measured 1.8 s, x3.5). Bitwise equality with the SQL form the
+    oracles use is test-pinned (tests/test_new_ops.py): the normalize
+    happens JVM-side; Python's str.split(' ') equals Spark's split on the
+    single-space-collapsed norm; hits and token counts are exact ints,
+    and int/int float division is correctly rounded in both runtimes, so
+    the double x is bit-identical. NULL text -> NULL norm -> NULL x;
+    '' norm -> 0.0."""
     from pyspark.sql import types as T
 
-    impl = impl or os.environ.get("SPARK_GRAFT_SW_IMPL", "arrow")
-    toks = tokens_sql(norm_sql("text", "spark"), "spark")
     y_col = F.expr(y_sql).cast(y_type)
-    if impl == "hof":
-        return docs.select(
-            F.expr(stopword_ratio_sql(toks, STOPWORDS["en"], "spark")).alias(
-                "x"
-            ),
-            y_col.alias("y"),
-        )
     base = docs.select(
         F.expr(norm_sql("text", "spark")).alias("__n"), y_col.alias("y")
     )
@@ -1483,8 +1470,8 @@ def q176_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     docs = _docs(spark, sf_dir)
-    # Arrow featurize (shared with q177; HOF referee switchable) — the
-    # corpus pass was the whole sf1 cost of this query (r15)
+    # Arrow featurize (shared with q177) — the corpus pass was the whole
+    # sf1 cost of this query (r15)
     f = _stopword_feature_frame(
         docs, "CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END", "double"
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1549,7 +1536,7 @@ def _auc_oracle() -> str:
     oracle=_auc_oracle(),
     # python-seam: the stopword featurize is Arrow BY MEASUREMENT (r15,
     # _stopword_feature_frame — x3.5 over the interpreted Catalyst
-    # lambda at sf1, bitwise equality pinned against the HOF referee in
+    # lambda at sf1, bitwise equality pinned against the SQL form in
     # tests/test_new_ops.py), the q193 copy-codec precedent
     tags=("text", "quality", "evaluation", "auc", "python-seam"),
 )
@@ -1580,8 +1567,8 @@ def q177_feature_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     docs = _docs(spark, sf_dir)
-    # Arrow featurize (shared with q176; HOF referee switchable) — the
-    # score column must stay bitwise identical to q176's feature, which
+    # Arrow featurize (shared with q176) — the score column must stay
+    # bitwise identical to q176's feature, which
     # the shared helper guarantees by construction
     f = _stopword_feature_frame(
         docs, "CASE WHEN lang = 'en' THEN 1 ELSE 0 END", "int"

@@ -17,7 +17,8 @@ oracle-checkable. The docstrings say so; the point is the API surface and
 its plan shape (ArrowEvalPython / BatchEvalPythonUDTF stages), not a
 semantic gap. When semantics genuinely exceed the built-ins (codec decode,
 stateful streaming), the same machinery is used for real in
-operators/multimodal.py and streaming/ops.py.
+operators/multimodal.py and q115's applyInPandasWithState
+(queries/streaming.py).
 """
 
 from __future__ import annotations

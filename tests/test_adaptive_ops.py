@@ -136,7 +136,8 @@ def _md5(s: str) -> str:
     return hashlib.md5(s.encode()).hexdigest()
 
 
-def _cdc_chunks(tokens: list[str], w: int = 4) -> list[str]:
+def _cdc_spans(tokens: list[str], w: int = 4) -> list[tuple[int, int]]:
+    """(start, end) token offsets of each chunk."""
     bounds = [
         i + w
         for i in range(len(tokens) - w + 1)
@@ -144,9 +145,11 @@ def _cdc_chunks(tokens: list[str], w: int = 4) -> list[str]:
     ]
     starts = [0] + bounds
     ends = bounds + [len(tokens)]
-    return [
-        _md5(" ".join(tokens[s:e])) for s, e in zip(starts, ends) if e > s
-    ]
+    return [(s, e) for s, e in zip(starts, ends) if e > s]
+
+
+def _cdc_chunks(tokens: list[str], w: int = 4) -> list[str]:
+    return [_md5(" ".join(tokens[s:e])) for s, e in _cdc_spans(tokens, w)]
 
 
 def test_q202_matches_python_cdc_reference(spark):

@@ -14,7 +14,6 @@ from discogs_load_spark.operators.multimodal import (
     decode_image,
     decode_image_stats,
     encode_bmp,
-    image_features,
     render_procedural_bmp,
 )
 
@@ -87,33 +86,9 @@ def test_rejects_unsupported_payloads():
         decode_image(bytes(payload))
 
 
-def test_image_features_are_decode_derived():
-    rgb = bytes([200, 10, 0, 100, 30, 0, 1, 2, 3, 4, 5, 6])
-    feats = image_features(encode_bmp(2, 2, rgb))
-    assert feats == [2.0, 2.0, 305.0, 47.0, 9.0, 0.0, 200.0, 4.0]
-
-
 def _expected_sums(doc_id: int, w: int, h: int) -> tuple[int, int, int]:
     vals = [(doc_id * 31 + k) % 256 for k in range(w * h * 3)]
     return sum(vals[0::3]), sum(vals[1::3]), sum(vals[2::3])
-
-
-def test_extract_features_gated_on_modality(spark):
-    # a NON-image payload whose bytes happen to be a valid BMP must stay on
-    # the sha256 fallback (decoded=false); the same bytes under
-    # modality='image' take the real decode path (decoded=true)
-    from discogs_load_spark.operators.multimodal import extract_features
-
-    bmp = encode_bmp(2, 2, bytes(range(12)))
-    df = spark.createDataFrame(
-        [(1, "text", len(bmp), bmp), (2, "image", len(bmp), bmp),
-         (3, "image", 3, b"not")],
-        "doc_id long, modality string, n_bytes int, payload binary",
-    )
-    rows = {r.doc_id: r for r in extract_features(df).collect()}
-    assert not rows[1].decoded and all(0 <= x < 1 for x in rows[1].features)
-    assert rows[2].decoded and rows[2].features[:2] == [2.0, 2.0]
-    assert not rows[3].decoded  # image modality, unparseable bytes
 
 
 def test_render_decode_stats_match_closed_form(spark):

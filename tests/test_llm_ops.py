@@ -12,7 +12,6 @@ from discogs_load_spark.operators.dedup import (
     minhash_signatures,
     simhash,
 )
-from discogs_load_spark.operators.multimodal import attach_payload, extract_features
 from discogs_load_spark.operators.similarity import cosine_topk, lsh_topk
 from discogs_load_spark.session import load_tables
 
@@ -108,15 +107,6 @@ def test_lsh_topk_subset_of_bruteforce_scores(spark):
         assert brute[(r.query_id, r.neighbor_id)] == r.cosine
 
 
-def test_extract_features_shape_and_determinism(spark):
-    feats = extract_features(attach_payload(_docs(spark).limit(20)))
-    rows1 = {r.doc_id: list(r.features) for r in feats.collect()}
-    rows2 = {r.doc_id: list(r.features) for r in feats.collect()}
-    assert rows1 == rows2  # deterministic
-    assert all(len(v) == 8 for v in rows1.values())
-    assert all(0.0 <= x < 1.0 for v in rows1.values() for x in v)
-
-
 def test_salted_join_matches_plain_join(spark):
     from discogs_load_spark.operators.relational import salted_join
 
@@ -131,20 +121,6 @@ def test_salted_join_matches_plain_join(spark):
         .groupBy("c_custkey").count()
     )
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_resize_images_deterministic_schema_and_values(spark):
-    from discogs_load_spark.operators.multimodal import attach_payload, resize_images
-
-    docs = load_tables(spark, SF_SMALL, ["documents"])["documents"]
-    mm = attach_payload(docs.limit(20))
-    out = resize_images(mm, 32, 16)
-    rows = {r.doc_id: r for r in out.collect()}
-    assert len(rows) == 20
-    assert all(r.width == 32 and r.height == 16 for r in rows.values())
-    assert all(r.n_bytes == 32 * 16 * 3 for r in rows.values())
-    rows2 = {r.doc_id: r.checksum for r in resize_images(mm, 32, 16).collect()}
-    assert {k: v.checksum for k, v in rows.items()} == rows2
 
 
 def test_sample_frames_fanout_matches_payload_size(spark):
@@ -470,10 +446,15 @@ def test_oph_minhash_recovers_planted_neardups(spark):
     LSH banding, every signature slot must be densified (no NULLs), and a
     jaccard ~0.98 pair collides on all buckets so OPH finds at least the
     pairs the verify step confirms at >= 0.8."""
-    from discogs_load_spark.operators.dedup import oph_minhash_signatures
+    from discogs_load_spark.operators.dedup import (
+        _shingle_col,
+        oph_minhash_signatures_from_shingles,
+    )
 
     docs = _docs(spark)
-    sigs = oph_minhash_signatures(docs, "doc_id", "text")
+    sigs = oph_minhash_signatures_from_shingles(
+        _shingle_col(docs, "text", 3, "sh"), "doc_id"
+    )
     null_rows = sigs.filter(
         " OR ".join(f"h{i} IS NULL" for i in range(12))
     ).count()
@@ -495,7 +476,10 @@ def test_oph_signatures_match_python_reference(spark):
     import hashlib
     import random
 
-    from discogs_load_spark.operators.dedup import oph_minhash_signatures
+    from discogs_load_spark.operators.dedup import (
+        _shingle_col,
+        oph_minhash_signatures_from_shingles,
+    )
 
     rng = random.Random(20260814)
     words = [f"w{i}" for i in range(40)]
@@ -529,7 +513,9 @@ def test_oph_signatures_match_python_reference(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: tuple(r[f"h{j}"] for j in range(n))
-        for r in oph_minhash_signatures(df, "doc_id", "text", n_hashes=n).collect()
+        for r in oph_minhash_signatures_from_shingles(
+            _shingle_col(df, "text", 3, "sh"), "doc_id", n
+        ).collect()
     }
     assert got == want
 

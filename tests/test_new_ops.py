@@ -233,11 +233,18 @@ def test_stopword_feature_arrow_matches_hof(spark):
     """r15: the q176/q177 stopword-ratio featurize moved from the
     interpreted `filter(toks, t -> t IN (...))` Catalyst lambda to an
     Arrow mapInPandas over the JVM-normalized string (the CDC-chunker
-    precedent). The feature doubles must be BITWISE identical to the HOF
-    referee — q177 groups by the raw double and q176 folds it through
-    five gradient rounds, so a 1-ulp divergence changes hashes."""
+    precedent). The feature doubles must be BITWISE identical to the
+    array-HOF form of stopword_ratio_sql the oracles share — q177 groups
+    by the raw double and q176 folds it through five gradient rounds, so
+    a 1-ulp divergence changes hashes."""
     import struct
 
+    from discogs_load_spark.functions.textfns import (
+        STOPWORDS,
+        norm_sql,
+        stopword_ratio_sql,
+        tokens_sql,
+    )
     from discogs_load_spark.queries.text import _stopword_feature_frame
     from discogs_load_spark.session import load_tables
 
@@ -255,9 +262,13 @@ def test_stopword_feature_arrow_matches_hof(spark):
             for r in rows
         )
 
-    hof = key(_stopword_feature_frame(docs, y, "double", impl="hof").collect())
-    arrow = key(
-        _stopword_feature_frame(docs, y, "double", impl="arrow").collect()
+    toks = tokens_sql(norm_sql("text", "spark"), "spark")
+    hof = key(
+        docs.select(
+            F.expr(stopword_ratio_sql(toks, STOPWORDS["en"], "spark")).alias("x"),
+            F.expr(y).cast("double").alias("y"),
+        ).collect()
     )
+    arrow = key(_stopword_feature_frame(docs, y, "double").collect())
     assert len(hof) > 0
     assert hof == arrow

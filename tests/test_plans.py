@@ -708,28 +708,30 @@ def test_cdc_chunking_stays_map_side_until_rollup(spark):
 
 def test_cdc_chunk_build_is_map_side_both_impls(spark):
     """The chunk BUILD pipeline (what cdc_chunk_index materializes) must
-    be shuffle-free in both implementations: the Arrow path is one
-    scan → project → MapInPandas (no exchange — fan-out happens inside
-    the UDF), the HOF referee is per-row array HOFs + explode. And the
-    two must agree bitwise — that equivalence is what lets the fast
-    path ship behind the referee's oracles."""
-    from discogs_load_spark.queries.dedup import (
-        _cdc_chunk_frame_arrow,
-        _cdc_chunk_frame_hof,
-        _docs,
-    )
+    be shuffle-free: one scan → project → MapInPandas, the fan-out
+    inside the UDF. And it must agree with the plain-Python CDC referee
+    (tests/test_adaptive_ops.py) on every chunk's hash and token length
+    — that equivalence is what lets the Arrow chunker stand in for the
+    SQL form the oracles use."""
+    from discogs_load_spark.queries.dedup import _cdc_chunk_frame, _docs
+
+    from .test_adaptive_ops import _cdc_spans, _md5, _norm_tokens
 
     docs = _docs(spark, SF_SMALL)
-    arrow = _cdc_chunk_frame_arrow(docs, with_len=True, carry=("source",))
-    hof = _cdc_chunk_frame_hof(docs, with_len=True, carry=("source",))
-    ap, hp = formatted_plan(arrow), formatted_plan(hof)
-    assert "MapInPandas" in ap
-    assert "Exchange" not in ap and join_kinds(arrow) == []
-    assert "Generate" in hp and "explode" in hp  # the HOF chunk fan-out
-    assert "Exchange" not in hp and join_kinds(hof) == []
-    assert sorted(map(tuple, arrow.collect())) == sorted(
-        map(tuple, hof.collect())
-    )
+    chunks = _cdc_chunk_frame(docs, with_len=True, carry=("source",))
+    plan = formatted_plan(chunks)
+    assert "MapInPandas" in plan
+    assert "Exchange" not in plan and join_kinds(chunks) == []
+    want = []
+    # bounded: sf0.001 fixture, 500 docs, test-only
+    for r in docs.select("doc_id", "source", "text").collect():
+        toks = _norm_tokens(r.text)
+        want += [
+            (r.doc_id, r.source, _md5(" ".join(toks[s:e])), e - s)
+            for s, e in _cdc_spans(toks)
+        ]
+    assert want
+    assert sorted(map(tuple, chunks.collect())) == sorted(want)
 
 
 def test_keeper_argmax_partially_aggregates(spark):

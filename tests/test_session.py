@@ -177,6 +177,60 @@ def test_lazy_invalidation_rereads_only_a_changed_archive(tmp_path, monkeypatch)
         sys.path_importer_cache.pop(str(archive), None)
 
 
+_FORK_PROBE = """
+import importlib, json, os, runpy, sys, zipimport
+sys.path.insert(0, sys.argv[1])
+sys.path.insert(0, sys.argv[2])
+import forkzip_mod  # the archive's importer now sits in the daemon's cache
+import pyspark.daemon
+
+
+def manager():  # pyspark's daemon forks its workers from here
+    r, w = os.pipe()
+    pid = os.fork()
+    if pid == 0:
+        reads = []
+        read_directory = zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or read_directory(p)
+        importlib.invalidate_caches()  # the worker's first task
+        zips = [
+            k for k, v in sys.path_importer_cache.items()
+            if isinstance(v, zipimport.zipimporter)
+        ]
+        os.write(w, json.dumps({"reads": reads, "zips": zips}).encode())
+        os._exit(0)
+    os.waitpid(pid, 0)
+    print(os.read(r, 1 << 16).decode())
+
+
+pyspark.daemon.manager = manager
+runpy.run_module("discogs_load_spark.pydaemon", run_name="__main__")
+"""
+
+
+@pytest.mark.skipif(
+    sys.version_info >= (3, 13), reason="3.13's zipimport is lazy already"
+)
+def test_forked_worker_inherits_stamped_importers(tmp_path):
+    """pydaemon stamps the importers it holds before pyspark's manager
+    forks: a forked worker's first invalidate_caches reads no archive
+    directory (unstamped, it re-read every zip on its first task)."""
+    archive = tmp_path / "forkzip.zip"
+    _write_zip(archive, {"forkzip_mod": "VALUE = 1\n"})
+    repo = Path(__file__).resolve().parent.parent
+    out = subprocess.run(
+        [sys.executable, "-c", _FORK_PROBE, str(repo), str(archive)],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    child = json.loads(out.stdout.strip().splitlines()[-1])
+    assert str(archive) in child["zips"]
+    assert child["reads"] == []
+
+
 _WORKER_PROBE = """
 import json, sys
 sys.path.insert(0, sys.argv[1])

@@ -11,15 +11,8 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from discogs_load_spark.operators.relational import sessionize
+from discogs_load_spark.queries.streaming import EVENT_SCHEMA, purchase_click_join
 from discogs_load_spark.session import load_tables
-from discogs_load_spark.streaming.ops import (
-    dedup_stream,
-    read_event_stream,
-    running_user_totals,
-    session_aggregates,
-    windowed_counts,
-)
 
 from .conftest import REPO, SF_SMALL
 
@@ -36,6 +29,10 @@ def events_dir(spark, tmp_path_factory):
     return path
 
 
+def _read_event_stream(spark, path):
+    return spark.readStream.schema(EVENT_SCHEMA).parquet(path)
+
+
 def _run_to_memory(stream_df, name, output_mode):
     q = (
         stream_df.writeStream.format("memory")
@@ -49,89 +46,8 @@ def _run_to_memory(stream_df, name, output_mode):
         q.stop()
 
 
-def test_windowed_counts_matches_batch(spark, events_dir):
-    stream = read_event_stream(spark, events_dir)
-    # complete mode: append would (correctly) withhold windows still
-    # inside the watermark horizon at end-of-stream
-    _run_to_memory(windowed_counts(stream, "1 hour"), "win_counts", "complete")
-    got = {
-        (r.window_start, r.event_type): r.n
-        for r in spark.sql("SELECT * FROM win_counts").collect()
-    }
-    batch = spark.read.parquet(events_dir)
-    want = {
-        (r.ws, r.event_type): r.n
-        for r in batch.groupBy(
-            F.date_trunc("hour", "ts").alias("ws"), "event_type"
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_session_aggregates_matches_batch_session_count(spark, events_dir):
-    stream = read_event_stream(spark, events_dir)
-    _run_to_memory(session_aggregates(stream, gap="6 hours"), "sessions", "complete")
-    got = (
-        spark.sql("SELECT user_id, count(*) AS n FROM sessions GROUP BY user_id")
-        .collect()
-    )
-    got = {r.user_id: r.n for r in got}
-    batch = sessionize(
-        spark.read.parquet(events_dir), ["user_id"], "ts", 6 * 3600, ["event_id"]
-    )
-    want = {
-        r.user_id: r.n
-        for r in batch.groupBy("user_id")
-        .agg(F.countDistinct("session_seq").alias("n"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_dedup_stream_drops_duplicates(spark, events_dir, tmp_path):
-    dup_dir = str(tmp_path / "dup")
-    base = spark.read.parquet(events_dir).limit(50)
-    base.union(base).write.parquet(dup_dir)  # every event twice
-    stream = read_event_stream(spark, dup_dir)
-    _run_to_memory(dedup_stream(stream), "dedup_out", "append")
-    out = spark.sql("SELECT event_id FROM dedup_out").collect()
-    ids = [r.event_id for r in out]
-    assert len(ids) == 50
-    assert len(set(ids)) == 50
-
-
-def test_running_user_totals_matches_batch(spark, events_dir):
-    stream = read_event_stream(spark, events_dir)
-    _run_to_memory(running_user_totals(stream), "running", "update")
-    # last update per user == batch totals
-    got = {
-        r.user_id: (r.n_events, r.total_value)
-        for r in spark.sql(
-            """SELECT user_id, n_events, total_value FROM (
-                 SELECT *, ROW_NUMBER() OVER (
-                     PARTITION BY user_id ORDER BY n_events DESC) rn
-                 FROM running) WHERE rn = 1"""
-        ).collect()
-    }
-    want = {
-        r.user_id: (r.n, r.total)
-        for r in spark.read.parquet(events_dir)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert set(got) == set(want)
-    for u in want:
-        assert got[u][0] == want[u][0]
-        assert abs(got[u][1] - want[u][1]) < 1e-6
-
-
 def test_stream_stream_interval_join_matches_batch(spark, events_dir):
-    from discogs_load_spark.streaming.ops import purchase_click_join
-
-    stream = read_event_stream(spark, events_dir)
+    stream = _read_event_stream(spark, events_dir)
     joined = purchase_click_join(
         stream.filter(F.col("event_type") == "purchase"),
         stream.filter(F.col("event_type") == "click"),
@@ -172,11 +88,6 @@ def test_streaming_checkpoint_recovery_exactly_once(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from discogs_load_spark.session import load_tables
-    from discogs_load_spark.streaming.ops import read_event_stream
-
-    from .conftest import SF_SMALL
-
     events = load_tables(spark, SF_SMALL, ["events"])["events"]
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
@@ -188,7 +99,7 @@ def test_streaming_checkpoint_recovery_exactly_once(spark, tmp_path):
 
     def drain_once():
         q = (
-            read_event_stream(spark, src)
+            _read_event_stream(spark, src)
             .writeStream.foreachBatch(land)
             .option("checkpointLocation", chk)
             .start()
@@ -406,8 +317,8 @@ def test_two_swap_cadence_is_correct_and_bounded(spark, monkeypatch):
     1/COMPACT_EVERY') was only ever exercised at n_swaps=1 — the 12-file
     sources give 3 batches per drain, so COMPACT_EVERY=3 fires exactly
     one in-stream compact and the finalize is elided. A 24-file source
-    (SPARK_GRAFT_STREAM_FILES=24, probe-only — the file count is folded
-    into the cached source path so this can't poison the default cache)
+    (STREAM_SOURCE_FILES=24 — the file count is folded into the cached
+    source path so this can't poison the default cache)
     gives 6 batches and TWO in-stream swaps, the second rewriting an
     already-compacted + newly-appended landing. Pin: (a) 6 batches,
     (b) generations == 2 with the finalize still elided, (c) the final
@@ -420,8 +331,7 @@ def test_two_swap_cadence_is_correct_and_bounded(spark, monkeypatch):
     from discogs_load_spark.queries import streaming as st
     from discogs_load_spark.queries.registry import REGISTRY
 
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_FILES", "24")
-    assert st.stream_source_files() == 24
+    monkeypatch.setattr(st, "STREAM_SOURCE_FILES", 24)
 
     name = "q226_streaming_emb_maintain_and_compact"
     with batch_seconds(spark) as lat:
@@ -433,7 +343,7 @@ def test_two_swap_cadence_is_correct_and_bounded(spark, monkeypatch):
     info = st.LAST_LANDING[name]
     assert info["generations"] == 2  # two in-stream swaps, finalize elided
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_FILES")
+    monkeypatch.undo()
     composed = sorted(
         map(
             tuple,
@@ -452,7 +362,7 @@ def test_two_swap_cadence_is_correct_and_bounded(spark, monkeypatch):
     assert files_per_bucket and set(files_per_bucket.values()) == {1}
 
     # the CDC maintainer on the same 24-file cadence
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_FILES", "24")
+    monkeypatch.setattr(st, "STREAM_SOURCE_FILES", 24)
     name = "q224_streaming_maintain_and_compact"
     with batch_seconds(spark) as lat:
         assert REGISTRY[name].fn(spark, SF_SMALL).count() == 16
