@@ -21,6 +21,7 @@ MinHash makes cross-engine determinism trivial).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.textfns import (
@@ -47,6 +48,11 @@ DEFAULT_MAX_BUCKET = 1024
 # (a connected component can be the whole corpus): the contract row ships
 # the MEMBER_CAP smallest member ids; counts stay exact.
 MEMBER_CAP = 32
+
+# Edge-list ceiling for connected_components' driver-side close
+# (~100 B/edge -> ~200 MB of driver rows, the broadcast size class); larger
+# pair lists close distributed with connected_components_star.
+CC_DRIVER_EDGE_CAP = 2_000_000
 
 
 def capped_member_rollup(
@@ -574,7 +580,7 @@ def containment_verify(
     # both directions in ONE pass over `joined` via explode: the previous
     # ab.unionByName(ba) carried the full join + array_intersect lineage
     # in each branch, so the CPU-bound intersect (and the caller's pair
-    # derivation) ran twice (the r14 connected_components rule)
+    # derivation) ran twice
     return (
         joined.select(
             F.explode(
@@ -783,116 +789,48 @@ def simhash_near_dup_pairs(
 
 
 def connected_components(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iters: int = 25,
+    pairs: DataFrame, src: str = "id_a", dst: str = "id_b"
 ) -> DataFrame:
     """(node, component) for every node in the pair graph; component = the
     minimum node id reachable from it — the canonical keeper for a near-dup
     cluster (pairs alone under-merge: A~B and B~C may both pass the
     threshold while A~C was never a candidate; training-data dedup needs
-    the transitive closure).
+    the transitive closure). Both columns keep the ``src`` column's type,
+    so string ids label by lexicographic minimum.
 
-    Pregel-style min-label propagation WITH pointer jumping: each round,
-    every node takes the min of its own label and its neighbors' labels
-    (one equi-join + one union-fold min-aggregate), then compresses one
-    pointer level — label(v) <- label(label(v)) — so the distance a label
-    can travel roughly DOUBLES per round: O(log diameter) rounds instead
-    of O(diameter) (r14; measured 18 propagation rounds on the embedding
-    pair graph collapsing to 6, each Spark round being several jobs of
-    fixed scheduler cost). The jump join is sound because a label is
-    always the id of a REACHABLE node (label(v)=u means v reaches u, so
-    v reaches everything u reaches), labels only ever decrease, and the
-    fixpoint argument needs only neighbor-min stability — which the
-    combined operator's fixpoint includes. Labels only ever decrease, so
-    SUM(label) strictly decreases until the fixpoint — a 1-row action per
-    round instead of a change-count join; the per-round
-    ``localCheckpoint(eager=False)`` truncates lineage (iterative
-    DataFrame loops otherwise replan from the source every iteration) and
-    is MATERIALIZED BY the convergence collect itself — one job per round
-    where the eager form paid two (r14). Diameter beyond what
-    ``max_iters`` jump-rounds cover (~2^max_iters) raises rather than
-    returning silently-unmerged components;
-    :func:`connected_components_star` (same signature, same output) is
-    the alternative O(log n) formulation.
-    """
-    # symmetrize via explode, not union-of-reversed: the union form's two
-    # branches each carry the FULL pairs lineage, so the caller's whole
-    # upstream pipeline (e.g. q200's Fellegi-Sunter scoring, ~36 jobs)
-    # executed twice inside the edge materialization (r14)
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col(src).alias("esrc"), F.col(dst).alias("edst")
-                ),
-                F.struct(
-                    F.col(dst).alias("esrc"), F.col(src).alias("edst")
-                ),
-            )
-        ).alias("e")
-    ).select("e.esrc", "e.edst")
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    labels = (
-        edges.select(F.col("esrc").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)
+    Every caller's pair list is a thresholded near-dup or name graph:
+    25–10.6k edges at sf0.01–sf0.1, where a distributed loop pays a dozen
+    or more fixed-cost jobs per call to close a graph the driver closes
+    in milliseconds. Up to ``CC_DRIVER_EDGE_CAP`` edges are therefore
+    collected and closed with union-find, each root its component's
+    minimum (one collect job plus the edges' own upstream); above the
+    cap, :func:`connected_components_star` closes the graph distributed.
+    Self-loop-only nodes label themselves on both paths."""
+    # bounded: at most CC_DRIVER_EDGE_CAP + 1 edge rows reach the driver
+    edges = pairs.select(src, dst).limit(CC_DRIVER_EDGE_CAP + 1).collect()
+    if len(edges) > CC_DRIVER_EDGE_CAP:
+        return connected_components_star(pairs, src, dst)
+    parent: dict = {}
+
+    def find(x):
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    id_type = pairs.schema[src].dataType
+    schema = StructType(
+        [StructField("node", id_type), StructField("component", id_type)]
     )
-    # bounded: 1-row convergence scalar per round (materializes the lazy
-    # checkpoint in the same job)
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    if prev_sum is None:  # empty graph
-        return labels.select("node", F.col("label").alias("component"))
-    for i in range(max_iters):
-        # one union + one min-aggregate per round (r14: the previous
-        # agg-then-left-join form paid three exchanges per round — the
-        # neighbor-min groupBy plus both sides of the join; folding the
-        # node's own label into the same aggregate via union is the
-        # identical min(own ∪ neighbors) update with one shuffle fewer)
-        propagated = edges.join(labels, edges.esrc == labels.node).select(
-            F.col("edst").alias("node"), "label"
-        )
-        cand = (
-            labels.unionByName(propagated)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        if i > 1:
-            # pointer jump: label(label(v)). Skipped in round 1 (labels
-            # are still self-pointers there, the jump is the identity)
-            # and round 2: near-dup graphs are mostly small cliques that
-            # converge by round 3, and for them every jump join is two
-            # wasted exchanges — deep chain graphs still collapse in
-            # O(log d) rounds, one round later.
-            # label2 <= label always (label(u) <= u), so the left-join
-            # coalesce is only a guard against ever silently dropping a
-            # node; the inner match is total (every label IS a node).
-            hop = cand.select(
-                F.col("node").alias("label"), F.col("label").alias("label2")
-            )
-            cand = cand.join(hop, "label", "left").select(
-                "node", F.coalesce("label2", "label").alias("label")
-            )
-        labels = cand.localCheckpoint(eager=False)
-        # bounded: 1-row convergence scalar per round (materializes the
-        # checkpoint — the eager-checkpoint-then-collect form ran two
-        # jobs per round for the same work)
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        edges.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds "
-            "(graph diameter exceeds the bound) — returning would silently "
-            "under-merge; use connected_components_star for high-diameter "
-            "graphs"
-        )
-    edges.unpersist()
-    return labels.select("node", F.col("label").alias("component"))
+    return pairs.sparkSession.createDataFrame(
+        [(n, find(n)) for n in parent], schema
+    )
 
 
 def connected_components_star(
@@ -902,9 +840,10 @@ def connected_components_star(
     max_iters: int = 40,
 ) -> DataFrame:
     """(node, component) — identical contract to :func:`connected_components`
-    (component = min reachable id) in O(log n) rounds instead of
-    O(diameter): the alternating large-star/small-star formulation
-    (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond").
+    (component = min reachable id) for pair lists above its driver cap,
+    in O(log n) rounds instead of O(diameter): the alternating
+    large-star/small-star formulation (Kiveris et al. 2014, "Connected
+    Components in MapReduce and Beyond").
 
     Each round rewires the edge set toward a star forest:
 
@@ -926,13 +865,13 @@ def connected_components_star(
     component's minimum. Deterministic: min/greatest/least over ids only.
     Self-loop-only nodes (pairs where src == dst and the node appears in
     no other pair) surface as their own components — the same contract as
-    :func:`connected_components`, so callers can swap the two.
+    :func:`connected_components`'s driver path.
     """
     raw = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # node universe BEFORE dropping self-loops: a node whose only pair is
-    # (x, x) still labels itself, matching the propagation variant
+    # (x, x) still labels itself, matching the driver path
     # explode, not union-of-projections: the union's branches each carry
-    # the full caller lineage (the r14 connected_components rule)
+    # the full caller lineage, so it would run twice
     all_nodes = (
         raw.select(F.explode(F.array("a", "b")).alias("node"))
         .distinct()

@@ -56,11 +56,6 @@ from .sig_index import (
 )
 
 JACCARD_THRESHOLD = 0.8
-# Hard ceiling on q165's collected name-pair list (~100 B/edge -> ~200 MB
-# of driver rows, the broadcast size class). Hitting it means the name
-# vocabulary is not domain-grain and the guard turns a silent driver OOM
-# into an error naming the premise (VERDICT r14 "What's wrong" #3).
-ENTITY_EDGE_CAP = 2_000_000
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -210,7 +205,7 @@ def q89_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.connected_components docstring explains why pairs
     alone under-merge). Oracle: DuckDB recursive CTE computes the same
     transitive closure by reachability — an independent algorithm, so a
-    propagation bug can't self-confirm. The member list ships as a
+    closure bug can't self-confirm. The member list ships as a
     '|'-joined sorted string (driver canonicalizer can't hash list
     cells; doc ids are ints, so the join is lossless), CAPPED at the
     MEMBER_CAP smallest ids: a component is fixture-unbounded (a
@@ -669,14 +664,19 @@ def _snb_ranked(part: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """The distributed global-rank lineage of :func:`_snb_pairs` —
     row-grain rank windowed per shuffle partition (pid), stitched with a
     broadcast per-partition offsets cumsum (the only SinglePartition
-    frame is the bounded one-row-per-partition counts). Split out so the
-    plan-shape test can pin the lineage before _snb_pairs checkpoints
-    it."""
+    frame is the bounded one-row-per-partition counts) over one
+    checkpointed pid-tagged frame. Split out so the plan-shape test can
+    pin the lineage before _snb_pairs checkpoints it."""
     sc_parallelism = part.sparkSession.sparkContext.defaultParallelism
     base = part.select("p_partkey", "p_name", *carry).repartitionByRange(
         sc_parallelism, "p_name", "p_partkey"
     )
-    loc = base.withColumn("pid", F.spark_partition_id())
+    # materialized once: the rank branch and the per-partition sizes
+    # branch project different columns, so with carried columns each gets
+    # its own range exchange, and each exchange samples its own boundaries
+    # (the RangePartitioner seeds by RDD id) — pids then disagree between
+    # the branches and ranks collide or skip
+    loc = base.withColumn("pid", F.spark_partition_id()).localCheckpoint()
     wloc = W.partitionBy("pid").orderBy("p_name", "p_partkey")
     loc = loc.withColumn("lrn", F.row_number().over(wloc))
     # bounded: one row per shuffle partition
@@ -1089,11 +1089,12 @@ def q200_merge_purge_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     input record maps to an entity; components only cover edge-touched
     nodes, so unmatched records coalesce to themselves). Oracle: the
     q198 score stack wrapped in the recursive-CTE reachability closure —
-    an independent algorithm, so a propagation bug can't self-confirm.
+    an independent algorithm, so a closure bug can't self-confirm.
 
     Scale shape: all stages inherit their linearity — w·N blocked pairs,
-    broadcast-scalar scoring, log-round star components on the (sparse)
-    thresholded edge set, capped member rollup (rank before collect;
+    broadcast-scalar scoring, connected components on the (sparse)
+    thresholded edge set (one driver-side close below the operator's
+    edge cap), capped member rollup (rank before collect;
     n_members still counts every member)."""
     scored = q198_linkage_score(spark, sf_dir)
     edges = scored.filter(F.col("match_weight") > FS_MATCH_T).select(
@@ -1164,8 +1165,8 @@ def q195_minhash_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     pairs = lsh_candidate_pairs(doc_signatures(spark, sf_dir), "doc_id")
     # symmetrize via explode, not union-of-reversed: the union's branches
-    # each carry the full LSH candidate lineage (the r14
-    # connected_components rule), so the band self-join pipeline ran twice
+    # each carry the full LSH candidate lineage, so the band self-join
+    # pipeline ran twice
     sym = pairs.select(
         F.explode(
             F.array(
@@ -1386,79 +1387,31 @@ def _fuzzy_name_pairs(part: DataFrame) -> DataFrame:
 def q165_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution end to end — the MDM (master-data-management)
     pipeline built from parts the suite already verifies one by one:
-    q112's domain-grain fuzzy matcher produces name-pair edges, the q89
-    min-label propagation closes them transitively (A~B and B~C merge
-    even when A~C was never a candidate pair), and every catalog row is
-    assigned its canonical entity — (brand, lexicographically-smallest
-    reachable name) — with per-entity row counts, variant counts, and
-    key ranges. The oracle recomputes the closure with DuckDB's
-    recursive-CTE reachability over a definition-shaped (unblocked) pair
-    join: different candidate generation, different closure algorithm,
-    same entities.
+    q112's domain-grain fuzzy matcher produces name-pair edges, q89's
+    connected-components operator closes them transitively (A~B and B~C
+    merge even when A~C was never a candidate pair), and every catalog
+    row is assigned its canonical entity — (brand, lexicographically-
+    smallest reachable name) — with per-entity row counts, variant
+    counts, and key ranges. The oracle recomputes the closure with
+    DuckDB's recursive-CTE reachability over a definition-shaped
+    (unblocked) pair join: different candidate generation, different
+    closure algorithm, same entities.
 
-    Scale shape (r14): the name graph lives at the DOMAIN grain (|vocab|
-    nodes — sublinear in the catalog, the same premise that lets q112
-    run the quadratic Levenshtein over distinct names at all), so the
-    transitive closure follows the q130 vocab-bounded discipline: the
-    banded pair list is COLLECTED (≤ |vocab|·band-width rows — the
-    broadcast size class; 24 edges over 64 distinct names at sf0.1) and
-    closed driver-side with union-find keyed by the lexicographically
-    smallest member name. This replaced the distributed
-    ``connected_components_star`` iteration, whose ~45 fixed-cost jobs
-    (two joins + two distincts + an exact set-equality check per round)
-    closed the same 24-edge graph — both operators and the union-find
-    produce identical labels (A/B-verified), and the recursive-CTE
-    oracle replays the closure independently. Star remains the operator
-    for graphs whose EDGE LIST is corpus-sized (unbounded-diameter,
-    node-grain graphs); a name graph is not one. Catalog rows then join
-    the finished |vocab|-row name→entity map once, by name, broadcast."""
+    Scale shape: the name graph lives at the DOMAIN grain (|vocab| nodes
+    — sublinear in the catalog, the same premise that lets q112 run the
+    quadratic Levenshtein over distinct names at all), so its banded
+    pair list (24 edges over 64 distinct names at sf0.1) sits far below
+    the operator's driver cap and closes driver-side with union-find in
+    one collect; a vocabulary whose pair list outgrows the cap closes
+    distributed instead. Catalog rows then join the finished
+    |vocab|-row name→entity map once, by name, broadcast."""
     part = load_tables(spark, sf_dir, ["part"])["part"]
-    pairs = _fuzzy_name_pairs(part).select("n1", "n2")
-    # bounded: the edit-distance pair list lives at the name-VOCABULARY
-    # grain (q112's banded domain self-join output — the broadcast size
-    # class), never the catalog grain; ENTITY_EDGE_CAP + 1 rows at most
-    edges = pairs.limit(ENTITY_EDGE_CAP + 1).collect()
-    if len(edges) > ENTITY_EDGE_CAP:
-        # fail loudly at the premise, not as an opaque driver OOM: the
-        # driver-side union-find exists BECAUSE the name vocabulary is
-        # domain-grain (sublinear in the catalog). A pathological
-        # vocabulary where the banded pair list outgrows the broadcast
-        # size class needs the distributed closure instead (r15 guard)
-        raise ValueError(
-            f"q165 name-pair graph has more than {ENTITY_EDGE_CAP} "
-            "edges: the name vocabulary is not domain-"
-            "small, so the collected union-find premise does not hold "
-            "— close this graph with connected_components_star"
-        )
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    for r in edges:
-        ra, rb = find(r["n1"]), find(r["n2"])
-        if ra != rb:
-            # union by NAME ORDER so every root is its component's
-            # lexicographic minimum — the entity_name contract directly
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    name_to_entity = spark.createDataFrame(
-        [(n, find(n)) for n in parent], "n string, entity_name string"
-    )
+    comp = connected_components(_fuzzy_name_pairs(part), "n1", "n2")
     # singleton names never enter the pair graph: they are their own
     # entity (the left-join + coalesce below)
     return (
-        part.join(
-            F.broadcast(name_to_entity),
-            part.p_name == name_to_entity.n,
-            "left",
-        )
-        .withColumn("entity_name", F.coalesce("entity_name", "p_name"))
+        part.join(F.broadcast(comp), part.p_name == comp.node, "left")
+        .withColumn("entity_name", F.coalesce("component", "p_name"))
         .groupBy(F.col("p_brand").alias("brand"), "entity_name")
         .agg(
             F.count(F.lit(1)).alias("n_parts"),

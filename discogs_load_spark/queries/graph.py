@@ -3,7 +3,7 @@ fixture: node = part brand, edge = "two brands appear in the same order"
 (the market-basket projection of the order/lineitem bipartite graph).
 
 Complements the iterative graph ops elsewhere in the engine (q89/q95
-connected components via label propagation, q130 PageRank) with the
+connected components, q130 PageRank) with the
 *count-shaped* graph queries — edge building, triangle enumeration,
 neighborhood similarity — that are pure joins + aggregates and therefore
 run under the full value-hash oracle gate.

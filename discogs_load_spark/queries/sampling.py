@@ -865,18 +865,18 @@ def q169_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation operators composed END TO END under ONE oracle —
     dedup → entity grouping → budget (VERDICT r03 #8): q154's SemDeDup
     pair generation (2-round k-means clusters, in-cluster cosine
-    threshold), q89/q165's min-label transitive closure turning pairs
+    threshold), q89/q165's connected-components closure turning pairs
     into duplicate groups with the min-id member as keeper, then a
     per-source report — docs total/dropped/kept, kept token mass, and an
     integer pro-rata share of a {TRAIN_BUDGET_TOKENS:,}-token training
     budget (floordiv: exact in both engines). The oracle recomputes the
     whole chain independently (recursive-CTE reachability instead of
-    label propagation), so a bug anywhere in the composition — not just
+    union-find), so a bug anywhere in the composition — not just
     in one stage — breaks the value hash.
 
     Scale shape is the stages' own: broadcast centroids + cluster-keyed
-    pair join (never all-pairs), domain-sized propagation, and a
-    |sources|-row rollup with one 1-row broadcast normalizer. vec_id ==
+    pair join (never all-pairs), a domain-sized driver-side closure, and
+    a |sources|-row rollup with one 1-row broadcast normalizer. vec_id ==
     doc_id in the fixtures (TESTDATA.md), linking the two tables."""
     from ..operators.dedup import connected_components
     from .similarity import DIM, SEM_THRESHOLD
@@ -955,7 +955,7 @@ def q169_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # racing-persist rule): `s` feeds BOTH the broadcast normalizer `t`
     # and the final projection, and `t`'s broadcast build raced the main
     # path re-deriving s's ENTIRE lineage — the SemDeDup pair join, the
-    # component propagation and the corpus tokenize ran twice per
+    # component closure and the corpus tokenize ran twice per
     # invocation (q169 profile: 40 jobs, job_wall 3.2 s in a 4.6 s wall)
     s = s.localCheckpoint()
     t = s.agg(F.sum("kept_tokens").cast("bigint").alias("total_kept"))

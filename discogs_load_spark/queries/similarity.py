@@ -434,8 +434,8 @@ def q95_embedding_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup CLUSTERS: connected components over the
     adaptive-prefix cosine pair graph — the same transitive-closure step
     q89 applies to text near-dups (semantic dup chains A~B~C where A~C
-    is below threshold). One min-label propagation joins per round over
-    a pair list that LSH bucketing already made sub-quadratic. Member
+    is below threshold), over a pair list that LSH bucketing already
+    made sub-quadratic — small enough to close driver-side. Member
     list capped at the MEMBER_CAP smallest ids via rank-before-collect
     (see capped_member_rollup: a dup family is fixture-unbounded);
     n_vecs counts every member.

@@ -269,6 +269,33 @@ def test_q196_sorted_neighborhood_python_reference(spark):
     assert len(got) == SNB_WINDOW * len(rows) - SNB_WINDOW * (SNB_WINDOW + 1) // 2
 
 
+def test_snb_rank_with_carry_is_a_stable_permutation(spark):
+    """With a carried column, the rank branch and the per-partition
+    sizes branch project different columns; over a frame larger than the
+    range partitioner's sample they must still agree on every row's
+    partition, so the ranks are exactly 1..N in (p_name, p_partkey)
+    order on every run (duplicate names included)."""
+    from pyspark.sql import functions as F
+
+    from discogs_load_spark.queries.dedup import _snb_ranked
+
+    n = 20_000
+    part = (
+        spark.range(n)
+        .select(
+            F.col("id").alias("p_partkey"),
+            F.format_string("name%d", F.col("id") * 7919 % 5003).alias("p_name"),
+            (F.col("id") % 13).alias("p_brand"),
+        )
+        .localCheckpoint()
+    )
+    order = [k for _, k in sorted(part.select("p_name", "p_partkey").collect())]
+    for _ in range(3):
+        ranked = _snb_ranked(part, ("p_brand",)).select("p_partkey", "rk")
+        rk = dict(ranked.collect())
+        assert [rk[k] for k in order] == list(range(1, n + 1))
+
+
 def test_q197_sparse_best_match_python_reference(spark):
     """Brute-force sparse cosine in plain Python: tokenize with the
     query's own regex pipeline, drop tokens with df > cap, compute every
@@ -570,19 +597,24 @@ def test_q130_collect_guard_trips_with_premise_message(spark, monkeypatch):
     assert sizes == [GUARD_CAP + 1]
 
 
-def test_q165_collect_guard_trips_with_premise_message(spark, monkeypatch):
-    """q165's driver-side union-find collects the banded name-pair list;
-    the guard must refuse (naming the domain-grain vocabulary premise)
-    after bringing at most ENTITY_EDGE_CAP + 1 rows to the driver."""
-    import pytest
+def test_q165_edge_cap_bounds_collect_and_closes_distributed(
+    spark, monkeypatch
+):
+    """connected_components collects q165's banded name-pair list for its
+    driver-side union-find: above CC_DRIVER_EDGE_CAP it must stop after
+    CC_DRIVER_EDGE_CAP + 1 rows and close the graph with the star loop,
+    with the same entities as the driver close."""
+    from discogs_load_spark.operators import dedup
 
-    from discogs_load_spark.queries import dedup as qdedup
-
-    monkeypatch.setattr(qdedup, "ENTITY_EDGE_CAP", GUARD_CAP)
+    q165 = REGISTRY["q165_entity_clusters"].fn
+    want = sorted(q165(spark, SF_SMALL).collect())
+    monkeypatch.setattr(dedup, "CC_DRIVER_EDGE_CAP", GUARD_CAP)
     sizes = _collect_sizes(monkeypatch)
-    with pytest.raises(ValueError, match="not domain-small"):
-        REGISTRY["q165_entity_clusters"].fn(spark, SF_SMALL)
+    out = q165(spark, SF_SMALL)
+    # GUARD_CAP + 1 rows came back: the graph has more real edges than
+    # the cap, and the collect stopped one past it
     assert sizes == [GUARD_CAP + 1]
+    assert sorted(out.collect()) == want
 
 
 def test_q130_empty_events_returns_empty_frame(spark, tmp_path):

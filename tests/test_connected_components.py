@@ -1,16 +1,17 @@
-"""Connected components: the O(diameter) min-label propagation and the
-O(log n) large-star/small-star variant must produce IDENTICAL (node,
-component=min-reachable-id) labelings — checked against a Python
-union-find ground truth on adversarial graph shapes, including the
-high-diameter case where plain propagation must now fail LOUDLY instead
-of silently returning unmerged components (its pre-r04 behavior)."""
+"""Connected components: the one operator's two paths — the driver-side
+union-find below ``CC_DRIVER_EDGE_CAP`` and the large-star/small-star
+loop above it (forced here by a cap of 0) — must produce the IDENTICAL
+(node, component=min-reachable-id) labeling, checked against a Python
+union-find ground truth on adversarial graph shapes."""
 
 from __future__ import annotations
 
 import random
+import uuid
 
 import pytest
 
+from discogs_load_spark.operators import dedup
 from discogs_load_spark.operators.dedup import (
     connected_components,
     connected_components_star,
@@ -38,14 +39,23 @@ def _labels(df) -> dict[int, int]:
     return {r["node"]: r["component"] for r in df.collect()}
 
 
-def _pairs_df(spark, edges):
+def _pairs_df(spark, edges, id_type="long"):
     return spark.createDataFrame(
-        [(a, b) for a, b in edges], "id_a long, id_b long"
+        [(a, b) for a, b in edges], f"id_a {id_type}, id_b {id_type}"
     )
 
 
+def _both_paths(monkeypatch, pairs) -> list[dict]:
+    """Labels from the driver path, then from the star path (cap 0)."""
+    driver = _labels(connected_components(pairs))
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "CC_DRIVER_EDGE_CAP", 0)
+        star = _labels(connected_components(pairs))
+    return [driver, star]
+
+
 @pytest.mark.parametrize("seed", [1, 2, 3, 4, 5])
-def test_star_matches_union_find_on_random_graphs(spark, seed):
+def test_star_matches_union_find_on_random_graphs(spark, monkeypatch, seed):
     rng = random.Random(seed)
     n = 300
     # sparse ER graph + planted cliques + shuffled non-contiguous id space
@@ -59,10 +69,7 @@ def test_star_matches_union_find_on_random_graphs(spark, seed):
     edges = [(a, b) for a, b in edges if a != b]
     edges += edges[:20]  # duplicates must not matter
     want = _union_find_labels(edges)
-    got_star = _labels(connected_components_star(_pairs_df(spark, edges)))
-    got_prop = _labels(connected_components(_pairs_df(spark, edges)))
-    assert got_star == want
-    assert got_prop == want
+    assert _both_paths(monkeypatch, _pairs_df(spark, edges)) == [want, want]
 
 
 def test_star_converges_on_high_diameter_path(spark):
@@ -73,40 +80,65 @@ def test_star_converges_on_high_diameter_path(spark):
     assert len(got) == n
 
 
-def test_propagation_raises_instead_of_silently_undermerging(spark):
-    # diameter 200 >> what 3 jump-rounds can cover (~2^3 hops): pre-r04
-    # this RETURNED wrong components instead of raising
+def test_high_diameter_path_closes_on_both_paths(spark, monkeypatch):
     edges = [(i, i + 1) for i in range(200)]
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(_pairs_df(spark, edges), max_iters=3)
+    want = {i: 0 for i in range(201)}
+    assert _both_paths(monkeypatch, _pairs_df(spark, edges)) == [want, want]
 
 
-def test_propagation_pointer_jumping_handles_high_diameter_path(spark):
-    # r14: pointer jumping (label <- label(label) each round) makes the
-    # propagation variant O(log diameter): a 200-path — which the plain
-    # O(diameter) form could never finish inside the default bound —
-    # converges within the default max_iters with the exact union-find
-    # labeling
-    edges = [(i, i + 1) for i in range(200)]
-    got = _labels(connected_components(_pairs_df(spark, edges)))
-    assert set(got.values()) == {0}
-    assert len(got) == 201
-
-
-def test_star_empty_and_single_edge(spark):
+def test_star_empty_and_single_edge(spark, monkeypatch):
     empty = _pairs_df(spark, [])
-    assert _labels(connected_components_star(empty)) == {}
+    assert _both_paths(monkeypatch, empty) == [{}, {}]
     one = _pairs_df(spark, [(7, 3)])
-    assert _labels(connected_components_star(one)) == {7: 3, 3: 3}
+    assert _both_paths(monkeypatch, one) == [{7: 3, 3: 3}] * 2
 
 
-def test_self_loop_only_nodes_label_themselves_in_both_variants(spark):
-    # node 9's only pair is (9, 9): both variants must surface it as its
-    # own component (same-signature-same-output contract for swapping)
+def test_self_loop_only_nodes_label_themselves_in_both_variants(
+    spark, monkeypatch
+):
+    # node 9's only pair is (9, 9): both paths must surface it as its own
+    # component
     edges = [(1, 2), (9, 9), (2, 2)]
     want = {1: 1, 2: 1, 9: 9}
-    assert _labels(connected_components_star(_pairs_df(spark, edges))) == want
-    assert _labels(connected_components(_pairs_df(spark, edges))) == want
+    assert _both_paths(monkeypatch, _pairs_df(spark, edges)) == [want, want]
+
+
+def test_string_ids_label_by_lexicographic_min_on_both_paths(
+    spark, monkeypatch
+):
+    edges = [("pear", "apple"), ("plum", "pear"), ("fig", "kiwi")]
+    pairs = _pairs_df(spark, edges, "string")
+    want = {
+        "apple": "apple", "pear": "apple", "plum": "apple",
+        "fig": "fig", "kiwi": "fig",
+    }
+    assert _both_paths(monkeypatch, pairs) == [want, want]
+    types = {f.name: f.dataType.simpleString() for f in
+             connected_components(pairs).schema.fields}
+    assert types == {"node": "string", "component": "string"}
+
+
+def test_driver_path_runs_at_most_three_jobs(spark):
+    """A per-round loop pays several jobs per round; the driver close of a
+    25-edge graph is one collect of the (shuffled) edge list."""
+    from pyspark.sql import functions as F
+
+    pairs = (
+        spark.range(25)
+        .repartition(4)
+        .select(
+            F.col("id").alias("id_a"), ((F.col("id") + 1) % 30).alias("id_b")
+        )
+    )
+    sc = spark.sparkContext
+    group = f"cc-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        got = _labels(connected_components(pairs))
+    finally:
+        sc.setJobGroup("", "")
+    assert set(got.values()) == {0}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
 
 
 def test_kmeans_two_level_contract(spark):

@@ -678,9 +678,9 @@ def test_adaptive_ladder_scalars_are_broadcasts(spark):
     never a shuffled cross join — and the candidate joins stay
     equi-joins (no cartesian, no nested loop) with the ladder CASE
     folded into the static plan."""
-    # q210 is excluded: connected_components' localCheckpoints cut the
-    # lineage, so its final plan can't show the upstream ladder — its
-    # candidate stage IS q201's, asserted here.
+    # q210 is excluded: connected_components closes its pair graph on
+    # the driver and returns a local frame, so its final plan can't show
+    # the upstream ladder — its candidate stage IS q201's, asserted here.
     for q in (
         "q201_adaptive_band_neardup",
         "q203_adaptive_sparse_match",
