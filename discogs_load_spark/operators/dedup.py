@@ -32,6 +32,7 @@ from ..functions.textfns import (
     shingles_sql,
     tokens_sql,
 )
+from ..session import local_frame
 
 DEFAULT_N_HASHES = 12
 DEFAULT_BANDS = 4  # 4 bands x 3 rows: catches jaccard >~ 0.6 reliably
@@ -828,9 +829,7 @@ def connected_components(
     schema = StructType(
         [StructField("node", id_type), StructField("component", id_type)]
     )
-    return pairs.sparkSession.createDataFrame(
-        [(n, find(n)) for n in parent], schema
-    )
+    return local_frame(pairs.sparkSession, [(n, find(n)) for n in parent], schema)
 
 
 def connected_components_star(

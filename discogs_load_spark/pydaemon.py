@@ -1,5 +1,15 @@
 """Python-worker daemon entry for local masters: pyspark's own daemon, run
-after installing a lazy zipimport invalidation.
+after preloading pandas and pyarrow and installing a lazy zipimport
+invalidation.
+
+Every Arrow seam (mapInPandas, Arrow UDFs) imports pandas and pyarrow in
+the worker; a worker forked from a daemon that imported them once shares
+those modules' pages with it and skips the import. ``gc.freeze()`` moves
+the daemon's objects out of the collector's reach, so a worker's
+collections do not write to (and un-share) them. The imports start
+threads (numpy's BLAS pool, pyarrow's jemalloc background thread); both
+libraries register fork handlers, and a forked worker computes with
+them as before (``tests/test_session.py``).
 
 pyspark's worker calls ``importlib.invalidate_caches()`` at the start of
 every task (``worker_util.setup_spark_files``). Before Python 3.13 that
@@ -11,7 +21,7 @@ again only when an import needs it); this module makes it lazy on older
 versions by skipping the re-read while the archive's (mtime, size) is
 unchanged, so a zip rewritten in place or removed is still re-read. The
 daemon stamps its importers once before forking, so a worker's first task
-skips the re-read as well. On 3.13+ it changes nothing.
+skips the re-read as well. On 3.13+ only the preload applies.
 
 Run as ``python -m discogs_load_spark.pydaemon`` through
 ``spark.python.daemon.module`` (``session.get_spark`` sets it).
@@ -19,6 +29,7 @@ Run as ``python -m discogs_load_spark.pydaemon`` through
 
 from __future__ import annotations
 
+import gc
 import importlib
 import os
 import sys
@@ -43,6 +54,8 @@ def lazy_invalidate_caches(self: zipimport.zipimporter) -> None:
 
 
 if __name__ == "__main__":
+    import pandas  # noqa: F401  (preloaded for every forked worker)
+    import pyarrow  # noqa: F401
     from pyspark.daemon import manager
 
     if sys.version_info < (3, 13):
@@ -50,4 +63,5 @@ if __name__ == "__main__":
         # stamp every importer the daemon holds: the workers it forks
         # inherit the stamps and skip the re-read on their first task too
         importlib.invalidate_caches()
+    gc.freeze()
     manager()

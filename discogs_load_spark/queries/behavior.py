@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.numeric import epoch_us
-from ..session import load_tables
+from ..session import load_tables, local_frame
 from .registry import register
 
 _EPOCH = "2024-01-01"  # fixture events all live in Jan 2024
@@ -341,7 +341,7 @@ def q130_event_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # empty events: the previous declarative plan degraded to an
         # empty frame; keep that instead of a ZeroDivisionError on n
         # (ADVICE r14)
-        return spark.createDataFrame([], "node string, rank_scaled bigint")
+        return local_frame(spark, [], "node string, rank_scaled bigint")
     b = 15 * PR_SCALE // (100 * n)
     ranks = {nd: PR_SCALE // n for nd in nodes}
     for _ in range(PR_ITERS):
@@ -351,7 +351,8 @@ def q130_event_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ranks[src] * 85 * w
             ) // (100 * ow)
         ranks = {nd: b + contrib.get(nd, 0) for nd in nodes}
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(nd, ranks[nd]) for nd in nodes],
         "node string, rank_scaled bigint",
     ).orderBy("node")

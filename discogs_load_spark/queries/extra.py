@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..functions.numeric import dec_corr_sql, dec_sum, dec_sum_sql, dec_var_sql
-from ..session import load_tables
+from ..session import load_tables, local_frame
 from .registry import register
 
 
@@ -1437,7 +1437,8 @@ def q186_join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 salts,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "key_name string, n_keys bigint, total_rows bigint, "
         "max_count bigint, p99_count bigint, skew_ratio double, "

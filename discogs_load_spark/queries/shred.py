@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from ..session import load_tables
+from ..session import load_tables, local_frame
 from .registry import register
 
 
@@ -388,7 +388,8 @@ def _q170_dump_path(docs: DataFrame, sf_dir: str) -> str:
         F.col("doc_id").cast("long").alias("k1"),
         rec.alias("line"),
     )
-    edges = spark.createDataFrame(
+    edges = local_frame(
+        spark,
         [
             (0, 0, '<?xml version="1.0" encoding="UTF-8"?>\n<releases>'),
             (2, 0, "</releases>"),

@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..functions.numeric import dec_sum, dec_sum_sql
-from ..session import load_tables, scoped_conf
+from ..session import load_tables, local_frame, scoped_conf
 from .artifacts import source_identity
 from .registry import register
 
@@ -273,7 +273,7 @@ def _read_or_empty(
     that schema while no partition directory exists yet."""
     if any(e.startswith(f"{part_col}=") for e in os.listdir(d)):
         return spark.read.schema(schema).parquet(d)
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 # test hook: per query id, the final landed dir (and, for the

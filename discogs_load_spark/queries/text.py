@@ -22,7 +22,7 @@ from ..functions.textfns import (
     tokens_sql,
 )
 from ..operators.text import fingerprint, language_id, quality_signals, token_stats
-from ..session import load_tables
+from ..session import load_tables, local_frame
 from .registry import register
 from .sig_index import doc_signature_index, doc_tokens
 
@@ -1224,8 +1224,8 @@ def q171_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, b in enumerate(bests)
         if b is not None
     ]
-    return spark.createDataFrame(
-        rows, "round int, lhs string, rhs string, freq bigint"
+    return local_frame(
+        spark, rows, "round int, lhs string, rhs string, freq bigint"
     ).orderBy("round")
 
 
@@ -1494,8 +1494,8 @@ def q176_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_rows.append((i + 1, row["w"], row["b"], row["n_correct"]))
         w_sql, b_sql = _dlit(row["w"]), _dlit(row["b"])
     f.unpersist()
-    return spark.createDataFrame(
-        out_rows, "round int, w double, b double, n_correct bigint"
+    return local_frame(
+        spark, out_rows, "round int, w double, b double, n_correct bigint"
     ).orderBy("round")
 
 

@@ -14,9 +14,11 @@ import os
 import tempfile
 import threading
 import zipfile
+from collections.abc import Iterable
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _SHIPPED_APPS: set[str] = set()
 
@@ -63,13 +65,18 @@ def get_spark(
     - autoBroadcastJoinThreshold stays default (10 MB); dimension tables in
       the star schema (region/nation/label/...) broadcast automatically.
     - Python workers on a local master start from
-      ``discogs_load_spark.pydaemon`` (``python_worker_conf``). Before
-      Python 3.13, pyspark's per-task ``importlib.invalidate_caches()``
-      re-reads every zip on the worker path (pyspark.zip, the spark-core
-      jar): 0.14-0.31 s of CPU per task. The daemon makes that lazy,
-      re-reading only a changed archive, then runs ``pyspark.daemon``. Only
-      local masters, whose workers can import the package from its
-      directory; on Python 3.13+ it changes nothing.
+      ``discogs_load_spark.pydaemon`` (``python_worker_conf``). The daemon
+      imports pandas and pyarrow once and freezes its heap
+      (``gc.freeze``) before it forks, so every worker shares those
+      modules' pages instead of importing them itself. Before Python
+      3.13, pyspark's per-task ``importlib.invalidate_caches()`` re-reads
+      every zip on the worker path (pyspark.zip, the spark-core jar):
+      0.14-0.31 s of CPU per task; the daemon makes that lazy, re-reading
+      only a changed archive. It then runs ``pyspark.daemon``. Only local
+      masters, whose workers can import the package from its directory.
+      The package builds its driver-side frames with ``local_frame``
+      (Arrow, no Python task), so they start no second pool beside the
+      Arrow seams' one.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -111,8 +118,8 @@ def get_spark(
 
 def python_worker_conf(master: str) -> dict[str, str]:
     """Config that starts a local master's Python workers from
-    ``discogs_load_spark.pydaemon`` (lazy zipimport invalidation) instead
-    of ``pyspark.daemon``.
+    ``discogs_load_spark.pydaemon`` (pandas and pyarrow preloaded, lazy
+    zipimport invalidation) instead of ``pyspark.daemon``.
 
     The daemon starts before any task ships this package, so the
     package's parent directory goes on the workers' PYTHONPATH. A local
@@ -127,6 +134,31 @@ def python_worker_conf(master: str) -> dict[str, str]:
         "spark.python.daemon.module": "discogs_load_spark.pydaemon",
         "spark.executorEnv.PYTHONPATH": str(Path(__file__).resolve().parent.parent),
     }
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: str | StructType
+) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in ``schema``'s column
+    order; ``schema`` a DDL string or a ``StructType``), built from an
+    Arrow table.
+
+    ``createDataFrame(<python list>)`` ships pickled rows through a Python
+    RDD, so evaluating the frame runs a Python task, and on a local
+    master that starts a second daemon and worker pool beside the Arrow
+    one. An Arrow table is planned as a ``LocalTableScan`` (or a JVM-side
+    RDD above ``spark.sql.execution.arrow.localRelationThreshold``) and
+    runs no Python task. None stays null and NaN stays NaN."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
 
 
 _OPEN_SCOPES: set[int] = set()

@@ -272,10 +272,10 @@ def read_dump_python(
     row_tag = ROW_TAGS[kind]
     record_fn = _RECORD_FN[kind]
 
-    from ..session import ensure_package_on_executors
+    from ..session import ensure_package_on_executors, local_frame
 
     ensure_package_on_executors(spark)
-    paths_df = spark.createDataFrame([(p,) for p in paths], "path string")
+    paths_df = local_frame(spark, [(p,) for p in paths], "path string")
 
     def parse(batches):
         import pandas as pd

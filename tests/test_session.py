@@ -1,23 +1,28 @@
 """session.scoped_conf: the one helper that changes session config around
-a body (streaming drains, q198's collect, tests); and the local-master
-Python-worker entry (session.python_worker_conf, pydaemon)."""
+a body (streaming drains, q198's collect, tests); the local-master
+Python-worker entry (session.python_worker_conf, pydaemon); and
+session.local_frame, the one way the package builds a frame from
+driver-side rows."""
 
 from __future__ import annotations
 
+import ast
 import importlib
 import json
+import math
 import os
 import subprocess
 import sys
 import time
 import zipfile
 import zipimport
+from decimal import Decimal
 from pathlib import Path
 
 import pytest
 
 from discogs_load_spark import pydaemon
-from discogs_load_spark.session import python_worker_conf, scoped_conf
+from discogs_load_spark.session import local_frame, python_worker_conf, scoped_conf
 
 SET_KEY = "spark.sql.shuffle.partitions"  # set explicitly by get_spark
 UNSET_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -178,7 +183,7 @@ def test_lazy_invalidation_rereads_only_a_changed_archive(tmp_path, monkeypatch)
 
 
 _FORK_PROBE = """
-import importlib, json, os, runpy, sys, zipimport
+import gc, importlib, json, os, runpy, sys, zipimport
 sys.path.insert(0, sys.argv[1])
 sys.path.insert(0, sys.argv[2])
 import forkzip_mod  # the archive's importer now sits in the daemon's cache
@@ -197,7 +202,17 @@ def manager():  # pyspark's daemon forks its workers from here
             k for k, v in sys.path_importer_cache.items()
             if isinstance(v, zipimport.zipimporter)
         ]
-        os.write(w, json.dumps({"reads": reads, "zips": zips}).encode())
+        preloaded = sorted({"pandas", "pyarrow"} & set(sys.modules))
+        import numpy, pyarrow.compute  # the threads the preload started
+        product = float((numpy.ones((256, 256)) @ numpy.ones((256, 256))).sum())
+        total = pyarrow.compute.sum(pyarrow.array(range(100_000))).as_py()
+        os.write(w, json.dumps({
+            "reads": reads,
+            "zips": zips,
+            "preloaded": preloaded,
+            "frozen": gc.get_freeze_count(),
+            "computed": [product, total],
+        }).encode())
         os._exit(0)
     os.waitpid(pid, 0)
     print(os.read(r, 1 << 16).decode())
@@ -208,13 +223,9 @@ runpy.run_module("discogs_load_spark.pydaemon", run_name="__main__")
 """
 
 
-@pytest.mark.skipif(
-    sys.version_info >= (3, 13), reason="3.13's zipimport is lazy already"
-)
-def test_forked_worker_inherits_stamped_importers(tmp_path):
-    """pydaemon stamps the importers it holds before pyspark's manager
-    forks: a forked worker's first invalidate_caches reads no archive
-    directory (unstamped, it re-read every zip on its first task)."""
+def _forked_worker(tmp_path: Path) -> tuple[Path, dict]:
+    """Run pydaemon's ``__main__`` with pyspark's manager replaced by one
+    fork; the archive on its path and what the forked child saw."""
     archive = tmp_path / "forkzip.zip"
     _write_zip(archive, {"forkzip_mod": "VALUE = 1\n"})
     repo = Path(__file__).resolve().parent.parent
@@ -226,9 +237,31 @@ def test_forked_worker_inherits_stamped_importers(tmp_path):
         timeout=120,
     )
     assert out.returncode == 0, out.stderr[-3000:]
-    child = json.loads(out.stdout.strip().splitlines()[-1])
+    return archive, json.loads(out.stdout.strip().splitlines()[-1])
+
+
+@pytest.mark.skipif(
+    sys.version_info >= (3, 13), reason="3.13's zipimport is lazy already"
+)
+def test_forked_worker_inherits_stamped_importers(tmp_path):
+    """pydaemon stamps the importers it holds before pyspark's manager
+    forks: a forked worker's first invalidate_caches reads no archive
+    directory (unstamped, it re-read every zip on its first task)."""
+    archive, child = _forked_worker(tmp_path)
     assert str(archive) in child["zips"]
     assert child["reads"] == []
+
+
+def test_forked_worker_inherits_preloaded_frozen_heap(tmp_path):
+    """pydaemon imports pandas and pyarrow and freezes its heap before
+    pyspark's manager forks: a forked worker holds both modules without
+    importing them, its collections skip the daemon's objects, and the
+    libraries whose threads the imports started (numpy's BLAS pool,
+    pyarrow's allocator) still compute in the child."""
+    _, child = _forked_worker(tmp_path)
+    assert child["preloaded"] == ["pandas", "pyarrow"]
+    assert child["frozen"] > 0
+    assert child["computed"] == [256.0**3, 100_000 * 99_999 // 2]
 
 
 _WORKER_PROBE = """
@@ -289,6 +322,53 @@ def test_local_session_workers_run_the_lazy_invalidation(tmp_path):
         assert r["reads"] == 0
 
 
+_POOL_PROBE = """
+import json, os, sys
+sys.path.insert(0, sys.argv[1])
+from discogs_load_spark.operators.dedup import connected_components
+from discogs_load_spark.session import get_spark
+from perfbench.run import _comm, proc_stats
+
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+
+
+def passthrough(batches):
+    yield from batches
+
+
+spark.range(4).repartition(2).mapInPandas(passthrough, "id long").collect()
+pairs = spark.range(3).selectExpr("id AS id_a", "id + 1 AS id_b")
+labels = sorted(tuple(r) for r in connected_components(pairs).collect())
+
+stats = proc_stats()
+(jvm,) = [p for p, f in stats.items() if int(f[1]) == os.getpid() and _comm(p) == "java"]
+daemons = [p for p, f in stats.items() if int(f[1]) == jvm and _comm(p).startswith("python")]
+print(json.dumps({"labels": labels, "daemons": len(daemons)}))
+spark.stop()
+"""
+
+
+def test_local_session_runs_one_python_worker_pool(tmp_path):
+    """A local[2] session that ran an Arrow task (mapInPandas) and then a
+    connected_components close (a driver-built frame) has exactly one
+    Python daemon under its JVM: the driver-built frame runs no Python
+    task, so no second daemon and worker pool starts beside the Arrow
+    one."""
+    repo = Path(__file__).resolve().parent.parent
+    out = subprocess.run(
+        [sys.executable, "-c", _POOL_PROBE, str(repo)],
+        cwd=tmp_path,
+        env={**os.environ, "SPARK_DRIVER_MEMORY": "1g"},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["labels"] == [[n, 0] for n in range(4)]
+    assert got["daemons"] == 1
+
+
 def test_pyfile_added_after_workers_are_warm_is_importable(spark, tmp_path):
     """addPyFile is the case pyspark invalidates import caches for: a zip
     shipped after the workers started must import in the next task."""
@@ -325,3 +405,65 @@ def test_python_worker_conf_is_for_local_masters_only():
     ):
         conf = python_worker_conf(master)
         assert DAEMON_KEY not in conf and PYTHONPATH_KEY not in conf
+
+
+# -- driver-side rows as an Arrow frame --------------------------------------
+
+LOCAL_DDL = "i int, b bigint, s string, d double, m decimal(25,6)"
+LOCAL_ROWS = [
+    (1, 2**40, "a", 1.5, Decimal("12.345678")),
+    (None, None, None, None, None),  # null in every column
+    (-3, -(2**62), "", float("nan"), Decimal("-0.000001")),  # NaN is no null
+]
+
+
+def _rows(frame) -> list[tuple]:
+    """Collected rows with NaN spelled out (NaN != NaN)."""
+    return [
+        tuple("NaN" if isinstance(v, float) and math.isnan(v) else v for v in r)
+        for r in frame.collect()
+    ]
+
+
+@pytest.mark.parametrize("as_struct", [False, True], ids=["ddl", "struct"])
+@pytest.mark.parametrize("rows", [LOCAL_ROWS, []], ids=["rows", "empty"])
+def test_local_frame_equals_create_data_frame(spark, as_struct, rows):
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(LOCAL_DDL) if as_struct else LOCAL_DDL
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
+    if rows:
+        assert _rows(got)[1] == (None,) * 5 and _rows(got)[2][3] == "NaN"
+
+
+def test_local_frame_is_a_local_table_scan(spark):
+    """The rows stay in the plan: no Python RDD, so no Python task."""
+    frame = local_frame(spark, LOCAL_ROWS, LOCAL_DDL)
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan"), plan
+
+
+def test_package_builds_driver_side_frames_only_through_local_frame():
+    """``createDataFrame`` is called in one place, ``session.local_frame``:
+    a list handed to it directly runs a Python task (a second worker pool
+    on a local master)."""
+    pkg = Path(__file__).resolve().parent.parent / "discogs_load_spark"
+    calls = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        owner = {
+            child: fn.name
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef)
+            for child in ast.walk(fn)
+        }
+        calls += [
+            (path.relative_to(pkg).as_posix(), owner.get(node))
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) == "createDataFrame"
+        ]
+    assert calls == [("session.py", "local_frame")]

@@ -19,7 +19,9 @@ line per query splits the profiled run's process-tree CPU seconds
 (perfbench's /proc readers) into the driver JVM less its JIT threads, the
 Python workers (daemon and workers, exited ones included), and the
 children the JVM forked and reaped (e.g. ``chmod`` when libhadoop is
-missing), so a fixed cost at a process seam shows up without a profiler.
+missing), and counts the Python daemons and workers alive after the run
+(one daemon per worker pool), so a fixed cost at a process seam, or a
+second pool, shows up without a profiler.
 """
 
 from __future__ import annotations
@@ -64,6 +66,19 @@ def cpu_split() -> dict[str, float]:
         elif comm.startswith("python"):
             out["py_workers"] += own + reaped
     return out
+
+
+def python_pool() -> tuple[int, int]:
+    """Live Python daemons (children of the driver JVM) and workers
+    (children of a daemon) in this process tree: one pool is one daemon
+    and its workers, so a second pool shows as a second daemon."""
+    stats = proc_stats()
+    tree = process_tree(stats) - {os.getpid()}
+    py = {p for p in tree if p in stats and _comm(p).startswith("python")}
+    jvms = {p for p in tree if p in stats and _comm(p) == "java"}
+    daemons = {p for p in py if int(stats[p][1]) in jvms}
+    workers = {p for p in py if int(stats[p][1]) in daemons}
+    return len(daemons), len(workers)
 
 
 def main() -> None:
@@ -112,10 +127,12 @@ def main() -> None:
         with tracer.span(name):
             wall, _ = time_query(spark, name, sf_dir)
         cpu = {k: v - cpu0[k] for k, v in cpu_split().items()}
+        daemons, workers = python_pool()
         print(f"WALL {name} cold={cold:.3f}s warm={wall:.3f}s", flush=True)
         print(
             f"CPU {name} jvm_less_jit={cpu['jvm']:.2f}s "
-            f"py_workers={cpu['py_workers']:.2f}s reaped={cpu['reaped']:.2f}s",
+            f"py_workers={cpu['py_workers']:.2f}s reaped={cpu['reaped']:.2f}s "
+            f"daemons={daemons} workers={workers}",
             flush=True,
         )
 
