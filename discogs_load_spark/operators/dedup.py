@@ -313,24 +313,12 @@ def lsh_candidate_pairs(
     # stages in the q175 profile); the eager checkpoint pays the chain
     # exactly once.
     signatures = signatures.localCheckpoint()
-    r = n_hashes // bands
-    band_struct = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.expr(band_key_sql(b, r, "spark")).alias("key"),
-            )
-            for b in range(bands)
-        ]
-    )
     # repartition on the join keys: ONE small shuffle (ids + band keys, not
     # shingles) whose output both sides of the self-join reuse
     # (ReusedExchange) — without it each side recomputes the full
     # shingle→minhash chain, and the join would shuffle anyway
-    buckets = (
-        signatures.select(F.col(id_col), F.explode(band_struct).alias("bk"))
-        .select(id_col, "bk.band", "bk.key")
-        .repartition("band", "key")
+    buckets = _band_buckets(signatures, id_col, n_hashes, bands).repartition(
+        "band", "key"
     )
     if max_bucket_size is not None:
         buckets = _cap_buckets(buckets, id_col, max_bucket_size)

@@ -18,10 +18,11 @@ central directory, and the path holds pyspark.zip (~1.3k entries) and the
 spark-core jar (~5.4k entries): 0.14-0.31 s of CPU per task. Python 3.13
 made the invalidation lazy (it drops the cached directory and reads it
 again only when an import needs it); this module makes it lazy on older
-versions by skipping the re-read while the archive's (mtime, size) is
-unchanged, so a zip rewritten in place or removed is still re-read. The
-daemon stamps its importers once before forking, so a worker's first task
-skips the re-read as well. On 3.13+ only the preload applies.
+versions by skipping the re-read while the archive's file identity
+(``sinks.files.file_identity``: path, size, mtime) is unchanged, so a zip
+rewritten in place or removed is still re-read. The daemon stamps its
+importers once before forking, so a worker's first task skips the re-read
+as well. On 3.13+ only the preload applies.
 
 Run as ``python -m discogs_load_spark.pydaemon`` through
 ``spark.python.daemon.module`` (``session.get_spark`` sets it).
@@ -31,21 +32,21 @@ from __future__ import annotations
 
 import gc
 import importlib
-import os
 import sys
 import zipimport
+
+from .sinks.files import file_identity
 
 _reread = zipimport.zipimporter.invalidate_caches
 
 
 def lazy_invalidate_caches(self: zipimport.zipimporter) -> None:
     """``zipimporter.invalidate_caches`` that re-reads the archive's
-    directory only when the archive's (mtime, size) changed since this
+    directory only when the archive's file identity changed since this
     importer last re-read it. A missing archive is handed to the original,
     which drops its entries."""
     try:
-        st = os.stat(self.archive)
-        stamp = (st.st_mtime_ns, st.st_size)
+        stamp = file_identity(self.archive)
     except OSError:
         stamp = None
     if stamp is None or stamp != getattr(self, "_read_stamp", None):

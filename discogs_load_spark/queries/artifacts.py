@@ -1,4 +1,5 @@
-"""The ingest artifacts, each declared once.
+"""The ingest artifacts, each declared once, and the query surface's
+fixture copies.
 
 An artifact is a frame derived from one fixture table that the query
 surface reads as landed parquet instead of recomputing it per query — the
@@ -10,20 +11,23 @@ accessors used to hand-copy lives here once:
 - :func:`fingerprint` — the cache key: the declaration's tag, the current
   value of every version input (the constants and mode switches the
   lineage branches on, resolved at call time so a changed constant changes
-  the key without anyone bumping a string), the source table's file
-  identity (path, size, mtime) and every upstream artifact's fingerprint.
-  A regenerated fixture or a semantics change can never serve a stale
-  artifact.
-- :func:`land` — the write-once landing: write to ``<dest>.tmp.<pid>``,
-  then ``os.rename`` into place, so a reader sees a complete directory or
-  none, and the loser of a concurrent build discards its copy.
+  the key without anyone bumping a string), the source table's
+  ``sinks.files.file_identity`` (path, size, mtime in nanoseconds) and
+  every upstream artifact's fingerprint. A regenerated fixture or a
+  semantics change can never serve a stale artifact.
 - :func:`enabled` — the referee switch: ``SPARK_GRAFT_ARTIFACTS=0`` makes
   every accessor return its in-plan lineage instead of the landed parquet
   (tests/test_sig_index.py pins the two paths equal for every family).
-- :func:`load` — the accessor body: land if missing (or ``rebuild``), read,
-  apply the declared read-side transform.
+- :func:`load` — the accessor body: land if missing (or ``rebuild``)
+  through ``sinks.files.land``, read, apply the declared read-side
+  transform.
 - :func:`prebuild` — build every artifact in declaration order and time
   each build, for bench.py and the tools.
+
+:func:`fixture_copy` is the same rule for the other on-disk copies the
+query surface derives from fixture tables (interchange round trips, lake
+layouts, stream sources, q170's XML dump): one key from the tables' file
+identities and the writer's inputs, one write-once landing in TMPDIR.
 
 The accessors keep their public names in their defining modules
 (``queries.sig_index``, ``queries.emb_index``, ``queries.dedup``); every
@@ -37,12 +41,16 @@ from __future__ import annotations
 import hashlib
 import importlib
 import os
+import re
 import shutil
+import tempfile
 import time
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sinks.files import file_identity, land, write_parquet
 
 
 @dataclass(frozen=True)
@@ -165,12 +173,8 @@ def enabled() -> bool:
     return os.environ.get("SPARK_GRAFT_ARTIFACTS", "1") != "0"
 
 
-def source_identity(table: str, sf_dir: str) -> str:
-    """(path, size, mtime) of a fixture table — changes when the fixture
-    is regenerated in place."""
-    src = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
-    st = os.stat(src)
-    return f"{src}|{st.st_size}|{int(st.st_mtime)}"
+def _table_identity(table: str, sf_dir: str):
+    return file_identity(os.path.join(sf_dir, f"{table}.parquet"))
 
 
 def fingerprint(name: str, sf_dir: str) -> str:
@@ -179,7 +183,7 @@ def fingerprint(name: str, sf_dir: str) -> str:
     for ref in art.inputs:
         val = _ref(art, ref)
         parts.append(f"{ref}={val() if callable(val) else val}")
-    parts.append(source_identity(art.source, sf_dir))
+    parts.append(str(_table_identity(art.source, sf_dir)))
     parts += (fingerprint(up, sf_dir) for up in art.upstream)
     return "|".join(parts)
 
@@ -192,33 +196,6 @@ def path(name: str, sf_dir: str) -> str:
     """Where the artifact for this fixture and these inputs lands."""
     art = ARTIFACTS[name]
     return os.path.join(_ref(art, art.root), f"{name}_{key(name, sf_dir)}")
-
-
-def land(
-    dest: str,
-    frame_fn: Callable[[], DataFrame],
-    rebuild: bool = False,
-    partition_by: str | None = None,
-) -> None:
-    """Write ``frame_fn()`` to ``dest`` once. ``partition_by`` lands it
-    directory-partitioned with one file per bucket (repartition on the
-    directory column first, so partitionBy does not write tasks x
-    buckets files)."""
-    if os.path.isdir(dest) and not rebuild:
-        return
-    frame = frame_fn()
-    tmp = f"{dest}.tmp.{os.getpid()}"
-    if partition_by:
-        frame = frame.repartition(partition_by)
-        frame.write.mode("overwrite").partitionBy(partition_by).parquet(tmp)
-    else:
-        frame.write.mode("overwrite").parquet(tmp)
-    try:
-        if rebuild and os.path.isdir(dest):
-            shutil.rmtree(dest)
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost a concurrent race
 
 
 def load(
@@ -234,7 +211,16 @@ def load(
     if enabled():
         dest = path(name, sf_dir)
         part = art.partition_by and _ref(art, art.partition_by)
-        land(dest, build, rebuild, part)
+
+        def write(tmp: str) -> None:
+            frame = build()
+            if part:
+                # one file per bucket: partitionBy alone writes tasks x
+                # buckets files
+                frame = frame.repartition(part)
+            write_parquet(frame, tmp, partition_by=part and [part])
+
+        land(dest, write, rebuild)
         df = spark.read.parquet(dest)
     else:
         df = build()
@@ -256,3 +242,56 @@ def prebuild(
         seconds[art.name] = round(time.monotonic() - t0, 3)
     spark.catalog.clearCache()
     return seconds
+
+
+# a superseded fixture copy is removed once it is this old, so a process
+# still reading it (it resolved its path before the fixture changed) is
+# not cut off, and each fixture regeneration leaks at most one copy per tag
+STALE_COPY_S = 3600
+
+
+def copy_key(sf_dir: str, tables: tuple[str, ...], inputs: tuple = ()) -> str:
+    """The key of a copy derived from ``tables`` of ``sf_dir``: their file
+    identities and the writer's ``inputs``."""
+    parts = [str(_table_identity(t, sf_dir)) for t in tables]
+    parts += map(str, inputs)
+    return hashlib.md5("|".join(parts).encode()).hexdigest()[:16]
+
+
+def fixture_copy(
+    tag: str,
+    sf_dir: str,
+    tables: tuple[str, ...],
+    write: Callable[[str], None],
+    inputs: tuple = (),
+) -> str:
+    """Land ``write``'s copy of ``tables`` once, as
+    ``TMPDIR/<tag>_<fixture dir name>_<copy_key>``, and return its path.
+    ``inputs`` are the writer's own settings (a file count, a row-group
+    size, an upstream artifact's key): a change in any of them or in a
+    table's file identity lands a new copy. A build also removes
+    same-prefix siblings (superseded copies, crashed builds' ``.tmp``
+    dirs) older than ``STALE_COPY_S``."""
+    root = tempfile.gettempdir()
+    prefix = f"{tag}_{os.path.basename(os.path.abspath(sf_dir))}_"
+    name = prefix + copy_key(sf_dir, tables, inputs)
+    dest = os.path.join(root, name)
+    if os.path.isdir(dest):
+        return dest
+    land(dest, write)
+    now = time.time_ns()
+    for entry in os.listdir(root):
+        stale = os.path.join(root, entry)
+        try:
+            if (
+                entry != name
+                and entry.startswith(prefix)
+                # the rest is a key: a fixture dir whose name extends this
+                # one ('sf0.1_x' beside 'sf0.1') keeps its copies
+                and re.fullmatch(r"[0-9a-f]{16}(\.tmp\.\d+)?", entry[len(prefix):])
+                and now - file_identity(stale).mtime_ns > STALE_COPY_S * 10**9
+            ):
+                shutil.rmtree(stale)
+        except OSError:
+            pass  # removed by a concurrent build
+    return dest

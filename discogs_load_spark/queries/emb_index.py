@@ -24,7 +24,6 @@ partition.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 
@@ -32,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.clustering import assign_clusters, recompute_centroids
 from ..session import load_tables
+from ..sinks.files import land, write_parquet
 from . import artifacts
 
 EMB_INDEX_DIR = os.environ.get(
@@ -159,9 +159,7 @@ def _full_centroid_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _centgen_root(sf_dir: str) -> str:
     """Per-corpus generation store: g_<trainkey> dirs + CURRENT pointer."""
-    corpus = hashlib.md5(
-        artifacts.source_identity("embeddings", sf_dir).encode()
-    ).hexdigest()[:16]
+    corpus = artifacts.copy_key(sf_dir, ("embeddings",))
     return os.path.join(EMB_INDEX_DIR, f"centgen_{corpus}")
 
 
@@ -223,18 +221,18 @@ def refresh_centroids(
         # from the frozen_centroids artifact (identical frame, same
         # fingerprint) instead of re-running the base Lloyd training per
         # seed (r14 review finding: every rebuild was double-training)
-        artifacts.land(
+        land(
             os.path.join(root, base_gen),
-            lambda: frozen_centroids(spark, sf_dir),
+            lambda tmp: write_parquet(frozen_centroids(spark, sf_dir), tmp),
         )
         _swap_pointer(root, base_gen)
         cur = base_gen
         if _probe is not None:
             _probe("seeded")
     if cur != full_gen:
-        artifacts.land(
+        land(
             os.path.join(root, full_gen),
-            lambda: _full_centroid_frame(spark, sf_dir),
+            lambda tmp: write_parquet(_full_centroid_frame(spark, sf_dir), tmp),
         )
         if _probe is not None:
             _probe("landed")  # new gen complete on disk; pointer still old

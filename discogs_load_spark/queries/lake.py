@@ -14,9 +14,11 @@ Schema notes (the production-relevant part):
   is single-line so the read side stays splittable (``multiLine`` off —
   the option that turns a 100 TB CSV read single-task-per-file is the
   first thing to audit in a slow CSV job).
-- Round-trip outputs are cached per fixture dir (same _SUCCESS protocol
-  as q88's stream re-materialization) so bench warm runs measure the
-  read+aggregate, not the rewrite.
+- Every copy written here (the round trips, q111's partitioned lake,
+  q174's two schema batches, q223's fragmented and compacted indexes) is
+  landed once per fixture by ``artifacts.fixture_copy``, so bench warm
+  runs measure the read+aggregate, not the rewrite, and a regenerated
+  fixture or an interrupted write is never served.
 """
 
 from __future__ import annotations
@@ -28,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..session import load_tables
+from . import artifacts
+from .artifacts import fixture_copy
 from .registry import register
 
 _DOC_SCHEMA = T.StructType(
@@ -39,14 +43,6 @@ _DOC_SCHEMA = T.StructType(
         T.StructField("n_chars", T.LongType()),
     ]
 )
-
-
-def _roundtrip_dir(sf_dir: str, fmt: str) -> str:
-    # key includes the source mtime: a regenerated fixture invalidates the
-    # cached round-trip instead of serving stale rows against a fresh oracle
-    mtime = int(os.path.getmtime(os.path.join(sf_dir, "documents.parquet")))
-    key = f"{sf_dir.strip('/').replace('/', '_')}_{mtime}"
-    return os.path.join(tempfile.gettempdir(), f"lake_{fmt}_{key}")
 
 
 def _fingerprint(df: DataFrame, fmt: str) -> DataFrame:
@@ -81,15 +77,16 @@ def q101_interchange_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     prove both interchange paths are lossless."""
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
 
+    writers = {
+        "json": lambda tmp: docs.write.mode("overwrite").json(tmp),
+        "csv": lambda tmp: docs.write.mode("overwrite")
+        .option("header", "true")
+        .option("quoteAll", "true")
+        .csv(tmp),
+    }
     legs = []
-    for fmt in ("json", "csv"):
-        out = _roundtrip_dir(sf_dir, fmt)
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            w = docs.write.mode("overwrite")
-            if fmt == "csv":
-                w.option("header", "true").option("quoteAll", "true").csv(out)
-            else:
-                w.json(out)
+    for fmt, write in writers.items():
+        out = fixture_copy(f"lake_{fmt}", sf_dir, ("documents",), write)
         r = spark.read.schema(_DOC_SCHEMA)
         back = (
             r.option("header", "true").csv(out) if fmt == "csv" else r.json(out)
@@ -127,18 +124,16 @@ def q111_partitioned_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.numeric import dec_sum
 
     events = load_tables(spark, sf_dir, ["events"])["events"]
-    mtime = int(os.path.getmtime(os.path.join(sf_dir, "events.parquet")))
-    lake = os.path.join(
-        tempfile.gettempdir(),
-        f"lake_part_{sf_dir.strip('/').replace('/', '_')}_{mtime}",
-    )
-    if not os.path.exists(os.path.join(lake, "_SUCCESS")):
+
+    def write(tmp: str) -> None:
         (
             events.withColumn("event_date", F.to_date("ts"))
             .write.mode("overwrite")
             .partitionBy("event_date")
-            .parquet(lake)
+            .parquet(tmp)
         )
+
+    lake = fixture_copy("lake_part", sf_dir, ("events",), write)
     back = spark.read.parquet(lake).filter(
         F.col("event_date") == F.lit("2024-01-15").cast("date")
     )
@@ -163,8 +158,9 @@ def q132_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exchange-free fact-fact join off BUCKETED lake tables — the lake
     analogue of the reference's b-tree join indexes (sql/indexes.sql:7-16)
     promoted from a test into the declared surface: both sides are
-    written bucketed+sorted by the join key once (cached per fixture
-    mtime), and the merge-hinted join then runs with NO shuffle on
+    written bucketed+sorted by the join key once (named by the two
+    tables' ``artifacts.copy_key``, so a regenerated fixture gets new
+    tables), and the merge-hinted join then runs with NO shuffle on
     either side — the plan shows no hashpartitioning exchange on the
     join keys (asserted in test_plans). At 100 TB this is the difference
     between re-shuffling two fact tables per query and reading
@@ -175,10 +171,7 @@ def q132_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sinks.files import write_bucketed_table
 
-    import re
-
-    mtime = int(os.path.getmtime(os.path.join(sf_dir, "orders.parquet")))
-    key = re.sub(r"[^A-Za-z0-9_]", "_", f"{sf_dir.strip('/')}_{mtime}")
+    key = artifacts.copy_key(sf_dir, ("orders", "lineitem"))
     db = "q132_bucketed"
     loc = os.path.join(tempfile.gettempdir(), db)
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
@@ -444,9 +437,10 @@ def q162_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Avro is not bundled in this environment — the external
     spark-avro module would slot into the same fingerprint harness.)"""
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    out = _roundtrip_dir(sf_dir, "orc")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        docs.write.mode("overwrite").orc(out)
+    out = fixture_copy(
+        "lake_orc", sf_dir, ("documents",),
+        lambda tmp: docs.write.mode("overwrite").orc(tmp),
+    )
     return _fingerprint(spark.read.orc(out), "orc")
 
 
@@ -542,16 +536,18 @@ def q174_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable shuffle. Plain v1/v2 subdirs (no '=' in names)
     keep partition-column inference out of the schema."""
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    out = _roundtrip_dir(sf_dir, "evo")
-    if not os.path.exists(os.path.join(out, "v2", "_SUCCESS")):
+
+    def write(tmp: str) -> None:
         v1 = docs.filter(F.col("doc_id") % 2 == 0).select(
             "doc_id", "lang", "n_chars"
         )
         v2 = docs.filter(F.col("doc_id") % 2 == 1).select(
             "doc_id", "lang", "n_chars", "source"
         )
-        v1.write.mode("overwrite").parquet(os.path.join(out, "v1"))
-        v2.write.mode("overwrite").parquet(os.path.join(out, "v2"))
+        v1.write.mode("overwrite").parquet(os.path.join(tmp, "v1"))
+        v2.write.mode("overwrite").parquet(os.path.join(tmp, "v2"))
+
+    out = fixture_copy("lake_evo", sf_dir, ("documents",), write)
     merged = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(out, "v1"), os.path.join(out, "v2")
     )
@@ -620,23 +616,19 @@ def q223_cdc_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival grain — so partitionBy writes one file per (slice x
     touched bucket), ~slices x buckets small files (the pathology; an
     explicit slice count because AQE's post-shuffle coalescing would
-    otherwise hide it at fixture scale). Both artifacts cache per
-    fixture mtime (the _roundtrip_dir rule). Scale shape: compaction
+    otherwise hide it at fixture scale). Both copies are landed once by
+    ``artifacts.fixture_copy``, keyed by the documents table's file
+    identity and the cdc_chunk_index fingerprint: a write that fails
+    leaves no directory behind, so an interrupted compaction is rebuilt
+    on the next call instead of read back empty. Scale shape: compaction
     is one read + one hash exchange on the partition column + one
     write, no wide aggregate; at 100 TB it runs per-partition-group on
     the q164 plan's grouping rather than whole-table."""
     from .dedup import cdc_chunk_index
 
-    frag = _roundtrip_dir(sf_dir, "cdcfrag")
-    comp = _roundtrip_dir(sf_dir, "cdccomp")
-    global _LAST_COMPACTION_DIRS
-    _LAST_COMPACTION_DIRS = (frag, comp)
     schema = "chunk_hash string, pb string"
-    # guard on BOTH artifacts (ADVICE r12): a /tmp reaper that removes the
-    # fragmented dir while the compacted one survives would otherwise
-    # leave _LAST_COMPACTION_DIRS pointing at a missing frag dir and fail
-    # the file-count test on stale-cache state rather than a regression
-    if not (os.path.isdir(comp) and os.path.isdir(frag)):
+
+    def write_frag(tmp: str) -> None:
         chunks = (
             cdc_chunk_index(spark, sf_dir)
             .select("chunk_hash")
@@ -651,7 +643,9 @@ def q223_cdc_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             # A derived key keeps the explicit (non-coalescable) exchange.
             .repartition(COMPACTION_ARRIVAL_SLICES, F.xxhash64("chunk_hash"))
         )
-        chunks.write.mode("overwrite").partitionBy("pb").parquet(frag)
+        chunks.write.mode("overwrite").partitionBy("pb").parquet(tmp)
+
+    def write_comp(tmp: str) -> None:
         # the compaction rewrite under test
         (
             spark.read.schema(schema)
@@ -659,8 +653,20 @@ def q223_cdc_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition("pb")
             .write.mode("overwrite")
             .partitionBy("pb")
-            .parquet(comp)
+            .parquet(tmp)
         )
+
+    # both copies key on the chunk index they derive from; each is landed
+    # on its own, so a reaped or half-written one is rebuilt, never read
+    inputs = (
+        artifacts.key("cdc_chunk_index", sf_dir),
+        COMPACTION_ARRIVAL_SLICES,
+    )
+    docs = ("documents",)
+    frag = fixture_copy("lake_cdcfrag", sf_dir, docs, write_frag, inputs)
+    comp = fixture_copy("lake_cdccomp", sf_dir, docs, write_comp, inputs)
+    global _LAST_COMPACTION_DIRS
+    _LAST_COMPACTION_DIRS = (frag, comp)
     idx = spark.read.schema(schema).parquet(comp)
     return idx.groupBy(
         F.substring("chunk_hash", 1, 1).alias("bucket")

@@ -12,9 +12,13 @@ duplicate-id semantics.
 
 from __future__ import annotations
 
+import glob
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..session import load_tables, local_frame
+from .artifacts import fixture_copy
 from .registry import register
 
 
@@ -305,68 +309,20 @@ def q133_shred_multiarray_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q170_dump_path(docs: DataFrame, sf_dir: str) -> str:
-    """Build-once monolithic releases .xml.gz rendered from the documents
-    fixture (cached in TMPDIR keyed by fixture dir + row count + a content
-    fingerprint, so a driver-side fixture regeneration can never serve a
-    stale dump).
+    """The monolithic releases .xml.gz rendered from the documents
+    fixture: landed once per fixture by ``artifacts.fixture_copy`` (keyed
+    by the documents table's file identity, so a regenerated fixture can
+    never serve a stale dump), and the path of the one gzip part inside
+    the landed directory.
 
     Harness shim for the pre-shard surface: real dumps arrive as files; here
     the fixture IS the source of truth, so the XML must be derived from it
     deterministically. Records render executor-side and stream through the
     single-partition gzip text sink (the dump must be ONE monolithic gzip —
-    the artifact the pre-sharder exists to split), paid once per process per
-    sf_dir; the driver only touches a 1-row fingerprint scalar. The text
-    rides in <title> wrapped in [ ] sentinels so surrounding-whitespace trim
+    the artifact the pre-sharder exists to split); the driver never holds
+    the corpus, and a warm call starts no Spark job. The text rides in
+    <title> wrapped in [ ] sentinels so surrounding-whitespace trim
     semantics in any XML reader can never change the recovered byte count."""
-    import os
-    import tempfile
-
-    # content fingerprint in the cache key: the driver regenerates fixtures
-    # between rounds, and a stale cached dump with the same ROW COUNT but
-    # different text would silently diverge from the oracle's parquet view
-    fp_row = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64("doc_id", "text", "lang").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]  # bounded: 1-row scalar
-    n = fp_row["n"]
-    fp = abs(int(fp_row["h"] or 0)) % 10**12
-    base = os.path.basename(os.path.abspath(sf_dir))
-    path = os.path.join(
-        tempfile.gettempdir(), f"q170_releases_{base}_{n}_{fp}.xml.gz"
-    )
-    if os.path.exists(path):
-        return path
-    # drop superseded caches for this fixture dir: the driver regenerates
-    # fixtures every round (new fingerprint), so without this each round
-    # leaks another multi-MB gzip in TMPDIR for the life of the machine.
-    # Guards: (a) a strict name regex so base='sf0.1' can never evict
-    # caches of a dir literally named 'sf0.1_x'; (b) only files older
-    # than an hour are removed, so a CONCURRENT process that just
-    # resolved its path via the exists() fast path cannot have the file
-    # deleted out from under its Spark tasks (the leak stays bounded to
-    # at most one superseded file per fixture regeneration)
-    import glob
-    import re
-    import time
-
-    stale_re = re.compile(
-        rf"^q170_releases_{re.escape(base)}_\d+_\d+\.xml\.gz$"
-    )
-    for stale in glob.glob(
-        os.path.join(tempfile.gettempdir(), f"q170_releases_{base}_*.xml.gz")
-    ):
-        try:
-            if stale_re.match(os.path.basename(stale)) and (
-                time.time() - os.path.getmtime(stale) > 3600
-            ):
-                os.remove(stale)
-        except OSError:
-            pass
-    # Distributed render (VERDICT r08 item 6 — no corpus-shaped collect):
-    # records render executor-side as text rows, shuffle to ONE partition
-    # (the dump must be a single monolithic gzip — that is the artifact the
-    # pre-sharder exists to split), sort within it, and stream through the
-    # gzip text sink; the driver never holds the corpus.
     spark = docs.sparkSession
 
     def esc(c):  # xml.sax.saxutils.escape: & first, then < and >
@@ -374,44 +330,42 @@ def _q170_dump_path(docs: DataFrame, sf_dir: str) -> str:
         c = F.replace(c, F.lit("<"), F.lit("&lt;"))
         return F.replace(c, F.lit(">"), F.lit("&gt;"))
 
-    rec = F.concat(
-        F.lit('<release id="'),
-        F.col("doc_id").cast("long").cast("string"),
-        F.lit('" status="Accepted"><title>['),
-        esc(F.col("text")),
-        F.lit("]</title><country>"),
-        esc(F.col("lang")),
-        F.lit("</country></release>"),
-    )
-    body = docs.select(
-        F.lit(1).alias("k0"),
-        F.col("doc_id").cast("long").alias("k1"),
-        rec.alias("line"),
-    )
-    edges = local_frame(
-        spark,
-        [
-            (0, 0, '<?xml version="1.0" encoding="UTF-8"?>\n<releases>'),
-            (2, 0, "</releases>"),
-        ],
-        "k0 int, k1 long, line string",
-    )
-    tmp = f"{path}.build{os.getpid()}"
-    (
-        edges.unionByName(body)
-        .repartition(1)
-        .sortWithinPartitions("k0", "k1")
-        .select("line")
-        .write.mode("overwrite")
-        .option("compression", "gzip")
-        .text(tmp)
-    )
-    part = glob.glob(os.path.join(tmp, "part-*.txt.gz"))[0]
-    os.replace(part, path)  # atomic: concurrent builders converge
-    import shutil
+    def write(tmp: str) -> None:
+        rec = F.concat(
+            F.lit('<release id="'),
+            F.col("doc_id").cast("long").cast("string"),
+            F.lit('" status="Accepted"><title>['),
+            esc(F.col("text")),
+            F.lit("]</title><country>"),
+            esc(F.col("lang")),
+            F.lit("</country></release>"),
+        )
+        body = docs.select(
+            F.lit(1).alias("k0"),
+            F.col("doc_id").cast("long").alias("k1"),
+            rec.alias("line"),
+        )
+        edges = local_frame(
+            spark,
+            [
+                (0, 0, '<?xml version="1.0" encoding="UTF-8"?>\n<releases>'),
+                (2, 0, "</releases>"),
+            ],
+            "k0 int, k1 long, line string",
+        )
+        (
+            edges.unionByName(body)
+            .repartition(1)
+            .sortWithinPartitions("k0", "k1")
+            .select("line")
+            .write.mode("overwrite")
+            .option("compression", "gzip")
+            .text(tmp)
+        )
 
-    shutil.rmtree(tmp, ignore_errors=True)
-    return path
+    out = fixture_copy("q170_releases", sf_dir, ("documents",), write)
+    (part,) = glob.glob(os.path.join(out, "part-*.txt.gz"))
+    return part
 
 
 @register(
@@ -437,8 +391,6 @@ def q170_preshard_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte sums. The ≥2-shard assertion (via pipeline.LAST_PRESHARD) makes
     the sharded lineage load-bearing: a silent fallback to the single-task
     path fails the query rather than the intent."""
-    import os
-
     from ..pipeline import LAST_PRESHARD, load_dumps
 
     (docs,) = _t(spark, sf_dir, "documents")

@@ -23,7 +23,6 @@ transformation.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import tempfile
 import uuid
@@ -36,7 +35,7 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from ..functions.numeric import dec_sum, dec_sum_sql
 from ..session import load_tables, local_frame, scoped_conf
-from .artifacts import source_identity
+from .artifacts import fixture_copy
 from .registry import register
 
 
@@ -211,28 +210,26 @@ STREAM_SOURCES = {
 
 def stream_source(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The streaming DataFrame over a declared source copy (STREAM_SOURCES),
-    building the copy first if this fixture has none yet. The copy stands
+    landed once per fixture by ``artifacts.fixture_copy``. The copy stands
     in for the always-there kafka/landing source a production stream
-    reads; the downstream operators are source-agnostic. Its cache key is
-    the fixture table's (path, size, mtime) identity plus the writer's
-    row-group size and the file count, so a regenerated fixture, a layout
-    change or a file-count probe never serves a stale copy."""
+    reads; the downstream operators are source-agnostic. Its key is the
+    fixture table's file identity plus the writer's row-group size and
+    the file count, so a regenerated fixture, a layout change or a
+    file-count probe never serves a stale copy."""
     src = STREAM_SOURCES[name]
     table = load_tables(spark, sf_dir, [src.table])[src.table]
     nf = STREAM_SOURCE_FILES if src.max_files_per_trigger else None
-    ident = (
-        f"{source_identity(src.table, sf_dir)}"
-        f"|rg{STREAM_SOURCE_ROW_GROUP_BYTES}|nf{nf}"
-    )
-    key = hashlib.md5(ident.encode()).hexdigest()[:16]
-    path = os.path.join(
-        tempfile.gettempdir(), f"stream_{name}{nf or ''}_{key}"
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def write(tmp: str) -> None:
         frame = src.frame(table)
         if nf:
             frame = frame.repartition(nf)
-        _source_writer(frame).mode("overwrite").parquet(path)
+        _source_writer(frame).mode("overwrite").parquet(tmp)
+
+    path = fixture_copy(
+        f"stream_{name}{nf or ''}", sf_dir, (src.table,), write,
+        inputs=(f"rg{STREAM_SOURCE_ROW_GROUP_BYTES}", f"nf{nf}"),
+    )
     reader = spark.readStream.schema(src.schema or table.schema)
     if src.max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", src.max_files_per_trigger)

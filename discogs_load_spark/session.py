@@ -10,6 +10,7 @@ a shuffle partition is ~128-512 MB at the target scale).
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import os
 import tempfile
 import threading
@@ -19,6 +20,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from .sinks.files import file_identity, land
 
 _SHIPPED_APPS: set[str] = set()
 
@@ -275,41 +278,34 @@ def _maybe_reshard(spark: SparkSession, path: str) -> str:
     At production scale inputs arrive as many files/row-groups and this
     path never triggers (files below 256 KB or already multi-group are
     returned unchanged). Row order is preserved (part k = rows [k*step,
-    (k+1)*step)), the cache key is (path, size, mtime), and the rewrite is
-    atomic (tmp dir + rename) so concurrent sessions share one cache.
+    (k+1)*step)); the copy is keyed by the file's ``file_identity`` and
+    the part count, and landed by ``sinks.files.land`` (write aside, then
+    rename), so concurrent sessions share one complete cache.
     """
     import pyarrow.parquet as pq
 
-    st = os.stat(path)
-    if st.st_size < _RESHARD_MIN_BYTES:
+    if os.path.getsize(path) < _RESHARD_MIN_BYTES:
         return path
     cores = spark.sparkContext.defaultParallelism
     meta = pq.ParquetFile(path).metadata
     if meta.num_row_groups >= min(cores, 4):
         return path
     nparts = min(cores, max(2, meta.num_rows // _RESHARD_MIN_ROWS_PER_PART))
-    import hashlib
-
     key = hashlib.md5(
-        f"{os.path.abspath(path)}:{st.st_size}:{st.st_mtime_ns}:{nparts}".encode()
+        f"{file_identity(path)}|{nparts}".encode()
     ).hexdigest()[:16]
-    dest = Path(tempfile.gettempdir()) / "discogs_load_shards" / key
-    if not dest.exists():
+
+    def write(tmp: str) -> None:
         table = pq.read_table(path)
         step = -(-table.num_rows // nparts)
-        tmp = dest.with_name(f"{key}.tmp.{os.getpid()}")
-        tmp.mkdir(parents=True, exist_ok=True)
+        os.makedirs(tmp, exist_ok=True)
         for i in range(nparts):
             chunk = table.slice(i * step, step)
             if chunk.num_rows:
-                pq.write_table(chunk, tmp / f"part-{i:05d}.parquet")
-        try:
-            tmp.rename(dest)
-        except OSError:  # another session won the race; its copy is complete
-            import shutil
+                pq.write_table(chunk, os.path.join(tmp, f"part-{i:05d}.parquet"))
 
-            shutil.rmtree(tmp, ignore_errors=True)
-    return str(dest)
+    dest = os.path.join(tempfile.gettempdir(), "discogs_load_shards", key)
+    return land(dest, write)
 
 
 def _read_parquet_normalized(spark: SparkSession, path: str):

@@ -229,11 +229,11 @@ def ensure_tier(spark: SparkSession, src_dir: str, out_dir: str, scale: int = 1)
     the seconds spent generating (0.0 on reuse). The fixtures are
     regenerated between rounds and a derived tier tiles them, so a cache
     keyed on the directory alone would tile last round's data."""
+    from discogs_load_spark.sinks.files import file_identity
+
+    paths = [os.path.join(src_dir, f"{n}.parquet") for n in FINGERPRINT_TABLES]
     fp = f"gen{GEN_VERSION}|" + "|".join(
-        f"{n}:{os.path.getsize(p)}:{int(os.path.getmtime(p))}"
-        for n in FINGERPRINT_TABLES
-        for p in [os.path.join(src_dir, f"{n}.parquet")]
-        if os.path.exists(p)
+        str(file_identity(p)) for p in paths if os.path.exists(p)
     )
     marker = os.path.join(out_dir, "_source_fp.txt")
     have = all(
