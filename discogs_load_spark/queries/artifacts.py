@@ -19,8 +19,9 @@ accessors used to hand-copy lives here once:
   every accessor return its in-plan lineage instead of the landed parquet
   (tests/test_sig_index.py pins the two paths equal for every family).
 - :func:`load` — the accessor body: land if missing (or ``rebuild``)
-  through ``sinks.files.land``, read, apply the declared read-side
-  transform.
+  through ``sinks.files.land`` as ``<root>/<name>_<fixture dir
+  name>_<key>``, sweep that name's superseded builds, read, apply the
+  declared read-side transform.
 - :func:`prebuild` — build every artifact in declaration order and time
   each build, for bench.py and the tools.
 
@@ -192,10 +193,51 @@ def key(name: str, sf_dir: str) -> str:
     return hashlib.md5(fingerprint(name, sf_dir).encode()).hexdigest()[:16]
 
 
+def _prefix(name: str, sf_dir: str) -> str:
+    return f"{name}_{os.path.basename(os.path.abspath(sf_dir))}_"
+
+
 def path(name: str, sf_dir: str) -> str:
-    """Where the artifact for this fixture and these inputs lands."""
+    """Where the artifact for this fixture and these inputs lands:
+    ``<root>/<name>_<fixture dir name>_<key>``."""
     art = ARTIFACTS[name]
-    return os.path.join(_ref(art, art.root), f"{name}_{key(name, sf_dir)}")
+    return os.path.join(_ref(art, art.root), _prefix(name, sf_dir) + key(name, sf_dir))
+
+
+# a superseded copy or artifact is removed once it is this old, so a
+# process still reading it (it resolved its path before the fixture
+# changed) is not cut off, and each fixture regeneration leaks at most one
+# copy per name
+STALE_COPY_S = 3600
+
+
+def _land(
+    dest: str, prefix: str, write: Callable[[str], None], rebuild: bool = False
+) -> str:
+    """``sinks.files.land`` ``dest``, and when that builds it, remove
+    ``dest``'s siblings named ``<prefix><key>`` (superseded copies, and
+    crashed builds' ``<prefix><key>.tmp.<pid>`` dirs) older than
+    ``STALE_COPY_S``. The rest of the name must be a key, so a fixture dir
+    whose name extends this one ('sf0.1_x' beside 'sf0.1') keeps its
+    copies."""
+    if os.path.isdir(dest) and not rebuild:
+        return dest
+    land(dest, write, rebuild)
+    root, name = os.path.split(dest)
+    now = time.time_ns()
+    for entry in os.listdir(root):
+        stale = os.path.join(root, entry)
+        try:
+            if (
+                entry != name
+                and entry.startswith(prefix)
+                and re.fullmatch(r"[0-9a-f]{16}(\.tmp\.\d+)?", entry[len(prefix):])
+                and now - file_identity(stale).mtime_ns > STALE_COPY_S * 10**9
+            ):
+                shutil.rmtree(stale)
+        except OSError:
+            pass  # removed by a concurrent build
+    return dest
 
 
 def load(
@@ -220,7 +262,7 @@ def load(
                 frame = frame.repartition(part)
             write_parquet(frame, tmp, partition_by=part and [part])
 
-        land(dest, write, rebuild)
+        _land(dest, _prefix(name, sf_dir), write, rebuild)
         df = spark.read.parquet(dest)
     else:
         df = build()
@@ -242,12 +284,6 @@ def prebuild(
         seconds[art.name] = round(time.monotonic() - t0, 3)
     spark.catalog.clearCache()
     return seconds
-
-
-# a superseded fixture copy is removed once it is this old, so a process
-# still reading it (it resolved its path before the fixture changed) is
-# not cut off, and each fixture regeneration leaks at most one copy per tag
-STALE_COPY_S = 3600
 
 
 def copy_key(sf_dir: str, tables: tuple[str, ...], inputs: tuple = ()) -> str:
@@ -272,26 +308,6 @@ def fixture_copy(
     table's file identity lands a new copy. A build also removes
     same-prefix siblings (superseded copies, crashed builds' ``.tmp``
     dirs) older than ``STALE_COPY_S``."""
-    root = tempfile.gettempdir()
-    prefix = f"{tag}_{os.path.basename(os.path.abspath(sf_dir))}_"
-    name = prefix + copy_key(sf_dir, tables, inputs)
-    dest = os.path.join(root, name)
-    if os.path.isdir(dest):
-        return dest
-    land(dest, write)
-    now = time.time_ns()
-    for entry in os.listdir(root):
-        stale = os.path.join(root, entry)
-        try:
-            if (
-                entry != name
-                and entry.startswith(prefix)
-                # the rest is a key: a fixture dir whose name extends this
-                # one ('sf0.1_x' beside 'sf0.1') keeps its copies
-                and re.fullmatch(r"[0-9a-f]{16}(\.tmp\.\d+)?", entry[len(prefix):])
-                and now - file_identity(stale).mtime_ns > STALE_COPY_S * 10**9
-            ):
-                shutil.rmtree(stale)
-        except OSError:
-            pass  # removed by a concurrent build
-    return dest
+    prefix = _prefix(tag, sf_dir)
+    dest = os.path.join(tempfile.gettempdir(), prefix + copy_key(sf_dir, tables, inputs))
+    return _land(dest, prefix, write)

@@ -39,7 +39,6 @@ from .artifacts import fixture_copy
 from .registry import register
 
 
-STREAM_DRAIN_PARTITIONS = "8"
 # Stream-source parquet row-group size + the scoped split sizing that
 # exploits it (r14): a micro-batch reads `maxFilesPerTrigger` fixture-scale
 # files, and with single-row-group files a byte-range split never yields
@@ -55,19 +54,25 @@ STREAM_SOURCE_ROW_GROUP_BYTES = 256 * 1024
 STREAM_DRAIN_SPLIT_BYTES = str(1024 * 1024)
 STREAM_DRAIN_OPEN_COST = str(256 * 1024)
 
-# Session config every bounded drain runs under (scoped_conf restores it).
+# Session config every bounded drain runs under (scoped_conf restores
+# it), beside the shuffle-partition count ``_drain`` adds
+# (``drain_partitions``).
 #
 # A streaming query materializes one state store (and its per-batch
 # version files) PER shuffle partition PER stateful operator, so the
 # fixed cost of draining a small bounded stream is dominated by
-# ``spark.sql.shuffle.partitions`` — 32 stores x versions for kilobytes
-# of state. 8 keeps all cores busy at bench scale while quartering the
-# state-store churn. This is the standard deployment-sizing knob (state
-# partition count is pinned by the checkpoint at first start); a real
-# 24/7 stream at 100 TB/day sizes it to the cluster instead — nothing
-# about the operators changes. The split sizing pairs with the sources'
-# small row groups (STREAM_SOURCE_ROW_GROUP_BYTES above) so per-batch
-# map stages parallelize past the file count.
+# ``spark.sql.shuffle.partitions``: at the session's one partition per
+# core, 32 stores x versions for kilobytes of state. A drain therefore
+# runs min(STREAM_DRAIN_MAX_PARTITIONS, cores) partitions: every stateful
+# stage, state store and landing write is one task wave (at 4 cores, 8
+# partitions ran each as two waves; 4 cut q218's CPU 5.40 -> 4.83 s and
+# q115's 3.06 -> 2.21 s), and past 8 cores the store churn stays capped.
+# This is the standard deployment-sizing knob (state partition count is
+# pinned by the checkpoint at first start); a real 24/7 stream at
+# 100 TB/day sizes it to the cluster instead — nothing about the
+# operators changes. The split sizing pairs with the sources' small row
+# groups (STREAM_SOURCE_ROW_GROUP_BYTES above) so per-batch map stages
+# parallelize past the file count.
 #
 # AQE OFF inside the drain scope (r15): a foreachBatch body is a fresh
 # BATCH query per micro-batch, so AQE re-plans it per batch and
@@ -83,8 +88,8 @@ STREAM_DRAIN_OPEN_COST = str(256 * 1024)
 # already run with AQE off internally (streaming queries don't support
 # it); this makes the foreachBatch bodies match. Batch-mode consumers
 # outside the drain scope keep AQE on.
+STREAM_DRAIN_MAX_PARTITIONS = 8
 STREAM_DRAIN_CONF = {
-    "spark.sql.shuffle.partitions": STREAM_DRAIN_PARTITIONS,
     "spark.sql.files.maxPartitionBytes": STREAM_DRAIN_SPLIT_BYTES,
     "spark.sql.files.openCostInBytes": STREAM_DRAIN_OPEN_COST,
     "spark.sql.adaptive.enabled": "false",
@@ -92,11 +97,18 @@ STREAM_DRAIN_CONF = {
 NO_DATA_BATCHES_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
+def drain_partitions(parallelism: int) -> int:
+    """Shuffle partitions of a drain on a session with ``parallelism``
+    task slots: one task wave, at most STREAM_DRAIN_MAX_PARTITIONS."""
+    return min(STREAM_DRAIN_MAX_PARTITIONS, parallelism)
+
+
 def _drain(
     spark: SparkSession, writer: DataStreamWriter, no_data_batches: bool = True
 ) -> None:
-    """Run a bounded stream to completion under STREAM_DRAIN_CONF: start,
-    wait until all available input is processed, stop.
+    """Run a bounded stream to completion under STREAM_DRAIN_CONF and
+    ``drain_partitions`` shuffle partitions: start, wait until all
+    available input is processed, stop.
 
     ``no_data_batches=False`` additionally disables the watermark-advance
     no-data micro-batch for THIS drain (r14). That batch exists so
@@ -110,7 +122,11 @@ def _drain(
     Result-identical BY CONSTRUCTION for emit-on-arrival operators; never
     set it for watermarked append aggregations (sessions, tumbling
     windows) — those rely on the no-data batch for their final rows."""
-    conf = STREAM_DRAIN_CONF
+    parallelism = spark.sparkContext.defaultParallelism
+    conf = {
+        **STREAM_DRAIN_CONF,
+        "spark.sql.shuffle.partitions": str(drain_partitions(parallelism)),
+    }
     if not no_data_batches:
         conf = {**conf, NO_DATA_BATCHES_KEY: "false"}
     with scoped_conf(spark, conf):

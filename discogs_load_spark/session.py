@@ -36,7 +36,7 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     grading driver, or spark-submit without --py-files). Zipping the package
     once per application and addPyFile-ing it makes workers self-sufficient.
     On a local master, ``get_spark`` also puts the package's parent
-    directory on the workers' ``PYTHONPATH`` (see ``python_worker_conf``),
+    directory on the workers' ``PYTHONPATH`` (see ``local_master_conf``),
     so local workers import the package from there as well.
     """
     app_id = spark.sparkContext.applicationId
@@ -67,8 +67,14 @@ def get_spark(
       the DuckDB oracle's UTC-naive timestamps).
     - autoBroadcastJoinThreshold stays default (10 MB); dimension tables in
       the star schema (region/nation/label/...) broadcast automatically.
+    - On a local master (``local_master_conf``), creating a local file
+      starts no process: the ``file:`` scheme is the package's
+      in-process local file system (``jvm/``), which sets permissions
+      and reads link status through java.nio where Hadoop without
+      libhadoop forks ``chmod`` and ``readlink``; ``.crc`` sidecars and
+      permission bits are as Hadoop's own.
     - Python workers on a local master start from
-      ``discogs_load_spark.pydaemon`` (``python_worker_conf``). The daemon
+      ``discogs_load_spark.pydaemon`` (``local_master_conf``). The daemon
       imports pandas and pyarrow once and freezes its heap
       (``gc.freeze``) before it forks, so every worker shares those
       modules' pages instead of importing them itself. Before Python
@@ -112,30 +118,46 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    for k, v in {**python_worker_conf(master), **(extra_conf or {})}.items():
+    for k, v in {**local_master_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
 
-def python_worker_conf(master: str) -> dict[str, str]:
-    """Config that starts a local master's Python workers from
-    ``discogs_load_spark.pydaemon`` (pandas and pyarrow preloaded, lazy
-    zipimport invalidation) instead of ``pyspark.daemon``.
+# In-process local file system (sources and build: ``jvm/``,
+# ``tools/build_local_fs_jar.py``).
+LOCAL_FS_JAR = Path(__file__).resolve().parent / "jvm" / "local-fs.jar"
 
-    The daemon starts before any task ships this package, so the
-    package's parent directory goes on the workers' PYTHONPATH. A local
-    master's workers share the driver's files; a remote executor's need
-    not, so every other master keeps ``pyspark.daemon``.
-    (``spark.python.worker.module`` is no way round that:
-    ``pyspark.daemon`` honours only worker modules named ``pyspark*``.)
+
+def local_master_conf(master: str) -> dict[str, str]:
+    """Config for a local master, whose executors are the driver JVM and
+    whose Python workers share the driver's files; every other master
+    gets none of it.
+
+    - Python workers start from ``discogs_load_spark.pydaemon`` (pandas
+      and pyarrow preloaded, lazy zipimport invalidation) instead of
+      ``pyspark.daemon``. The daemon starts before any task ships this
+      package, so the package's parent directory goes on the workers'
+      PYTHONPATH. (``spark.python.worker.module`` is no way round that
+      for remote executors: ``pyspark.daemon`` honours only worker
+      modules named ``pyspark*``.)
+    - The ``file:`` scheme, for FileSystem and FileContext, is the
+      checksummed local file system over ``jvm/NioRawLocalFileSystem``:
+      without libhadoop, Hadoop's own forks ``chmod`` for every file and
+      directory it creates and ``readlink`` for every FileContext rename
+      (a warm perfbench curation pass at ``local[4]``: 322 and 256
+      forks). The jar goes on the driver's classpath, which a local
+      master's executors share.
     """
     if master != "local" and not master.startswith("local["):
         return {}
     return {
         "spark.python.daemon.module": "discogs_load_spark.pydaemon",
         "spark.executorEnv.PYTHONPATH": str(Path(__file__).resolve().parent.parent),
+        "spark.driver.extraClassPath": str(LOCAL_FS_JAR),
+        "spark.hadoop.fs.file.impl": "discogs_load_spark.jvm.NioLocalFileSystem",
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": "discogs_load_spark.jvm.NioLocalFs",
     }
 
 

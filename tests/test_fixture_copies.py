@@ -179,6 +179,45 @@ def test_fixture_copy_removes_only_its_own_old_siblings(
     }
 
 
+def test_artifact_build_removes_only_its_own_old_siblings(
+    spark, tmp_path, monkeypatch
+):
+    """A build of an artifact removes that artifact's superseded builds for
+    the same fixture (and crashed ``.tmp`` dirs) once they are
+    ``STALE_COPY_S`` old; a young one, another artifact's and another
+    fixture's stay."""
+    from discogs_load_spark.queries import dedup
+
+    sf = _copy_fixture(tmp_path / "fx", "documents")
+    root = tmp_path / "cdc_index"
+    root.mkdir()
+    monkeypatch.setattr(dedup, "CDC_INDEX_DIR", str(root))
+    monkeypatch.setattr(dedup, "_cdc_index_frame", lambda spark, sf_dir: spark.range(3))
+    old = 10**9 * 7200  # two hours back
+    siblings = {
+        "old": "cdc_chunk_index_fx_0123456789abcdef",
+        "old_tmp": "cdc_chunk_index_fx_0123456789abcdef.tmp.42",
+        "young": "cdc_chunk_index_fx_fedcba9876543210",
+        "other_artifact": "cdc_delta_landing_fx_0123456789abcdef",
+        "other_fixture": "cdc_chunk_index_fx_2_0123456789abcdef",
+    }
+    for name in siblings.values():
+        d = root / name
+        d.mkdir()
+        if name != siblings["young"]:
+            t = os.stat(d).st_mtime_ns - old
+            os.utime(d, ns=(t, t))
+
+    assert artifacts.load("cdc_chunk_index", spark, sf).count() == 3
+    built = os.path.basename(artifacts.path("cdc_chunk_index", sf))
+    assert set(os.listdir(root)) == {
+        built,
+        siblings["young"],
+        siblings["other_artifact"],
+        siblings["other_fixture"],
+    }
+
+
 # --- one landing, one identity ------------------------------------------------
 
 

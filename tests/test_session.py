@@ -1,6 +1,7 @@
 """session.scoped_conf: the one helper that changes session config around
 a body (streaming drains, q198's collect, tests); the local-master
-Python-worker entry (session.python_worker_conf, pydaemon); and
+config (session.local_master_conf: the pydaemon Python-worker entry and
+the in-process local file system); and
 session.local_frame, the one way the package builds a frame from
 driver-side rows."""
 
@@ -22,7 +23,12 @@ from pathlib import Path
 import pytest
 
 from discogs_load_spark import pydaemon
-from discogs_load_spark.session import local_frame, python_worker_conf, scoped_conf
+from discogs_load_spark.session import (
+    LOCAL_FS_JAR,
+    local_frame,
+    local_master_conf,
+    scoped_conf,
+)
 
 SET_KEY = "spark.sql.shuffle.partitions"  # set explicitly by get_spark
 UNSET_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -391,20 +397,21 @@ def test_pyfile_added_after_workers_are_warm_is_importable(spark, tmp_path):
     assert [r.v for r in got] == [42] * (2 * n)
 
 
-def test_python_worker_conf_is_for_local_masters_only():
+def test_local_master_conf_is_for_local_masters_only():
     for master in ("local", "local[2]", "local[*]", "local[4,2]"):
-        conf = python_worker_conf(master)
+        conf = local_master_conf(master)
         assert conf[DAEMON_KEY] == "discogs_load_spark.pydaemon"
         package_dir = Path(conf[PYTHONPATH_KEY]) / "discogs_load_spark"
         assert (package_dir / "pydaemon.py").is_file()
+        assert conf["spark.driver.extraClassPath"] == str(LOCAL_FS_JAR)
+        assert LOCAL_FS_JAR.is_file()
     for master in (
         "spark://host:7077",
         "yarn",
         "k8s://https://host:443",
         "local-cluster[2,1,1024]",
     ):
-        conf = python_worker_conf(master)
-        assert DAEMON_KEY not in conf and PYTHONPATH_KEY not in conf
+        assert local_master_conf(master) == {}
 
 
 # -- driver-side rows as an Arrow frame --------------------------------------

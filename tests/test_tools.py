@@ -12,7 +12,8 @@ from .conftest import REPO
 def test_tools_import_without_starting_spark():
     code = (
         "import sys; sys.path[:0] = [sys.argv[1]]\n"
-        "import drive_contract, profile_query, scale_probe, sig_index_bytes\n"
+        "import build_local_fs_jar, drive_contract, profile_query, scale_probe\n"
+        "import sig_index_bytes\n"
         "from pyspark import SparkContext\n"
         "assert SparkContext._active_spark_context is None\n"
         "assert SparkContext._gateway is None\n"

@@ -107,7 +107,10 @@ def start(
     production stream or ingest would find in place), and every ingest
     artifact (``artifacts.prebuild``, timed; forced with ``rebuild``).
     ``jit_queries`` run once at sf0.001 so a fresh JVM's first readings
-    do not absorb the code generation of their plan shapes."""
+    do not absorb the code generation of their plan shapes. The driver
+    JVM keeps every JIT compiler thread it starts, as perfbench's does, so
+    a reading that subtracts the JIT threads' CPU loses none to an exited
+    thread (the flag joins any ``extraJavaOptions`` in ``extra_conf``)."""
     from discogs_load_spark.operators.multimodal import (
         image_ahash,
         render_procedural_bmp,
@@ -118,7 +121,12 @@ def start(
     from discogs_load_spark.queries.streaming import prewarm_stream_sources
     from discogs_load_spark.session import get_spark, load_tables
 
-    spark = get_spark(app_name=app_name, extra_conf=extra_conf)
+    conf = dict(extra_conf or {})
+    opts = conf.get("spark.driver.extraJavaOptions", "")
+    conf["spark.driver.extraJavaOptions"] = (
+        f"{opts} -XX:-UseDynamicNumberOfCompilerThreads".strip()
+    )
+    spark = get_spark(app_name=app_name, extra_conf=conf)
     _materialize(spark.range(1000).selectExpr("sum(id) AS s"))
     warm = spark.range(256).repartition(cpus())
     _materialize(warm.mapInPandas(lambda it: it, "id long"))

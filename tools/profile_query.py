@@ -18,10 +18,11 @@ read/write, spill, input and the bytes crossing the Python seam. A CPU
 line per query splits the profiled run's process-tree CPU seconds
 (perfbench's /proc readers) into the driver JVM less its JIT threads, the
 Python workers (daemon and workers, exited ones included), and the
-children the JVM forked and reaped (e.g. ``chmod`` when libhadoop is
-missing), and counts the Python daemons and workers alive after the run
-(one daemon per worker pool), so a fixed cost at a process seam, or a
-second pool, shows up without a profiler.
+children the JVM forked and reaped (e.g. ``chmod`` and ``readlink``
+from Hadoop's own local file system when libhadoop is missing; the
+``get_spark`` session's forks neither), and counts the Python daemons
+and workers alive after the run (one daemon per worker pool), so a fixed
+cost at a process seam, or a second pool, shows up without a profiler.
 """
 
 from __future__ import annotations
