@@ -55,6 +55,10 @@ MEMBER_CAP = 32
 # pair lists close distributed with connected_components_star.
 CC_DRIVER_EDGE_CAP = 2_000_000
 
+# connected_components_star's round limit: rounds grow with the log of the
+# component size, so this covers any graph below 2^40 nodes
+STAR_MAX_ROUNDS = 40
+
 
 def capped_member_rollup(
     df: DataFrame, group_col: str, member_col: str, cap: int = MEMBER_CAP
@@ -821,10 +825,7 @@ def connected_components(
 
 
 def connected_components_star(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iters: int = 40,
+    pairs: DataFrame, src: str = "id_a", dst: str = "id_b"
 ) -> DataFrame:
     """(node, component) — identical contract to :func:`connected_components`
     (component = min reachable id) for pair lists above its driver cap,
@@ -905,7 +906,7 @@ def connected_components_star(
         )
         return rewired
 
-    for _ in range(max_iters):
+    for _ in range(STAR_MAX_ROUNDS):
         prev_e = e
         # lazy checkpoint: the fixpoint check's count materializes it in
         # the same job (the eager form paid a separate job per round — r14)
@@ -914,8 +915,8 @@ def connected_components_star(
             break
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iters} "
-            f"rounds — not expected for any graph below 2^{max_iters} nodes"
+            f"connected_components_star did not converge in {STAR_MAX_ROUNDS} "
+            f"rounds — not expected for any graph below 2^{STAR_MAX_ROUNDS} nodes"
         )
     # converged edge set is the star forest (child u -> root v); roots and
     # isolated-in-the-star nodes label themselves

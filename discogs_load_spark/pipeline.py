@@ -13,16 +13,14 @@ by design:
 from __future__ import annotations
 
 import argparse
-import atexit
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from .operators.shred import first_wins_records, shred
 from .session import get_spark
-from .sinks.files import write_parquet
+from .sinks.files import scratch_dir, write_parquet
 from .sinks.postgres import write_jdbc
 from .sources.gzip_shard import preshard_gzip_dump
 from .sources.xml_source import read_dump, sniff_root_tag
@@ -53,9 +51,9 @@ def load_dumps(
     ``shard_min_bytes`` (compressed) is pre-split into record-aligned gzip
     shards first (sources/gzip_shard.py), so a 10 GB single-file dump
     parses with N tasks instead of one; a ``shard_min_bytes`` above the
-    file's size reads it whole. The shard scratch dir is removed at
-    interpreter exit, so frames returned over shards live only as long as
-    the process.
+    file's size reads it whole. The shards are ``sinks.files.scratch_dir``
+    scratch, removed when the process that made them exits, so frames
+    returned over shards live only as long as the process.
 
     While a kind that fans out into several tables (releases, masters) is
     written, its first-wins record frame is persisted, so the XML is parsed
@@ -64,8 +62,6 @@ def load_dumps(
     afterwards, and a dump rewritten in place is read afresh by the next
     call. With no sink nothing is persisted, so a caller consuming one
     table keeps the XML scan's column pruning."""
-    import tempfile
-
     by_kind: dict[str, list[str]] = {}
     for path in files:
         by_kind.setdefault(sniff_root_tag(path), []).append(path)
@@ -81,13 +77,11 @@ def load_dumps(
             and os.path.isfile(paths[0])
             and os.path.getsize(paths[0]) >= shard_min_bytes
         ):
-            shard_dir = tempfile.mkdtemp(prefix=f"preshard_{kind}_")
             # shards are scratch (~dump-sized): without cleanup every
             # load_dumps call would leak a re-compressed copy of the
             # dump in TMPDIR for the life of the machine
-            atexit.register(shutil.rmtree, shard_dir, True)
             by_kind[kind] = LAST_PRESHARD[kind] = preshard_gzip_dump(
-                paths[0], shard_dir, shard_target_bytes, kind
+                paths[0], scratch_dir(f"preshard_{kind}_"), shard_target_bytes, kind
             )
 
     tables: dict[str, DataFrame] = {}

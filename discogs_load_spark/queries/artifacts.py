@@ -20,8 +20,8 @@ accessors used to hand-copy lives here once:
   (tests/test_sig_index.py pins the two paths equal for every family).
 - :func:`load` — the accessor body: land if missing (or ``rebuild``)
   through ``sinks.files.land`` as ``<root>/<name>_<fixture dir
-  name>_<key>``, sweep that name's superseded builds, read, apply the
-  declared read-side transform.
+  name>_<key>`` (which retires that name's superseded builds), read,
+  apply the declared read-side transform.
 - :func:`prebuild` — build every artifact in declaration order and time
   each build, for bench.py and the tools.
 
@@ -42,8 +42,6 @@ from __future__ import annotations
 import hashlib
 import importlib
 import os
-import re
-import shutil
 import tempfile
 import time
 from dataclasses import dataclass
@@ -204,42 +202,6 @@ def path(name: str, sf_dir: str) -> str:
     return os.path.join(_ref(art, art.root), _prefix(name, sf_dir) + key(name, sf_dir))
 
 
-# a superseded copy or artifact is removed once it is this old, so a
-# process still reading it (it resolved its path before the fixture
-# changed) is not cut off, and each fixture regeneration leaks at most one
-# copy per name
-STALE_COPY_S = 3600
-
-
-def _land(
-    dest: str, prefix: str, write: Callable[[str], None], rebuild: bool = False
-) -> str:
-    """``sinks.files.land`` ``dest``, and when that builds it, remove
-    ``dest``'s siblings named ``<prefix><key>`` (superseded copies, and
-    crashed builds' ``<prefix><key>.tmp.<pid>`` dirs) older than
-    ``STALE_COPY_S``. The rest of the name must be a key, so a fixture dir
-    whose name extends this one ('sf0.1_x' beside 'sf0.1') keeps its
-    copies."""
-    if os.path.isdir(dest) and not rebuild:
-        return dest
-    land(dest, write, rebuild)
-    root, name = os.path.split(dest)
-    now = time.time_ns()
-    for entry in os.listdir(root):
-        stale = os.path.join(root, entry)
-        try:
-            if (
-                entry != name
-                and entry.startswith(prefix)
-                and re.fullmatch(r"[0-9a-f]{16}(\.tmp\.\d+)?", entry[len(prefix):])
-                and now - file_identity(stale).mtime_ns > STALE_COPY_S * 10**9
-            ):
-                shutil.rmtree(stale)
-        except OSError:
-            pass  # removed by a concurrent build
-    return dest
-
-
 def load(
     name: str, spark: SparkSession, sf_dir: str, rebuild: bool = False
 ) -> DataFrame:
@@ -262,7 +224,7 @@ def load(
                 frame = frame.repartition(part)
             write_parquet(frame, tmp, partition_by=part and [part])
 
-        _land(dest, _prefix(name, sf_dir), write, rebuild)
+        land(dest, write, rebuild)
         df = spark.read.parquet(dest)
     else:
         df = build()
@@ -305,9 +267,7 @@ def fixture_copy(
     ``TMPDIR/<tag>_<fixture dir name>_<copy_key>``, and return its path.
     ``inputs`` are the writer's own settings (a file count, a row-group
     size, an upstream artifact's key): a change in any of them or in a
-    table's file identity lands a new copy. A build also removes
-    same-prefix siblings (superseded copies, crashed builds' ``.tmp``
-    dirs) older than ``STALE_COPY_S``."""
-    prefix = _prefix(tag, sf_dir)
-    dest = os.path.join(tempfile.gettempdir(), prefix + copy_key(sf_dir, tables, inputs))
-    return _land(dest, prefix, write)
+    table's file identity lands a new copy, and ``land`` retires the
+    superseded one."""
+    key = copy_key(sf_dir, tables, inputs)
+    return land(os.path.join(tempfile.gettempdir(), _prefix(tag, sf_dir) + key), write)

@@ -31,7 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.clustering import assign_clusters, recompute_centroids
 from ..session import load_tables
-from ..sinks.files import land, write_parquet
+from ..sinks.files import land, read_pointer, swap_pointer
+from ..sinks.files import sweep_generations, write_parquet
 from . import artifacts
 
 EMB_INDEX_DIR = os.environ.get(
@@ -133,14 +134,14 @@ def frozen_centroids(
 # retrains on the FULL corpus (base + accumulated delta) with the same
 # Lloyd stack, lands the new centroid table as a NEW GENERATION of a
 # pointer-swapped artifact, and q228 emits the reassignment delta
-# (vectors whose nearest centroid changed, old -> new). Generation
-# discipline: each generation directory is named by the md5 of its
-# TRAINING-INPUT fingerprint (the frozen_centroids or refresh_centroids
-# declaration's), the CURRENT pointer file is swapped with os.replace
-# (atomic on POSIX — a reader resolving the pointer sees exactly the old
-# or exactly the new name, never a partial write), and the superseded
-# generation is deleted only AFTER the swap (tests/test_index_refresh.py
-# pins the exactly-one-version invariant at every step boundary via the
+# (vectors whose nearest centroid changed, old -> new). Each generation
+# directory is named by the md5 of its TRAINING-INPUT fingerprint (the
+# frozen_centroids or refresh_centroids declaration's) and lives in a
+# per-corpus store with the sinks.files generation lifecycle: land the
+# generation, swap the CURRENT pointer (atomic os.replace — a reader
+# resolving it sees exactly the old or exactly the new name), and only
+# then sweep every other generation (tests/test_index_refresh.py pins
+# the exactly-one-version invariant at every step boundary via the
 # _probe hook).
 
 
@@ -165,28 +166,6 @@ def _centgen_root(sf_dir: str) -> str:
 
 def _generation(name: str, sf_dir: str) -> str:
     return "g_" + artifacts.key(name, sf_dir)[:12]
-
-
-def current_centroid_generation(sf_dir: str) -> str | None:
-    """The generation dir name the CURRENT pointer resolves to, or None
-    when the store has never been seeded. Readers resolve ONCE and read
-    that directory — the swap never mutates a generation in place."""
-    ptr = os.path.join(_centgen_root(sf_dir), "CURRENT")
-    try:
-        with open(ptr, encoding="utf-8") as f:
-            return f.read().strip()
-    except OSError:
-        return None
-
-
-def _swap_pointer(root: str, gen_name: str) -> None:
-    """Atomic pointer swap: write-aside + os.replace, so a concurrent
-    reader of CURRENT sees exactly one complete generation name."""
-    ptr = os.path.join(root, "CURRENT")
-    tmp = f"{ptr}.tmp.{os.getpid()}"
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(gen_name)
-    os.replace(tmp, ptr)
 
 
 def refresh_centroids(
@@ -215,7 +194,7 @@ def refresh_centroids(
     os.makedirs(root, exist_ok=True)
     base_gen = _generation("frozen_centroids", sf_dir)
     full_gen = _generation("refresh_centroids", sf_dir)
-    cur = current_centroid_generation(sf_dir)
+    cur = read_pointer(root)
     if cur is None:
         # seed generation 0 = the frozen base-snapshot centroids — read
         # from the frozen_centroids artifact (identical frame, same
@@ -225,7 +204,7 @@ def refresh_centroids(
             os.path.join(root, base_gen),
             lambda tmp: write_parquet(frozen_centroids(spark, sf_dir), tmp),
         )
-        _swap_pointer(root, base_gen)
+        swap_pointer(root, base_gen)
         cur = base_gen
         if _probe is not None:
             _probe("seeded")
@@ -236,20 +215,15 @@ def refresh_centroids(
         )
         if _probe is not None:
             _probe("landed")  # new gen complete on disk; pointer still old
-        _swap_pointer(root, full_gen)
+        swap_pointer(root, full_gen)
         if _probe is not None:
             _probe("swapped")  # pointer new; old gen still readable
-        shutil.rmtree(os.path.join(root, cur), ignore_errors=True)
-        if _probe is not None:
-            _probe("cleaned")
-    # straggler sweep (r14 review finding): a crash between the pointer
-    # swap and the delete would otherwise leak the superseded generation
-    # forever — the idempotent path never revisited it. CURRENT points
-    # at full_gen here, so anything else g_* (including orphaned
-    # .tmp.<pid> dirs from crashed landings) is garbage by contract.
-    for entry in os.listdir(root):
-        if entry.startswith("g_") and entry != full_gen:
-            shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
+    # the superseded generation goes only after the swap; on the
+    # idempotent path this removes a straggler that a crash between the
+    # swap and the sweep left behind
+    sweep_generations(root)
+    if _probe is not None and cur != full_gen:
+        _probe("cleaned")
     return spark.read.parquet(os.path.join(root, full_gen))
 
 

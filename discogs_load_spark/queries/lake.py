@@ -24,6 +24,8 @@ Schema notes (the production-relevant part):
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -158,24 +160,30 @@ def q132_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exchange-free fact-fact join off BUCKETED lake tables — the lake
     analogue of the reference's b-tree join indexes (sql/indexes.sql:7-16)
     promoted from a test into the declared surface: both sides are
-    written bucketed+sorted by the join key once (named by the two
-    tables' ``artifacts.copy_key``, so a regenerated fixture gets new
-    tables), and the merge-hinted join then runs with NO shuffle on
-    either side — the plan shows no hashpartitioning exchange on the
-    join keys (asserted in test_plans). At 100 TB this is the difference
+    written bucketed+sorted by the join key once (named
+    ``<table>_b_<fixture dir name>_<key>`` by the two tables'
+    ``artifacts.copy_key``, so a regenerated fixture gets new tables and
+    the build retires the superseded ones), and the merge-hinted join
+    then runs with NO shuffle on either side — the plan shows no
+    hashpartitioning exchange on the join keys (asserted in test_plans). At 100 TB this is the difference
     between re-shuffling two fact tables per query and reading
     pre-colocated buckets.
 
     The oracle joins the raw tables — bucketing must not change a single
     row, only the plan.
     """
-    from ..sinks.files import write_bucketed_table
+    from ..sinks.files import sweep_superseded, write_bucketed_table
 
     key = artifacts.copy_key(sf_dir, ("orders", "lineitem"))
+    # a table name holds only letters, digits and _ ('sf0.01' -> 'sf0_01')
+    fixture = os.path.basename(os.path.abspath(sf_dir)).lower()
+    fixture = re.sub(r"[^0-9a-z_]", "_", fixture)
     db = "q132_bucketed"
     loc = os.path.join(tempfile.gettempdir(), db)
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
-    ot, lt = f"{db}.orders_b_{key}", f"{db}.lineitem_b_{key}"
+    # the session's catalog keeps the location of its first call's TMPDIR
+    loc = spark.catalog.getDatabase(db).locationUri.removeprefix("file:")
+    ot, lt = (f"{db}.{t}_b_{fixture}_{key}" for t in ("orders", "lineitem"))
     tables = load_tables(spark, sf_dir, ["orders", "lineitem"])
 
     def ensure(name: str, df, col: str) -> None:
@@ -185,12 +193,10 @@ def q132_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # process wrote; the managed location on disk then blocks
         # saveAsTable — clear it and rewrite (bucket metadata lives in the
         # catalog, so adopting the bare files would lose the bucketing)
-        leftover = os.path.join(loc, name.split(".", 1)[1])
-        if os.path.exists(leftover):
-            import shutil
-
-            shutil.rmtree(leftover, ignore_errors=True)
+        table_dir = os.path.join(loc, name.split(".", 1)[1])
+        shutil.rmtree(table_dir, ignore_errors=True)
         write_bucketed_table(df, name, col, n_buckets=8)
+        sweep_superseded(table_dir)
 
     ensure(ot, tables["orders"].select("o_orderkey", "o_orderpriority"), "o_orderkey")
     ensure(lt, tables["lineitem"].select("l_orderkey", "l_quantity"), "l_orderkey")

@@ -24,7 +24,6 @@ transformation.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 from dataclasses import dataclass
 from typing import Callable
@@ -35,6 +34,8 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from ..functions.numeric import dec_sum, dec_sum_sql
 from ..session import load_tables, local_frame, scoped_conf
+from ..sinks.files import land, read_pointer, scratch_dir, swap_pointer
+from ..sinks.files import sweep_generations
 from .artifacts import fixture_copy
 from .registry import register
 
@@ -297,17 +298,22 @@ LAST_LANDING: dict[str, dict] = {}
 class _GenerationLanding:
     """The shared generation-swap landing behind the three streamed
     index maintainers (q218 signature / q224 CDC chunk / q226
-    embedding): micro-batches APPEND partitioned writes into the
-    current generation directory; every COMPACT_EVERY appends (and once
-    more at drain end, the caller's final ``compact()``) the landing is
-    rewritten one-file-per-bucket into generation N+1, the read pointer
-    swaps, and generation N is deleted to bound disk. foreachBatch runs
-    batches sequentially on the driver, so the swap is race-free; the
-    rewrite reads generation N while writing N+1 — never its own write
-    target (the q219 read-your-own-writes discipline applied to the
-    rewrite). ``read_schema`` (q224) makes ``read()`` safe on a
-    generation with no partition dirs yet — the anti-join consumer's
-    empty-index case; the append-only maintainers infer from parquet."""
+    embedding), a ``sinks.files`` generation store: micro-batches APPEND
+    partitioned writes into the generation ``CURRENT`` names; every
+    COMPACT_EVERY appends (and once more at drain end, the caller's
+    final ``compact()``) the landing is rewritten one-file-per-bucket
+    and landed as generation N+1, the pointer swaps, and the other
+    generations are swept to bound disk. foreachBatch runs batches
+    sequentially on the driver, so the swap is race-free; the rewrite
+    reads generation N while writing N+1 — never its own write target
+    (the q219 read-your-own-writes discipline applied to the rewrite).
+    ``read_schema`` (q224) makes ``read()`` safe on a generation with no
+    partition dirs yet — the anti-join consumer's empty-index case; the
+    append-only maintainers infer from parquet.
+
+    The pointer is on disk, not in driver memory, but the root is still
+    one scratch dir per call (removed at process exit), so a restarted
+    drain cannot find it: this is not yet a restartable drain."""
 
     def __init__(
         self,
@@ -326,13 +332,16 @@ class _GenerationLanding:
         # parse as an integer and re-land as pb=10 instead of pb=0010,
         # silently changing the bucket naming across a generation swap
         self._schema = None
-        self.root = tempfile.mkdtemp(prefix=f"{query}_gen_")
-        self.gen = 0
+        self.root = scratch_dir(f"{query}_gen_")
         self.since = 0
-        os.makedirs(os.path.join(self.root, "g0"))
+        land(os.path.join(self.root, "g0"), os.makedirs)
+        swap_pointer(self.root, "g0")
+
+    def generation(self) -> int:
+        return int(read_pointer(self.root)[1:])
 
     def cur_dir(self) -> str:
-        return os.path.join(self.root, f"g{self.gen}")
+        return os.path.join(self.root, read_pointer(self.root))
 
     def checkpoint_dir(self) -> str:
         return os.path.join(self.root, "_chk")
@@ -346,6 +355,7 @@ class _GenerationLanding:
             # written type) — partition values parse as declared
             return self.spark.read.schema(self._schema).parquet(d)
         return self.spark.read.parquet(d)
+
     def append(self, df: DataFrame) -> None:
         """Land one micro-batch (repartition on the directory column so
         partitionBy writes one file per touched bucket, not
@@ -370,31 +380,24 @@ class _GenerationLanding:
         every drain whose batch count is a multiple of COMPACT_EVERY —
         which the fixed 12-file sources make ALL of them — one wasted
         full read+shuffle+write of the landing (r13 review finding).
-        A drain that never appended anything (gen == 0, since == 0, no
-        schema captured) is a no-op: compact() would otherwise hit
+        A drain that never appended anything (generation 0, since == 0,
+        no schema captured) is a no-op: compact() would otherwise hit
         spark.read.parquet on an empty g0 dir and raise on schema
         inference (ADVICE r13 — unreachable with the 12-file fixture
         sources, but the helper is shared infrastructure). Records the
         final generation in LAST_LANDING."""
-        if self._schema is not None and (self.since or self.gen == 0):
+        if self._schema is not None and (self.since or self.generation() == 0):
             self.compact()
-        LAST_LANDING[self.query] = {"dir": self.cur_dir(), "generations": self.gen}
+        d = self.cur_dir()
+        LAST_LANDING[self.query] = {"dir": d, "generations": self.generation()}
 
     def compact(self) -> None:
-        import shutil
-
-        nxt = os.path.join(self.root, f"g{self.gen + 1}")
-        (
-            self.read()
-            .repartition(self.part_col)
-            .write.mode("overwrite")
-            .partitionBy(self.part_col)
-            .parquet(nxt)
-        )
-        old = self.cur_dir()
-        self.gen += 1
+        nxt = f"g{self.generation() + 1}"
+        rewrite = self.read().repartition(self.part_col).write.mode("overwrite")
+        land(os.path.join(self.root, nxt), rewrite.partitionBy(self.part_col).parquet)
+        swap_pointer(self.root, nxt)
+        sweep_generations(self.root)  # bound disk to ~1 gen
         self.since = 0
-        shutil.rmtree(old, ignore_errors=True)  # bound disk to ~1 gen
 
 
 @register(
@@ -454,7 +457,7 @@ def q92_streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFra
     read-back aggregation proves no rows were lost or duplicated in
     transit (count + id range per event type, all integers — exact).
     """
-    out = tempfile.mkdtemp(prefix="q92_lake_")
+    out = scratch_dir("q92_lake_")
     _drain(
         spark,
         stream_source(spark, sf_dir, "events")
@@ -759,7 +762,7 @@ def q161_streaming_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB/day: per batch the ledger gains |event_type| rows; the
     view query reads partials only — never the event history."""
-    ledger = tempfile.mkdtemp(prefix="q161_ledger_")
+    ledger = scratch_dir("q161_ledger_")
 
     def land_partial(batch_df: DataFrame, batch_id: int) -> None:
         partial = batch_df.groupBy("event_type").agg(
@@ -867,7 +870,7 @@ def q190_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketch import cms_fanout, cms_point_query
 
     events = load_tables(spark, sf_dir, ["events"])["events"]
-    ledger = tempfile.mkdtemp(prefix="q190_cms_ledger_")
+    ledger = scratch_dir("q190_cms_ledger_")
 
     def land_partial(batch_df: DataFrame, batch_id: int) -> None:
         counts = batch_df.groupBy("user_id").agg(
@@ -969,7 +972,7 @@ def q218_streaming_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         else F.substring("content_hash", 1, 1)
     )
 
-    def land(batch_df: DataFrame, _batch_id: int) -> None:
+    def land_batch(batch_df: DataFrame, _batch_id: int) -> None:
         landing.append(
             sig_frame(batch_df).withColumn(CDC_LANDED_PART_COL, pb_col)
         )
@@ -977,7 +980,7 @@ def q218_streaming_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     _drain(
         spark,
         stream_source(spark, sf_dir, "docs")
-        .writeStream.foreachBatch(land)
+        .writeStream.foreachBatch(land_batch)
         .option("checkpointLocation", landing.checkpoint_dir()),
     )
     landing.finalize()  # drain-end rewrite, elided if already compact
@@ -1114,7 +1117,7 @@ def q219_streaming_cdc_index_maintenance(
     bucketed lake-table layout q212's docstring names, applied to the
     maintenance path; tests/test_streaming.py asserts the pruned read
     selects a strict file subset on the landed artifact)."""
-    out = tempfile.mkdtemp(prefix="q219_cdc_idx_")
+    out = scratch_dir("q219_cdc_idx_")
     LAST_LANDING["q219_streaming_cdc_index_maintenance"] = {"dir": out}
 
     def append(novel: DataFrame) -> None:
@@ -1262,7 +1265,7 @@ def q220_streaming_emb_index_maintenance(
     cent = frozen_centroids(spark, sf_dir).persist()
     cent.count()  # materialize the broadcast side once, outside batches
 
-    out = tempfile.mkdtemp(prefix="q220_emb_idx_")
+    out = scratch_dir("q220_emb_idx_")
     from ..functions.vectors import cosine_sql
 
     # parsed ONCE, outside the batch loop (r15): the sign-bit expression

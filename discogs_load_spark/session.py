@@ -300,9 +300,11 @@ def _maybe_reshard(spark: SparkSession, path: str) -> str:
     At production scale inputs arrive as many files/row-groups and this
     path never triggers (files below 256 KB or already multi-group are
     returned unchanged). Row order is preserved (part k = rows [k*step,
-    (k+1)*step)); the copy is keyed by the file's ``file_identity`` and
-    the part count, and landed by ``sinks.files.land`` (write aside, then
-    rename), so concurrent sessions share one complete cache.
+    (k+1)*step)); the copy is named ``<table>_<fixture dir
+    name>_p<nparts>_<key>``, its key built from the file's
+    ``file_identity``, and landed by ``sinks.files.land`` (write aside,
+    then rename, retiring superseded copies), so concurrent sessions
+    share one complete cache.
     """
     import pyarrow.parquet as pq
 
@@ -313,9 +315,7 @@ def _maybe_reshard(spark: SparkSession, path: str) -> str:
     if meta.num_row_groups >= min(cores, 4):
         return path
     nparts = min(cores, max(2, meta.num_rows // _RESHARD_MIN_ROWS_PER_PART))
-    key = hashlib.md5(
-        f"{file_identity(path)}|{nparts}".encode()
-    ).hexdigest()[:16]
+    key = hashlib.md5(str(file_identity(path)).encode()).hexdigest()[:16]
 
     def write(tmp: str) -> None:
         table = pq.read_table(path)
@@ -326,8 +326,11 @@ def _maybe_reshard(spark: SparkSession, path: str) -> str:
             if chunk.num_rows:
                 pq.write_table(chunk, os.path.join(tmp, f"part-{i:05d}.parquet"))
 
-    dest = os.path.join(tempfile.gettempdir(), "discogs_load_shards", key)
-    return land(dest, write)
+    # the part count sits before the key, so sessions with different core
+    # counts never retire each other's copies
+    src = Path(os.path.abspath(path))
+    name = f"{src.stem}_{src.parent.name}_p{nparts}_{key}"
+    return land(os.path.join(tempfile.gettempdir(), "discogs_load_shards", name), write)
 
 
 def _read_parquet_normalized(spark: SparkSession, path: str):

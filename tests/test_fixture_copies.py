@@ -1,13 +1,17 @@
-"""Fixture copies: every on-disk copy derived from a fixture table is keyed
-by ``sinks.files.file_identity`` and written by ``sinks.files.land``, so a
-copy is never stale (a same-second rewrite of its table lands a new one)
-and never partial (a failed write leaves nothing to serve)."""
+"""Fixture copies and the on-disk lifecycle: every on-disk copy derived
+from a fixture table is keyed by ``sinks.files.file_identity`` and written
+by ``sinks.files.land``, so a copy is never stale (a same-second rewrite
+of its table lands a new one) and never partial (a failed write leaves
+nothing to serve); ``land`` retires superseded copies, and scratch dirs
+are removed when the process that made them exits."""
 
 from __future__ import annotations
 
 import ast
 import os
 import shutil
+import subprocess
+import sys
 import tempfile
 import uuid
 from collections import Counter
@@ -149,23 +153,42 @@ def test_land_writes_once_and_leaves_nothing_on_failure(tmp_path):
     assert os.listdir(tmp_path) == ["copy"]
 
 
+def _make_siblings(root: Path, names: dict[str, str]) -> None:
+    """Make each named dir under ``root``, all but ``young`` two hours old."""
+    for name in names.values():
+        d = root / name
+        d.mkdir()
+        if name != names.get("young"):
+            t = os.stat(d).st_mtime_ns - 10**9 * 7200
+            os.utime(d, ns=(t, t))
+
+
+def _reshard_copy_retires_only_its_own_part_count(root: Path) -> None:
+    """A re-shard copy (``<table>_<fixture>_p<nparts>_<key>``) landed in
+    ``root`` retires an aged copy with its part count; another part
+    count's copy stays."""
+    siblings = {
+        "old": "documents_fx_p4_0123456789abcdef",
+        "other_parts": "documents_fx_p2_0123456789abcdef",
+    }
+    _make_siblings(root, siblings)
+    before = set(os.listdir(root))
+    dest = root / "documents_fx_p4_fedcba9876543210"
+    land(str(dest), os.makedirs)
+    assert set(os.listdir(root)) == before - {siblings["old"]} | {dest.name}
+
+
 def test_fixture_copy_removes_only_its_own_old_siblings(
     tmp_path, private_tmp
 ):
     sf = _copy_fixture(tmp_path / "fx", "documents")
-    old = 10**9 * 7200  # two hours back
     siblings = {
         "old": "lake_t_fx_0123456789abcdef",
         "old_tmp": "lake_t_fx_0123456789abcdef.tmp.42",
         "young": "lake_t_fx_fedcba9876543210",
         "other_fixture": "lake_t_fx_2_0123456789abcdef",
     }
-    for name in siblings.values():
-        d = private_tmp / name
-        d.mkdir()
-        if name != siblings["young"]:
-            t = os.stat(d).st_mtime_ns - old
-            os.utime(d, ns=(t, t))
+    _make_siblings(private_tmp, siblings)
 
     def write(tmp: str) -> None:
         os.makedirs(tmp)
@@ -177,6 +200,7 @@ def test_fixture_copy_removes_only_its_own_old_siblings(
         siblings["young"],
         siblings["other_fixture"],
     }
+    _reshard_copy_retires_only_its_own_part_count(private_tmp)
 
 
 def test_artifact_build_removes_only_its_own_old_siblings(
@@ -193,7 +217,6 @@ def test_artifact_build_removes_only_its_own_old_siblings(
     root.mkdir()
     monkeypatch.setattr(dedup, "CDC_INDEX_DIR", str(root))
     monkeypatch.setattr(dedup, "_cdc_index_frame", lambda spark, sf_dir: spark.range(3))
-    old = 10**9 * 7200  # two hours back
     siblings = {
         "old": "cdc_chunk_index_fx_0123456789abcdef",
         "old_tmp": "cdc_chunk_index_fx_0123456789abcdef.tmp.42",
@@ -201,12 +224,7 @@ def test_artifact_build_removes_only_its_own_old_siblings(
         "other_artifact": "cdc_delta_landing_fx_0123456789abcdef",
         "other_fixture": "cdc_chunk_index_fx_2_0123456789abcdef",
     }
-    for name in siblings.values():
-        d = root / name
-        d.mkdir()
-        if name != siblings["young"]:
-            t = os.stat(d).st_mtime_ns - old
-            os.utime(d, ns=(t, t))
+    _make_siblings(root, siblings)
 
     assert artifacts.load("cdc_chunk_index", spark, sf).count() == 3
     built = os.path.basename(artifacts.path("cdc_chunk_index", sf))
@@ -216,6 +234,64 @@ def test_artifact_build_removes_only_its_own_old_siblings(
         siblings["other_artifact"],
         siblings["other_fixture"],
     }
+    _reshard_copy_retires_only_its_own_part_count(root)
+
+
+def test_q132_build_retires_its_superseded_tables(spark, tmp_path, private_tmp):
+    """q132 names its bucketed tables ``<table>_b_<fixture>_<key>``; a
+    build retires an aged superseded pair of the same fixture, while the
+    current pair and another fixture's pair stay."""
+    sf = _copy_fixture(tmp_path / "fx", "orders", "lineitem")
+    db = private_tmp / "q132_bucketed"
+    db.mkdir()
+    siblings = {
+        "old_orders": "orders_b_fx_0123456789abcdef",
+        "old_lineitem": "lineitem_b_fx_0123456789abcdef",
+        "other_orders": "orders_b_fx_2_0123456789abcdef",
+        "other_lineitem": "lineitem_b_fx_2_0123456789abcdef",
+    }
+    _make_siblings(db, siblings)
+    # the database keeps the location of the session's first call
+    spark.sql("DROP DATABASE IF EXISTS q132_bucketed CASCADE")
+    try:
+        assert REGISTRY["q132_bucketed_join"].fn(spark, sf).count() > 0
+        key = artifacts.copy_key(sf, ("orders", "lineitem"))
+        assert set(os.listdir(db)) == {
+            f"orders_b_fx_{key}",
+            f"lineitem_b_fx_{key}",
+            siblings["other_orders"],
+            siblings["other_lineitem"],
+        }
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS q132_bucketed CASCADE")
+
+
+_SCRATCH_CHILD = """
+import os, sys
+from discogs_load_spark.sinks.files import scratch_dir
+dirs = [scratch_dir("a_"), scratch_dir("b_")]
+print(*dirs, flush=True)
+pid = os.fork()
+if pid == 0:
+    sys.exit(0)  # a normal exit: the child runs the inherited atexit hooks
+os.waitpid(pid, 0)
+print(all(map(os.path.isdir, dirs)))
+"""
+
+
+def test_scratch_dirs_outlive_a_forked_child_and_go_with_their_process(tmp_path):
+    out = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_CHILD],
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        cwd=PKG.parent,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split("\n")
+    dirs = out[0].split()
+    assert len(dirs) == 2 and all(d.startswith(str(tmp_path)) for d in dirs)
+    assert out[1] == "True"  # the child's exit removed neither
+    assert not any(map(os.path.exists, dirs))  # the parent's exit removed both
 
 
 # --- one landing, one identity ------------------------------------------------
@@ -247,6 +323,18 @@ def _is_rename(node: ast.AST) -> bool:
     return attr == "rename" or (is_os and attr == "replace")
 
 
+def _calls(module: str, attr: str):
+    def hit(node: ast.AST) -> bool:
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr == attr
+            and isinstance(node.value, ast.Name)
+            and node.value.id == module
+        )
+
+    return hit
+
+
 def _reads_mtime(node: ast.AST) -> bool:
     return (
         isinstance(node, ast.Attribute)
@@ -264,12 +352,20 @@ def _per_module(hit) -> dict[str, set[str]]:
 
 
 def test_one_landing_and_one_identity():
-    assert _per_module(_is_rename) == {
-        "discogs_load_spark/sinks/files.py": {"land"},
-        "discogs_load_spark/queries/emb_index.py": {"_swap_pointer"},
+    """Publishing (rename/replace), scratch (mkdtemp) and removal (rmtree)
+    each live in ``sinks/files.py``. Two removals stay outside: the
+    refresh cycle's ``rebuild`` wipe of its own store, and q132's clear
+    of a table directory the session's catalog does not know."""
+    files = "discogs_load_spark/sinks/files.py"
+    assert _per_module(_is_rename) == {files: {"land", "swap_pointer"}}
+    assert _per_module(_calls("tempfile", "mkdtemp")) == {files: {"scratch_dir"}}
+    assert _per_module(_calls("shutil", "rmtree")) == {
+        files: {"land", "sweep_superseded", "sweep_generations", "_remove_scratch"},
+        "discogs_load_spark/queries/emb_index.py": {"refresh_centroids"},
+        "discogs_load_spark/queries/lake.py": {"ensure"},
     }
     assert _per_module(_reads_mtime) == {
-        "discogs_load_spark/sinks/files.py": {"file_identity"},
+        files: {"file_identity"},
     }
     success = _per_module(
         lambda n: isinstance(n, ast.Constant)

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from discogs_load_spark.queries import emb_index as ei
 from discogs_load_spark.queries.registry import REGISTRY
 from discogs_load_spark.session import load_tables
+from discogs_load_spark.sinks.files import read_pointer
 
 from .conftest import SF_SMALL
 
@@ -45,7 +46,7 @@ def test_centroid_refresh_generation_swap_safety(spark, tmp_path, monkeypatch):
 
     def probe(step: str) -> None:
         root = ei._centgen_root(SF_SMALL)
-        cur = ei.current_centroid_generation(SF_SMALL)
+        cur = read_pointer(root)
         assert cur is not None and cur.startswith("g_"), (step, cur)
         cur_ok = _complete_dir(os.path.join(root, cur))
         n_gens = sum(

@@ -189,8 +189,9 @@ def test_q224_in_stream_compaction_swaps_generations(spark):
     """The composed maintainer must (a) actually swap generations during
     the drain (its 12-file source guarantees >= 3 micro-batches at any
     fixture scale, and COMPACT_EVERY = 3), (b) leave the FINAL artifact
-    one file per bucket (the consumer-facing compaction contract), and
-    (c) record one latency per micro-batch for the probe protocol."""
+    one file per bucket (the consumer-facing compaction contract),
+    (c) record one latency per micro-batch for the probe protocol, and
+    (d) keep its generation pointer on disk."""
     import glob
     import os
 
@@ -208,6 +209,16 @@ def test_q224_in_stream_compaction_swaps_generations(spark):
     # >= 1 in-stream swap (since >= COMPACT_EVERY batches); the drain-end
     # finalize() is elided when the landing is already compact
     assert info["generations"] >= 1
+    # the generation pointer is on disk: CURRENT names the final
+    # generation, and the sweep left only it and the checkpoint
+    root, gen = os.path.split(info["dir"])
+    assert gen == f"g{info['generations']}"
+    with open(os.path.join(root, "CURRENT")) as f:
+        assert f.read() == gen
+    assert {e for e in os.listdir(root) if os.path.isdir(os.path.join(root, e))} == {
+        gen,
+        "_chk",
+    }
 
     files_per_bucket = {
         b: len(glob.glob(os.path.join(info["dir"], b, "*.parquet")))
